@@ -1,27 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
-  * local[32] + matching shuffle partitions + AQE per the target env.
+  * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds,
+  * in a [[graft.core.GraftSession]] of `SPARK_GRAFT_CPUS` cores.
+  *
+  * Cache policy: release per query. Every query runs through
+  * [[SparkEntry.run]], which releases the frames the query cached
+  * before the next one starts, so a query's time does not depend on
+  * which queries ran before it in the pack. The only state shared
+  * across queries is the persisted ArtifactStore/IndexStore artifacts
+  * (trained codebooks, pair and label tables), which the first query
+  * that needs one builds.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.failOnCartesian", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench")
     // Warm the JVM (codegen compiler, parquet reader, shuffle machinery)
     // outside the timed region so the alphabetically-first query doesn't
     // absorb ~4s of one-time setup cost.
@@ -45,14 +41,15 @@ object Bench {
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
     def sweep(subset: Set[String] = Set.empty)
         : Seq[(String, Double, Option[String])] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.isEmpty || only(name) }
-        .filter { case (name, _) => subset.isEmpty || subset(name) }
-        .map { case (name, fn) =>
+      SparkEntry.queries.keys.toSeq.sorted
+        .filter(name => only.isEmpty || only(name))
+        .filter(name => subset.isEmpty || subset(name))
+        .map { name =>
         val t0 = System.nanoTime()
         val err =
           try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            SparkEntry.run(spark, name, sfDir)(
+              _.write.format("noop").mode("overwrite").save())
             None
           } catch {
             case e: Throwable =>
@@ -66,30 +63,24 @@ object Bench {
     // running and records a phantom 5x regression in the round artifact.
     // The per-query MINIMUM over N full sweeps is the standard
     // robust-timer answer — a query can't run faster than its true
-    // cost, so min converges on it. Caches are cleared BETWEEN sweeps
-    // so every sweep measures the same thing (within a sweep the
-    // session-style cross-query reuse below still applies): without
-    // the clear, sweep 2 runs against sweep 1's populated caches and
-    // min() systematically reports warm-cache numbers that conflate
-    // cache warmth with the contention robustness this exists for.
+    // cost, so min converges on it. No sweep sees another query's
+    // cached frames (release per query), so every sweep measures the
+    // same thing.
     // Errors are never masked: a query that fails in ANY sweep reports
     // as failed (these are deterministic pipelines; intermittent
     // failure is a real bug). A failed sweep's duration is excluded
     // from the min — a fast failure must not undercut a real timing.
     val repeats = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "2").toInt)
-    val sweeps = (1 to repeats).map { i =>
-      if (i > 1) spark.catalog.clearCache()
-      sweep()
-    }
+    val sweeps = (1 to repeats).map(_ => sweep())
     // Round 14 (r13 verdict item 8 — keep the noise protocol honest):
     // the committed r13 band showed a handful of keys with 9-24x rel
     // spread between two sweeps, which makes any per-query delta claim
     // on them unadjudicable. The 10 NOISIEST keys of this very run get
-    // ONE extra sweep (same clear-cache discipline) folded into the
-    // per-query min — min-of-3 where the measurement is shaky,
-    // min-of-2 everywhere else. Additions-only: no timing-loop change
-    // for the other ~244 queries, and the artifact records which keys
+    // ONE extra sweep folded into the per-query min — min-of-3 where
+    // the measurement is shaky, min-of-2 everywhere else.
+    // Additions-only: no timing-loop change for the other ~244
+    // queries, and the artifact records which keys
     // were re-swept (`resweep_keys`) so the provenance is explicit.
     val preSpreads = sweeps.transpose.flatMap { runs =>
       val ok = runs.collect { case (_, t, None) => t }
@@ -100,10 +91,7 @@ object Bench {
       .filter(_._2 > 0.5).map(_._1).toSet
     val extraSweep =
       if (repeats < 2 || resweepKeys.isEmpty) Seq.empty
-      else {
-        spark.catalog.clearCache()
-        sweep(resweepKeys)
-      }
+      else sweep(resweepKeys)
     val extraByName = extraSweep.map(r => r._1 -> r).toMap
     val results = sweeps.transpose.map { runs0 =>
       val runs = runs0 ++ extraByName.get(runs0.head._1)
@@ -138,12 +126,6 @@ object Bench {
         s"""{"n":${spreads.size},"median_rel_spread":${f"${pct(0.5)}%.3f"},""" +
           s""""p90_rel_spread":${f"${pct(0.9)}%.3f"},"worst":$worst}"""
       }
-    // NOTE: caches are deliberately NOT cleared between queries here
-    // (unlike Verify): plan-identical relations are legitimately shared
-    // across queries (q50/q55 embeddings, q53/q56 ratings) exactly as a
-    // production session would share them, and the baseline was
-    // measured with that reuse. Spark's LRU store evicts under
-    // pressure, so accumulation is bounded by executor storage memory.
     // A failed query must be visibly failed, never a suspiciously fast
     // timing: it benches as -1 and is listed in "errors".
     val qs = results.map { case (k, v, err) =>

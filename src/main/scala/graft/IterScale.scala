@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.{CacheScope, GraftSession}
 import graft.ops.{CurationOps, GraphOps, SubwordOps}
 
 /** Iterative-operator scaling evidence: the round counts of the
@@ -112,26 +113,15 @@ object IterScale {
     val outFile = args.headOption.getOrElse("ITERSCALE_r06.json")
     val scales = sys.env.getOrElse("SPARK_GRAFT_ITERSCALE_DOCS",
       "5000,50000").split(",").map(_.trim.toLong).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.failOnCartesian", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-iterscale")
     // JIT/codegen warmup so the smallest scale isn't billed for it
     spark.range(1000000L).selectExpr("sum(id)").write
       .format("noop").mode("overwrite").save()
 
     def f(d: Double) = f"$d%.3f"
     val rows = scales.map { n =>
-      CurationOps.release()
-      CurationOps.clearArtifacts()
+      CacheScope.release()
+      graft.ops.ArtifactStore.clear()
       spark.catalog.clearCache()
       val docs = synthDocs(spark, n).localCheckpoint()
 
@@ -191,13 +181,13 @@ object IterScale {
           .filter(pmod(col("d1"), lit(50)) === 0 &&
             pmod(col("d2"), lit(50)) === 0).count()
       }
-      CurationOps.release()
+      CacheScope.release()
       val (vCap, vCapSec) = time {
         CurationOps.lshCandidatePairsCapped(viral, bucketCap = 64)
           .filter(pmod(col("d1"), lit(50)) === 0 &&
             pmod(col("d2"), lit(50)) === 0).count()
       }
-      CurationOps.release()
+      CacheScope.release()
 
       System.err.println(s"[iterscale] n=$n pairs=${pairs._2} " +
         s"cc=$ccRounds rounds/${f(ccSec)}s kcore=$kcRounds " +

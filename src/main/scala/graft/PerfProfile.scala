@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
@@ -39,19 +39,7 @@ object PerfProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse(
       "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.failOnCartesian", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-perfprofile")
     spark.range(1000000L).selectExpr("sum(id)").write
       .format("noop").mode("overwrite").save()
 
@@ -72,10 +60,10 @@ object PerfProfile {
     if (sys.env.contains("SPARK_GRAFT_DUMP_METRICS")) {
       // calibration mode: print the distinct metric names one query
       // produces, to pin the needles below against this Spark version
-      val df = SparkEntry.queries(names.head)(spark, sfDir)
-      drain(df)
-      val plans = flatten(df.queryExecution.executedPlan)
-      plans.flatMap(_.metrics.values).flatMap(_.name).distinct.sorted
+      SparkEntry.run(spark, names.head, sfDir) { df =>
+        drain(df)
+        flatten(df.queryExecution.executedPlan)
+      }.flatMap(_.metrics.values).flatMap(_.name).distinct.sorted
         .foreach(n => System.err.println(s"[metric] $n"))
       spark.stop(); return
     }
@@ -113,8 +101,7 @@ object PerfProfile {
 
     val entries = names.map { name =>
       val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      try {
+      try SparkEntry.run(spark, name, sfDir) { df =>
         drain(df)
         val sec = (System.nanoTime() - t0) / 1e9
         val plans = flatten(df.queryExecution.executedPlan)
@@ -126,7 +113,7 @@ object PerfProfile {
         case e: Throwable =>
           System.err.println(s"[perf] $name failed: ${e.getMessage}")
           s""""$name":{"error":true}"""
-      } finally spark.catalog.clearCache()
+      }
     }
     val buildEntry = artifactSec
       .map(s => f""""artifact_build_sec":$s%.3f,""").getOrElse("")

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
+import graft.core.GraftSession
+
 /** Physical-plan transparency artifact: dumps `explain("formatted")`
   * for a representative query per plan family into PLANS.md, with a
   * marker audit table up front — each query lists the physical
@@ -17,6 +19,13 @@ import org.apache.spark.sql.execution.ExplainMode
   * human-readable evidence beside it.
   *
   * Run: `sbt "runMain graft.PlanDump [sfDir] [outFile]"`.
+  *
+  * Snapshot mode, for before/after plan evidence of an optimization:
+  * `sbt "runMain graft.PlanDump <tag> <suffix> <query> [query ...]"`
+  * writes each named query's unexecuted `explain("formatted")` to
+  * `plans/<tag>/<query>_<suffix>.txt`, over the tables in
+  * `SPARK_GRAFT_SF_DIR` (required) in a session of the default core
+  * count, as Bench runs it.
   */
 object PlanDump {
 
@@ -24,20 +33,31 @@ object PlanDump {
       frame: Option[(SparkSession, String) =>
         org.apache.spark.sql.DataFrame] = None)
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    if (args.length >= 3) snapshot(args(0), args(1), args.drop(2).toSeq)
+    else planDoc(args)
+
+  private def snapshot(tag: String, suffix: String,
+      queries: Seq[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      sys.error("snapshot mode reads the tables in SPARK_GRAFT_SF_DIR"))
+    val spark = GraftSession.local("graft-plandump")
+    val dir = Paths.get(s"plans/$tag")
+    Files.createDirectories(dir)
+    for (q <- queries) {
+      val p = SparkEntry.queries(q)(spark, sfDir).queryExecution
+        .explainString(ExplainMode.fromString("formatted"))
+      Files.writeString(dir.resolve(s"${q}_$suffix.txt"), p)
+      println(s"[plandump] $q -> plans/$tag/${q}_$suffix.txt " +
+        s"(${p.length} chars)")
+    }
+    spark.stop()
+  }
+
+  private def planDoc(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.failOnCartesian", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-plandump", cores = 4)
 
     val picks = Seq(
       Pick("q1_pricing_summary",

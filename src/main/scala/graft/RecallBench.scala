@@ -1,8 +1,8 @@
 package graft
 
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.ops.{IndexStore, VectorOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ANN recall-regression artifact: one row per (corpus arm, SF,
@@ -191,19 +191,7 @@ object RecallBench {
         "/root/repo/testdata-sf0.1-clustered," +
         "/root/repo/testdata-sf1-clustered")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.failOnCartesian", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-recallbench")
 
     def f(d: Double) = f"$d%.4f"
     val violations = scala.collection.mutable.ArrayBuffer[String]()
@@ -324,7 +312,7 @@ object RecallBench {
       // between-corpora hygiene (round 14): drop this corpus's pinned
       // ANN frames before the next dir's sweep — the 13-family × 8-dir
       // session otherwise accumulates every route/cells/adc pin
-      graft.queries.Similarity.release()
+      graft.core.CacheScope.release()
       System.err.println(s"[recall] $arm $dir done")
       s""""$dir":{$fams}"""
     }

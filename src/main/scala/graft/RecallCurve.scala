@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.GraftSession
 import graft.queries.Similarity
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
@@ -35,19 +36,7 @@ object RecallCurve {
     val nprobes = sys.env.getOrElse("SPARK_GRAFT_CURVE_NPROBES",
       "1,2,4,8,16,32")
       .split(",").map(_.trim.toInt).filter(_ > 0).toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.failOnCartesian", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-recallcurve")
 
     def f(d: Double) = f"$d%.4f"
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Scaling-curve benchmark: run every SparkEntry query at each scale
   * factor and emit per-query wall-time ratios, machine-flagging any
@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   *   {"sfs":[...], "queries": {"q1": {"sec": [a,b,c],
   *    "ratio_01_to_1": r}, ...}, "superlinear": [names]}
   * Same timing discipline as [[Bench]]: noop sink, min-of-N sweeps,
-  * caches cleared between sweeps and between scale factors.
+  * every query through [[SparkEntry.run]] (release per query).
   */
 object ScaleBench {
   val SUPERLINEAR_RATIO = 10.0
@@ -25,19 +25,7 @@ object ScaleBench {
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.failOnCartesian", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scalebench")
     spark.range(1000000L).selectExpr("sum(id)").write
       .format("noop").mode("overwrite").save()
     val repeats = math.max(1,
@@ -52,8 +40,8 @@ object ScaleBench {
     def sweep(sfDir: String): Map[String, Double] =
       names.map { name =>
         val t0 = System.nanoTime()
-        try SparkEntry.queries(name)(spark, sfDir).write
-          .format("noop").mode("overwrite").save()
+        try SparkEntry.run(spark, name, sfDir)(
+          _.write.format("noop").mode("overwrite").save())
         catch {
           case e: Throwable =>
             System.err.println(s"[scale] $name@$sfDir FAILED: $e")
@@ -79,10 +67,8 @@ object ScaleBench {
           System.err.println(s"[scale] prebuild@$dir degraded: $e")
       }
       builds(dir) = (System.nanoTime() - t0) / 1e9
-      val mins = (1 to repeats).map { _ =>
-        spark.catalog.clearCache()
-        sweep(dir)
-      }.reduce((a, b) => a.map { case (k, v) => k -> math.min(v, b(k)) })
+      val mins = (1 to repeats).map(_ => sweep(dir))
+        .reduce((a, b) => a.map { case (k, v) => k -> math.min(v, b(k)) })
       System.err.println(s"[scale] done $dir " +
         f"(artifact_build ${builds(dir)}%.1fs)")
       mins

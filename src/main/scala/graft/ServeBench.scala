@@ -1,8 +1,9 @@
 package graft
 
+import graft.core.GraftSession
 import graft.ops.{IndexStore, VectorOps}
 import graft.queries.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Point-query serving-latency harness: the claim a vector store makes
@@ -145,19 +146,7 @@ object ServeBench {
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
     val repeats = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.failOnCartesian", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-servebench")
     spark.range(1000000L).selectExpr("sum(id)").write
       .format("noop").mode("overwrite").save()
 

@@ -1,7 +1,7 @@
 package graft
 
+import graft.core.GraftSession
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Round-13 measurement tool (guide §1/§7): runs the named queries
@@ -25,19 +25,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: StageProfile <query>...")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.failOnCartesian", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-stageprofile")
     spark.range(1000000L).selectExpr("sum(id)").write
       .format("noop").mode("overwrite").save()
 
@@ -74,8 +62,8 @@ object StageProfile {
       spark.sparkContext.addSparkListener(listener)
       spark.sparkContext.setJobDescription(q)
       val t0 = System.nanoTime()
-      SparkEntry.queries(q)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      SparkEntry.run(spark, q, sfDir)(
+        _.write.format("noop").mode("overwrite").save())
       val wall = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.removeSparkListener(listener)
       println(f"== $q%s wall=$wall%.2fs ==")

@@ -3,9 +3,10 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftSession
 import graft.streaming.{StreamEvent, StreamingOps}
 
 /** Structured-streaming throughput benchmark: drive the stateful
@@ -37,18 +38,7 @@ object StreamBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_STREAM_COPIES", "8").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-streambench")
     import spark.implicits._
 
     val work = Files.createTempDirectory("graft-streambench").toString

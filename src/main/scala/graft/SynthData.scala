@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.core.GraftSession
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic-data generator for scale factors the driver
@@ -80,14 +81,7 @@ object SynthData {
     require(Set("uniform", "clustered")(arm), s"unknown arm $arm")
     val only: Option[Set[String]] =
       args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-synthdata")
 
     def n(base: Long, floor: Long = 1): Long =
       math.max(floor, (base * sf).toLong)

@@ -1,23 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.failOnCartesian", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated names); the driver leaves
     // it unset → all queries run.
@@ -36,12 +25,12 @@ object Verify {
     // shadow a now-green query
     Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith("._ERROR")).foreach(_.delete())
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.queries.keys
+      .filter(name => only.forall(_.contains(name)))
+      .foreach { name =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        SparkEntry.run(spark, name, sfDir)(_.coalesce(1).write
+          .mode("overwrite").parquet(s"$outDir/$name"))
         // ENFORCED self-verdicts: a query without a DuckDB mirror
         // (rows-only driver check) must carry a `verdict` column and
         // every row must be 1 — otherwise its output is REMOVED so
@@ -74,9 +63,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         markError(name, Option(e.getMessage).getOrElse(e.toString))
       }
-      // release per-query caches (q54 signatures, q71 tokens, ML
-      // inputs) so 63 queries don't accumulate storage-memory churn
-      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -2,7 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's standard knobs.
+/** Session factory with the engine's standard knobs — the only place
+  * a `SparkSession` is built, so every main, spec and benchmark runs
+  * the same configuration.
   *
   * Design notes for cluster scale (tested on local[N], designed for 1000
   * executors):
@@ -15,9 +17,16 @@ import org.apache.spark.sql.SparkSession
   *     oracle and is stable across machines.
   */
 object GraftSession {
-  def local(appName: String = "graft", cores: Int = 32): SparkSession = {
-    val spark = SparkSession
-      .builder()
+  /** Core count when none is passed: `SPARK_GRAFT_CPUS`, else the
+    * host's available processors.
+    */
+  private def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def local(appName: String = "graft",
+      cores: Int = defaultCores): SparkSession = {
+    val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)

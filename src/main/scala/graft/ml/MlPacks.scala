@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.core.Tables
+import graft.core.{CacheScope, Tables}
 import graft.queries.QueryPack
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.LogisticRegression
@@ -56,7 +56,7 @@ object MlPacks extends QueryPack {
     * KMeans stage (M12).
     */
   private def q50Kmeans(s: SparkSession, d: String): DataFrame = {
-    val data = emb(s, d).cache()
+    val data = CacheScope.cache(emb(s, d))
     val n = data.count()
     val model = new KMeans().setK(10).setSeed(42L).setMaxIter(20)
       .setFeaturesCol("features").setPredictionCol("cluster")
@@ -139,7 +139,7 @@ object MlPacks extends QueryPack {
         regexp_extract(col("props"), "[0-9]+", 0).cast("int").as("item"))
       .groupBy(col("user"), col("item"))
       .agg(count(lit(1)).cast("float").as("rating"))
-      .cache()
+      .transform(CacheScope.cache)
     val Array(train, test) = ratings.randomSplit(Array(0.8, 0.2), seed = 42L)
     val als = new ALS().setMaxIter(5).setRegParam(0.01).setSeed(42L)
       .setUserCol("user").setItemCol("item").setRatingCol("rating")
@@ -212,11 +212,10 @@ object MlPacks extends QueryPack {
     val tx = model.transform(spreadDocs)
       .filter(size(col("shingles")) > 0)
       .select(col("doc_id"), col("features"), col("hashes"))
-      .cache()
-    // materialize BEFORE the self-join: its two concurrent scans would
-    // otherwise race the cache population and both recompute the
-    // tokenize→shingle→vectorize→minhash pipeline
-    tx.count()
+      // materialize BEFORE the self-join: its two concurrent scans would
+      // otherwise race the cache population and both recompute the
+      // tokenize→shingle→vectorize→minhash pipeline
+      .transform(CacheScope.pin)
     model.stages.last.asInstanceOf[org.apache.spark.ml.feature.MinHashLSHModel]
       .approxSimilarityJoin(tx, tx, 0.3, "jaccard_dist")
       .filter(col("datasetA.doc_id") < col("datasetB.doc_id"))
@@ -280,8 +279,8 @@ object MlPacks extends QueryPack {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val data = emb(s, d).cache()
-    data.count() // materialize once before the concurrent fits share it
+    // materialize once before the concurrent fits share it
+    val data = CacheScope.pin(emb(s, d))
     // the five fits are independent seeded models over the same cached
     // input — submit them concurrently so the cluster pipelines their
     // stages instead of idling between driver-side iterations

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.CacheScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -23,28 +24,10 @@ import org.apache.spark.sql.functions._
   */
 object CorpusOps {
 
-  /** Frames this API has cached and not yet released (same scoped
-    * lifecycle contract as [[CurationOps]]: callers cycling corpora in
-    * a long-lived session call [[release]] between corpora).
+  /** Releases the [[CacheScope]]; kept for the benchmark harness
+    * (`perfbench/`), whose between-pass reset calls it.
     */
-  private val retained =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  private def materialize(df: DataFrame): DataFrame = {
-    val c = df.cache()
-    c.count()
-    synchronized { retained += c }
-    c
-  }
-
-  /** Number of frames currently pinned by this API (spec hook). */
-  def retainedCount: Int = synchronized { retained.size }
-
-  /** Unpersist every frame this API cached since the last release. */
-  def release(): Unit = synchronized {
-    retained.foreach(_.unpersist())
-    retained.clear()
-  }
+  def release(): Unit = CacheScope.release()
 
   /** Fixed-width token windows of `textCol`, as an array column —
     * per-row, shuffle-free. Segment i = tokens [i*width, (i+1)*width).
@@ -89,7 +72,8 @@ object CorpusOps {
     // join probe), whose explodes off the cache are cheap. Boilerplate
     // membership groups/joins on the 60-bit segment hash — long
     // shuffle keys — while reassembly keeps the exact string.
-    val segd = materialize(docs.select(col(idCol), col(segsCol).as("segs")))
+    val segd =
+      CacheScope.pin(docs.select(col(idCol), col(segsCol).as("segs")))
     val segs = segd
       .select(col(idCol), posexplode(col("segs")).as(Seq("ord", "seg")))
       .select(col(idCol), col("ord"), col("seg"),
@@ -243,7 +227,7 @@ object CorpusOps {
   def bm25TopK(docs: DataFrame, terms: Seq[String], topK: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // tokenization feeds dl AND tf — materialize or both scans re-clean
-    val tokd = materialize(docs.select(col(idCol).as("doc_id"),
+    val tokd = CacheScope.pin(docs.select(col(idCol).as("doc_id"),
       TextOps.tokens(col(textCol)).as("toks")))
     val dl = tokd.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
     val tf = tokd.select(col("doc_id"), explode(col("toks")).as("word"))

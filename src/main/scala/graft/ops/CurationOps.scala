@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.CacheScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,44 +25,16 @@ import org.apache.spark.sql.functions._
   *     ([[GraphOps.connectedComponents]]), not a driver union-find.
   *
   * Caching side effect: [[lshCandidatePairs]] / [[verifiedPairs]] (and
-  * everything built on them) `cache()` + materialize two narrow
-  * relations per distinct input frame. Every cached frame is tracked;
-  * a long-lived application cycling many corpora calls [[release]]
-  * after finishing a corpus to unpersist exactly what this API pinned
-  * (scoped — unlike `spark.catalog.clearCache()` it leaves the
-  * application's own cached frames alone).
+  * everything built on them) pin two narrow relations per distinct
+  * input frame through [[graft.core.CacheScope]], which owns and
+  * releases them.
   */
 object CurationOps {
 
-  /** Frames this API has cached and not yet released. Tracked so the
-    * cache lifecycle is scoped to the library: [[release]] unpersists
-    * these and nothing else.
+  /** Releases the [[CacheScope]]; kept for the benchmark harness
+    * (`perfbench/`), whose between-pass reset calls it.
     */
-  private val retained =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  /** cache() + count() under tracking: materialize BEFORE any
-    * self-join (two concurrent stage scans race an unmaterialized
-    * cache and both recompute), and remember the frame for [[release]].
-    */
-  private def materialize(df: DataFrame): DataFrame = {
-    val c = df.cache()
-    c.count()
-    synchronized { retained += c }
-    c
-  }
-
-  /** Number of frames currently pinned by this API (spec hook). */
-  def retainedCount: Int = synchronized { retained.size }
-
-  /** Unpersist every frame this API cached since the last release —
-    * the between-corpora hygiene step for long-lived sessions. Safe to
-    * call at any point: downstream frames recompute from parquet.
-    */
-  def release(): Unit = synchronized {
-    retained.foreach(_.unpersist(blocking = false))
-    retained.clear()
-  }
+  def release(): Unit = CacheScope.release()
 
   // ------------------------------------------------- artifact tables
 
@@ -90,11 +63,8 @@ object CurationOps {
       s"${java.lang.Double.doubleToLongBits(threshold).toHexString}-$textCol"))(
       build)
 
-  /** Drop the artifact registry — shared with [[SemanticOps]] — so
-    * the next call re-derives and re-writes into a fresh path.
-    * Staleness no longer needs this (the key's file snapshot handles
-    * in-place overwrites); it remains the explicit fresh-registry
-    * hook for tests.
+  /** [[ArtifactStore.clear]]; kept for the benchmark harness
+    * (`perfbench/`), whose between-pass reset calls it.
     */
   def clearArtifacts(): Unit = ArtifactStore.clear()
 
@@ -138,7 +108,7 @@ object CurationOps {
     * tokenize→shingle→hash chains inherit the scan's partitioning,
     * and a small corpus (single-row-group parquet) scans as ONE task,
     * so the pack's heaviest per-row arithmetic ran single-core
-    * (StageProfile: the [[materialize]] counts were 1-2-task stages
+    * (StageProfile: the [[CacheScope.pin]] counts were 1-2-task stages
     * of 2-4.5 s pure CPU at sf0.1). When — and only when — the input
     * carries fewer partitions than the session's parallelism,
     * hash-repartition by doc id before the per-row work; at scale the
@@ -235,12 +205,12 @@ object CurationOps {
   def lshCandidatePairsCapped(docs: DataFrame, bucketCap: Int = 1024,
       textCol: String = "text"): DataFrame = {
     require(bucketCap >= 1, s"bucketCap must be >= 1, got $bucketCap")
-    val bd = materialize(bandKeys(docs, textCol))
+    val bd = CacheScope.pin(bandKeys(docs, textCol))
     val stats = bd.groupBy(col("band"), col("key"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("rep"))
     // uniform (band, key) equi-join — the annotation rides the same
     // shuffle the pairing itself needs
-    val sized = materialize(bd.join(stats, Seq("band", "key")))
+    val sized = CacheScope.pin(bd.join(stats, Seq("band", "key")))
     val small = sized.filter(col("n_docs") <= bucketCap)
     val smallPairs = small
       .select(col("doc_id").as("d1"), col("band"), col("key"))
@@ -281,7 +251,7 @@ object CurationOps {
     // the band relation is narrow (doc_id, band, key) — cache and
     // materialize it so the self-join's two concurrent scans don't
     // each recompute (or race) the tokenize→shingle→md5→minhash chain
-    val bd = materialize(bandKeys(docs, textCol))
+    val bd = CacheScope.pin(bandKeys(docs, textCol))
     newSide match {
       case None =>
         val a = bd.select(col("doc_id").as("d1"), col("band"), col("key"))
@@ -357,7 +327,7 @@ object CurationOps {
       bucketCap: Int = 1024,
       textCol: String = "text"): DataFrame = {
     require(bucketCap >= 1, s"bucketCap must be >= 1, got $bucketCap")
-    val bd = materialize(bandKeys(docs, textCol))
+    val bd = CacheScope.pin(bandKeys(docs, textCol))
     val stats = bd.groupBy(col("band"), col("key"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("rep"))
     val nw = bd.filter(isNew)
@@ -414,7 +384,7 @@ object CurationOps {
   private def jaccardOf(docs: DataFrame, cands0: DataFrame,
       textCol: String, minJaccard: Option[Double] = None): DataFrame = {
     // fetched twice (both pair sides) — compute once
-    val sets = materialize(
+    val sets = CacheScope.pin(
       shingleHashed(docs, textCol).select(col("doc_id"), col("sh")))
     val cands = cands0.select(col("d1"), col("d2"))
     val sized = cands
@@ -478,7 +448,7 @@ object CurationOps {
       thresholdDen: Int = 5, textCol: String = "text"): DataFrame = {
     require(thresholdNum > 0 && thresholdDen >= thresholdNum,
       s"threshold must be in (0,1]: $thresholdNum/$thresholdDen")
-    val sets = materialize(distinctShingleSets(docs, textCol))
+    val sets = CacheScope.pin(distinctShingleSets(docs, textCol))
     prefixJoinOn(sets, prefixEmissions(sets, thresholdNum, thresholdDen),
       thresholdNum, thresholdDen)
   }
@@ -509,7 +479,7 @@ object CurationOps {
     val plen = expr(
       s"size(ord) - ($thresholdNum * size(ord) + ${thresholdDen - 1})" +
         s" DIV $thresholdDen + 1")
-    materialize(
+    CacheScope.pin(
       ordered
         .select(col("doc_id"), explode(slice(col("ord"), lit(1), plen)).as("p"))
         .select(col("doc_id"), col("p.h").as("h")))
@@ -599,7 +569,7 @@ object CurationOps {
       thresholdDen: Int = 5, textCol: String = "text"): DataFrame = {
     require(thresholdNum > 0 && thresholdDen >= thresholdNum,
       s"threshold must be in (0,1]: $thresholdNum/$thresholdDen")
-    val sets = materialize(distinctShingleSets(docs, textCol))
+    val sets = CacheScope.pin(distinctShingleSets(docs, textCol))
     segmentJoinOn(sets, thresholdNum, thresholdDen)
   }
 
@@ -647,7 +617,7 @@ object CurationOps {
       .select(col("doc_id"), col("hset"), col("gp"), col("k"))
     def sigOf(arr: Column): Column =
       xxhash64(concat_ws(",", transform(arr, x => x.cast("string"))))
-    val em = materialize(parts
+    val em = CacheScope.pin(parts
       .withColumn("seg", explode(sequence(lit(0), col("k") - 1)))
       .withColumn("arr",
         filter(col("hset"), h => pmod(h, col("k")) === col("seg")))
@@ -685,7 +655,7 @@ object CurationOps {
       candidateBudgetPerDoc: Int = 64): DataFrame = {
     require(thresholdNum > 0 && thresholdDen >= thresholdNum,
       s"threshold must be in (0,1]: $thresholdNum/$thresholdDen")
-    val sets = materialize(distinctShingleSets(docs, textCol))
+    val sets = CacheScope.pin(distinctShingleSets(docs, textCol))
     val pre = prefixEmissions(sets, thresholdNum, thresholdDen)
     val estPairs = pre.groupBy(col("h")).agg(count(lit(1)).as("c"))
       .agg(coalesce(sum(expr("c * (c - 1) div 2")), lit(0L)).as("p"))
@@ -702,7 +672,7 @@ object CurationOps {
     // cache manager matches canonicalized SUBTREES, so a subsequent
     // lshCandidatePairs over the same frame reuses this scan instead
     // of re-running tokenize→shingle→md5
-    val base = materialize(shingleHashed(docs, textCol))
+    val base = CacheScope.pin(shingleHashed(docs, textCol))
     val sets = base.select(col("doc_id"), col("sh"))
     val a = sets.select(col("doc_id").as("d1"), col("sh").as("sh1"))
     val b = sets.select(col("doc_id").as("d2"), col("sh").as("sh2"))
@@ -815,7 +785,7 @@ object CurationOps {
     // note 14) — unpinned, the per-position md5 pipeline evaluates
     // 2-3× per row (measured 11-15 s at sf0.1 for q103/q104; ~4 s
     // pinned)
-    materialize(materialize(kgs)
+    CacheScope.pin(CacheScope.pin(kgs)
       .select(col("doc_id"), posexplode(col("kgs")).as(Seq("pos", "h")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"), col("h")))
   }

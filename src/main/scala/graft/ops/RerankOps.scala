@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.CacheScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -197,7 +198,7 @@ object RerankOps {
       // back-to-back stages reading the same grouped-collect shuffle,
       // 805 + 704 ms). The pin is |queries|·k rows. The sample job
       // fully materializes the cache; the sort's map pass then reads it.
-      .cache()
+      .transform(CacheScope.cache)
     out.orderBy(col("qid"), col("rank"))
   }
 }

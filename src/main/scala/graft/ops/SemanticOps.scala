@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.CacheScope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,27 +24,15 @@ import org.apache.spark.sql.functions._
   * flip a verify decision across engines.
   *
   * Cache lifecycle: the normalized-vector projection feeding both
-  * sides of the candidate self-join is cached + materialized (the
-  * concurrent-stage race discipline); [[release]] unpersists exactly
-  * what this API pinned.
+  * sides of the candidate self-join is pinned through
+  * [[graft.core.CacheScope]] (the concurrent-stage race discipline).
   */
 object SemanticOps {
 
-  private val retained =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  private def materialize(df: DataFrame): DataFrame = {
-    val c = df.cache()
-    c.count()
-    synchronized { retained += c }
-    c
-  }
-
-  /** Unpersist every frame this API cached since the last release. */
-  def release(): Unit = synchronized {
-    retained.foreach(_.unpersist())
-    retained.clear()
-  }
+  /** Releases the [[CacheScope]]; kept for the benchmark harness
+    * (`perfbench/`), whose between-pass reset calls it.
+    */
+  def release(): Unit = CacheScope.release()
 
   /** Scale-adaptive compute spread (round 13, guide §2 — the same
     * rule as CurationOps): a small embeddings table scans as ONE task
@@ -114,7 +103,7 @@ object SemanticOps {
   def neardupPairs(emb: DataFrame, threshold: Double = 0.45,
       dim: Int = 64, bands: Int = 4, rowsPerBand: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val v = materialize(normalized(emb, idCol, vecCol))
+    val v = CacheScope.pin(normalized(emb, idCol, vecCol))
     val keyed = bandKeyed(v, dim, bands, rowsPerBand)
     val cand = keyed.as("a")
       .join(keyed.as("b"),
@@ -167,8 +156,8 @@ object SemanticOps {
       rowsPerBand: Int = 4, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(bucketCap >= 1, s"bucketCap must be >= 1, got $bucketCap")
-    val v = materialize(normalized(emb, idCol, vecCol))
-    val keyed = materialize(bandKeyed(v, dim, bands, rowsPerBand))
+    val v = CacheScope.pin(normalized(emb, idCol, vecCol))
+    val keyed = CacheScope.pin(bandKeyed(v, dim, bands, rowsPerBand))
     val stats = keyed.groupBy(col("band"), col("bkey"))
       .agg(count(lit(1)).as("n_vecs"), min(col("vec_id")).as("rep"))
     val sized = keyed.join(stats, Seq("band", "bkey"))
@@ -209,7 +198,7 @@ object SemanticOps {
       threshold: Double = 0.45,
       dim: Int = 64, bands: Int = 4, rowsPerBand: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val v = materialize(normalized(emb, idCol, vecCol))
+    val v = CacheScope.pin(normalized(emb, idCol, vecCol))
     val keyed = bandKeyed(v, dim, bands, rowsPerBand)
     val nw = keyed.filter(isNew)
       .select(col("vec_id").as("dn"), col("band"), col("bkey"))

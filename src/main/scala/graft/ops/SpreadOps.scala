@@ -50,14 +50,16 @@ object SpreadOps {
     *
     * The partition count is EXPLICIT (session parallelism): these
     * exchanges exist to spread CPU-heavy per-row chains whose input
-    * BYTES are tiny (tokenize→shingle→md5 over a few MB), and with
-    * cached-plan AQE enabled (round 14) an advisory-sized coalesce
-    * would fold them back to 1-3 partitions — byte-proportional
-    * sizing is exactly wrong for compute-bound stages (measured:
-    * q242 3.2 → 4.6 s when the coalesce undid the spread). An
-    * explicit count is exempt from AQE coalescing by contract, and
-    * it only ever applies in the small-input regime this trigger
-    * gates on — at scale no exchange exists at all.
+    * BYTES are tiny (tokenize→shingle→md5 over a few MB), and
+    * byte-proportional AQE sizing would fold them back to 1-3
+    * partitions, which is wrong for compute-bound stages. The count
+    * was made explicit in round 14 under the cached-plan AQE config
+    * (q242 3.2 → 4.6 s when the coalesce undid the spread); that
+    * config was reverted in `7a00d24`, and whether the count is still
+    * needed without it is not yet measured. An explicit count is
+    * exempt from AQE coalescing by contract, and it only ever applies
+    * in the small-input regime this trigger gates on — at scale no
+    * exchange exists at all.
     */
   def spread(df: DataFrame, id: Column): DataFrame =
     if (underParallel(df))

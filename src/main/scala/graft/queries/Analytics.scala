@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.{Exact, Tables}
+import graft.core.{CacheScope, Exact, Tables}
 import graft.ops.{GraphOps, ScdOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -158,8 +158,8 @@ object Analytics extends QueryPack {
         col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"), col("c_mktsegment"))
       .agg(count(lit(1)).as("class_size"))
-      .cache() // feeds the risky listing AND the summary row
-    classes.count()
+      // feeds the risky listing AND the summary row
+      .transform(CacheScope.pin)
     val risky = classes.filter(col("class_size") < k)
       .select(col("n_name"), col("c_mktsegment"), col("class_size"))
     val summary = classes.agg(
@@ -393,8 +393,7 @@ object Analytics extends QueryPack {
       .select(col("p_name"), col("n_parts"), col("nid"),
         expr("split(p_name, ' ')[0]").as("adj"),
         expr("element_at(split(p_name, ' '), -1)").as("noun"))
-      .cache()
-    names.count()
+      .transform(CacheScope.pin)
     names
   }
 
@@ -569,8 +568,8 @@ object Analytics extends QueryPack {
       Tables(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct(),
       col("l_orderkey"))
-      .cache() // feeds supports AND both sides of the pair join
-    baskets.count()
+      // feeds supports AND both sides of the pair join
+      .transform(CacheScope.pin)
     // basket total rides the plan as a broadcast scalar — no separate
     // driver action serializing a job before the join
     val nBaskets = baskets
@@ -581,14 +580,12 @@ object Analytics extends QueryPack {
     val itemSup = baskets.groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("sup"))
       .filter(col("sup") >= minsup) // Apriori prune
-      .cache()
-    itemSup.count()
+      .transform(CacheScope.pin)
     // pinned: both sides of the pair self-join read it — unpinned,
     // the prune join executed once per side
     val frequent = baskets.join(broadcast(itemSup.select(col("l_partkey"))),
       Seq("l_partkey"))
-      .cache()
-    frequent.count()
+      .transform(CacheScope.pin)
     val pairSup = frequent.as("a")
       .join(frequent.as("b"),
         col("a.l_orderkey") === col("b.l_orderkey") &&
@@ -602,8 +599,9 @@ object Analytics extends QueryPack {
       .withColumnRenamed("sup", "sup_2")
     val scored = pairSup
       .join(broadcast(supA), Seq("p1")).join(broadcast(supB), Seq("p2"))
-      .cache() // both rule directions read it — without the pin the
-    scored.count() // union re-runs the basket self-join per branch
+      // both rule directions read it — without the pin the union
+      // re-runs the basket self-join per branch
+      .transform(CacheScope.pin)
     val ab = scored.select(col("p1").as("antecedent"),
       col("p2").as("consequent"), col("sup_ab"),
       col("sup_1").as("sup_ante"), col("sup_2").as("sup_cons"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{CacheScope, Tables}
 import graft.ops.{CorpusOps, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -472,8 +472,7 @@ object Corpus extends QueryPack {
       .select(col("doc_id"), explode(toks).as("word"))
       .groupBy(col("doc_id"), col("word"))
       .agg(count(lit(1)).as("tf"))
-      .cache()
-    tf.count()
+      .transform(CacheScope.pin)
     val df = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
     val nTotal = docs(s, d).agg(count(lit(1)).as("n_total"))
     // integer `div`, not double `/` + cast: the double path is exact

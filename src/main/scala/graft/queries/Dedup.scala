@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{CacheScope, Tables}
 import graft.ops.{CorpusOps, CurationOps, DedupOps, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -178,8 +178,8 @@ object Dedup extends QueryPack {
       .select(col("doc_id"), col("simhash"), col("bk.band").as("band"),
         (col("bk.key") % expr("shiftleft(CAST(1 AS BIGINT), r)"))
           .as("key"))
-      .cache()
-    bnd.count() // see q28: don't recompute/race the signature chain
+      // see q28: don't recompute/race the signature chain
+      .transform(CacheScope.pin)
     val a = bnd.select(col("doc_id").as("d1"), col("simhash").as("sh1"),
       col("band"), col("key"))
     val b = bnd.select(col("doc_id").as("d2"), col("simhash").as("sh2"),
@@ -462,8 +462,8 @@ object Dedup extends QueryPack {
     // equals |hs ∩ bench| exactly.
     val h = hashed(s, d)
       .select(col("doc_id"), array_distinct(col("hs")).as("hs"))
-      .cache()
-    h.count() // three consumers below — materialize once, no races
+      // three consumers below — materialize once, no races
+      .transform(CacheScope.pin)
     val bench = h.filter(pmod(col("doc_id"), lit(50)) === 0)
       .select(explode(col("hs")).as("bh"))
       .distinct()
@@ -571,14 +571,12 @@ object Dedup extends QueryPack {
     // pre-Generate filter otherwise inlines the whole shingle-hash
     // chain and re-evaluates it per row (design note 14; 14.6 → ~4 s
     // at sf0.1)
-    val hs = hashed(s, d).select(col("doc_id"), col("hs")).cache()
-    hs.count()
+    val hs = CacheScope.pin(hashed(s, d).select(col("doc_id"), col("hs")))
     // feeds both the df aggregate and the join probe — materialize or
     // the two concurrent stage scans recompute the explode
     val ex = hs
       .select(col("doc_id"), explode(col("hs")).as("h"))
-      .cache()
-    ex.count()
+      .transform(CacheScope.pin)
     val dfreq = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
     ex.join(dfreq, Seq("h"))
       .groupBy(col("doc_id"))
@@ -798,8 +796,7 @@ object Dedup extends QueryPack {
       d: String): DataFrame = {
     // signatures feed both pair sides — cache+materialize or the two
     // join scans each recompute the tokenize→shingle→minhash chain
-    val sg = sigs(s, d).cache()
-    sg.count()
+    val sg = CacheScope.pin(sigs(s, d))
     val a = sg.select(col("doc_id").as("d1") +:
       (0 until 8).map(i => col(s"s$i").as(s"a$i")): _*)
     val b = sg.select(col("doc_id").as("d2") +:

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.{Exact, Tables}
+import graft.core.{CacheScope, Exact, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -354,7 +354,7 @@ object Events extends QueryPack {
       .select(col("user_id"), col("event_id").as("p_id"),
         tsUs.as("hi"))
       .withColumn("lo", col("hi") - HALF_HOUR_US)
-      .cache()
+      .transform(CacheScope.cache)
     val views = ev(s, d)
       .filter(col("event_type") === "view")
       .select(col("user_id"), tsUs.as("v_us"))
@@ -844,8 +844,7 @@ object Events extends QueryPack {
       .groupBy(col("user_id"), expr(s"ts DIV $dayNs").as("day"))
       .agg(count(lit(1)).as("n_events"),
         Exact.sumFixed(col("value"), 6).as("sum_value"))
-      .cache()
-    daily.count()
+      .transform(CacheScope.pin)
     daily.groupBy(col("user_id"))
       .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       .select(col("user_id"),
@@ -1385,7 +1384,7 @@ object Events extends QueryPack {
       .select(key(date_format(
         timestamp_micros(expr("ts div 1000")), "yyyy-MM-dd")).as("h"))
       .distinct()
-      .cache()
+      .transform(CacheScope.cache)
     // size the bitmap from the key count the cache materializes anyway
     // — no hardcoded m; stays load-bearing at every SF
     val (m, k) = BloomOps.sizeFor(math.max(1L, corpus.count()))

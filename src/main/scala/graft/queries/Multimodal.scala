@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{CacheScope, Tables}
 import graft.ops.MultimodalOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -194,8 +194,7 @@ object Multimodal extends QueryPack {
     // level only moves the serialization earlier, it does not change
     // the spill path.
     val base = MultimodalOps.synthesizeMedia(assets(s, d))
-      .cache()
-    base.count()
+      .transform(CacheScope.pin)
     val twins = MultimodalOps
       .transcode(base.filter(_.format == "png"), "jpeg")
       .map(a => a.copy(doc_id = a.doc_id + twinOffset))
@@ -206,12 +205,12 @@ object Multimodal extends QueryPack {
     // of 64-task stages per consumer (round 13, guide §2.4; keyed, no
     // constant)
     val hashes = MultimodalOps.perceptualHashes(base.union(twins))
-      .toDF().repartition(col("phash")).cache()
-    hashes.count() // materialize before reuse (design rule 8)
+      // materialize before reuse (design rule 8)
+      .toDF().repartition(col("phash")).transform(CacheScope.pin)
     val classes = hashes.groupBy(col("phash"))
       .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("class_size"))
-      .cache()
-    classes.count() // feeds the band join, the stars and the output
+      // feeds the band join, the stars and the output
+      .transform(CacheScope.pin)
     val bandStructs = array((0 until 4).map { b =>
       struct(lit(b).as("band"),
         expr(s"shiftright(phash, ${16 * b}) & 65535").as("key"))
@@ -250,8 +249,7 @@ object Multimodal extends QueryPack {
       .join(comp, col("rep") === col("id"), "left")
       .select(col("doc_id"), col("format"), col("phash"),
         col("class_size"), coalesce(col("comp"), col("rep")).as("comp"))
-      .cache()
-    perDoc.count()
+      .transform(CacheScope.pin)
     // twin recall: every (png, jpeg-twin) pair shares a component
     val twinCheck = perDoc.filter(col("doc_id") >= twinOffset)
       .select((col("doc_id") - twinOffset).as("orig_id"),

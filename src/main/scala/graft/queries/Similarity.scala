@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.{Exact, Tables}
+import graft.core.{CacheScope, Exact, Tables}
 import graft.ops.{IndexStore, RerankOps, TopKOps, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -500,12 +500,11 @@ object Similarity extends QueryPack {
     * — run it on a sampled query set to monitor recall in production.
     */
   private def q38AnnRecall(s: SparkSession, d: String): DataFrame = {
-    // cache+materialize the shared projection once: the exact side
-    // scans it twice and the LSH self-join twice more; the builders
-    // below re-derive the same plan, which the cache manager matches
-    // by canonicalized plan equality
-    val v = vecs(s, d).cache()
-    v.count()
+    // pin the shared projection once: the exact side scans it twice
+    // and the LSH self-join twice more; the builders below re-derive
+    // the same plan, which the cache manager matches by canonicalized
+    // plan equality
+    CacheScope.pin(vecs(s, d))
     val exact5 = TopKOps
       .topKPerGroup(scoredPairs(s, d, col("vec_id") < 20),
         Seq(col("qid")), Seq(col("cos").desc, col("cid").asc), 5)
@@ -781,12 +780,11 @@ object Similarity extends QueryPack {
     * rank-1-equals-top-1 and diversity-vs-plain-top-k invariants.
     */
   private def q129MmrRerank(s: SparkSession, d: String): DataFrame = {
-    val cands = TopKOps
+    // pinned: feeds the pair self-join AND every mmr round
+    val cands = CacheScope.pin(TopKOps
       .topKPerGroup(scoredPairs(s, d, col("vec_id") < 8),
         Seq(col("qid")), Seq(col("cos").desc, col("cid").asc), 20)
-      .select(col("qid"), col("cid"), Exact.fixed(col("cos"), 6).as("rel"))
-      .cache()
-    cands.count() // pin: feeds the pair self-join AND every mmr round
+      .select(col("qid"), col("cid"), Exact.fixed(col("cos"), 6).as("rel")))
     val v = vecs(s, d)
       .select(col("vec_id"), col("v"), col("nrm"))
     val cv = cands.select(col("qid"), col("cid"))
@@ -1074,8 +1072,7 @@ object Similarity extends QueryPack {
     * queries×corpus exactly like the q32 ground-truth scan.
     */
   private def q227Sq8AdcRecall(s: SparkSession, d: String): DataFrame = {
-    val x = VectorOps.liftE6(emb(s, d), "vec_id", "embedding").cache()
-    x.count() // the exact ground-truth side still scans it twice
+    val x = liftedX(s, d) // the exact ground-truth side scans it twice
     val recon = IndexStore.sq8Table(x)
       .select(col("vec_id"), col("dim"), col("recon").as("r"))
     def toArr(df: DataFrame, valCol: String) = df.groupBy(col("vec_id"))
@@ -1161,8 +1158,7 @@ object Similarity extends QueryPack {
     * deliberate full scan that defines recall.
     */
   private def q238IvfSq8Serving(s: SparkSession, d: String): DataFrame = {
-    val x = VectorOps.liftE6(emb(s, d), "vec_id", "embedding").cache()
-    x.count() // the exact ground-truth side still scans it twice
+    val x = liftedX(s, d) // the exact ground-truth side scans it twice
     // the persisted SQ8 code table ([[IndexStore.sq8Table]]): quantized
     // once per corpus snapshot, read back as a pruned file scan here
     val recon = IndexStore.sq8Table(x)
@@ -1288,8 +1284,7 @@ object Similarity extends QueryPack {
     * memory-bounded shape that actually serves at 100 TB.
     */
   private def q241PqAdcRecall(s: SparkSession, d: String): DataFrame = {
-    val x = VectorOps.liftE6(emb(s, d), "vec_id", "embedding").cache()
-    x.count() // subspace frame, norms and ground truth all scan it
+    val x = liftedX(s, d) // subspace frame, norms and ground truth
     val xs = VectorOps.pqSubspaces(x, subDim = 8)
     // trained ONCE per corpus snapshot and persisted
     // ([[IndexStore.codebook]]/[[IndexStore.codes]]); the 2-round-deep
@@ -2519,44 +2514,21 @@ object Similarity extends QueryPack {
       .select(col("qid"), col("cell"))
   }
 
-  /** cache() + count(): pin a relation the report chain references
-    * more than once. Round-13 measurement (StageProfile, warm q260):
-    * every multiply-referenced frame in the serving tail — the route,
-    * the ADC candidates, the ground-truth arrays — was re-derived per
-    * AQE stage reference (the same 1.18 MB lifted-frame scan appeared
-    * 14× in one query, 46× cold), because Spark only reuses
-    * *exchanges*, not arbitrary subtrees. At 100 TB re-deriving a
-    * routed scan per consumer is strictly worse than pinning a
+  /** Releases the [[CacheScope]]; kept for the benchmark harness
+    * (`perfbench/`), whose between-pass reset calls it.
+    *
+    * The report chains pin ([[CacheScope.pin]]) every relation they
+    * reference more than once. Round-13 measurement (StageProfile,
+    * warm q260): every multiply-referenced frame in the serving tail —
+    * the route, the ADC candidates, the ground-truth arrays — was
+    * re-derived per AQE stage reference (the same 1.18 MB lifted-frame
+    * scan appeared 14× in one query, 46× cold), because Spark only
+    * reuses *exchanges*, not arbitrary subtrees. At 100 TB re-deriving
+    * a routed scan per consumer is strictly worse than pinning a
     * bounded frame (these are all ≤ corpus-row-count, most are
-    * queries×probes). Eager count per the repo's design rule 8: two
-    * concurrent AQE stage scans race an unmaterialized cache and both
-    * recompute.
+    * queries×probes).
     */
-  private val pinned =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  private def pin(df: DataFrame): DataFrame = {
-    val c = df.cache()
-    c.count()
-    synchronized { pinned += c }
-    c
-  }
-
-  /** Unpersist every frame [[pin]] cached since the last release —
-    * the between-corpora hygiene hook for long-lived sessions (round-13
-    * ADVICE: pinned route/cells/adc frames accumulated across a
-    * 254-query session with no release registry, the same LRU-pressure
-    * mode ENGINE.md blamed for the r11 driver drift). Mirrors
-    * [[graft.ops.SemanticOps.release]]/CurationOps.release; safe at
-    * any point — downstream consumers recompute from parquet. Verify
-    * clears the whole cache per query and Bench's documented policy is
-    * session-style reuse, so the gates are unaffected; RecallBench
-    * calls this between corpora.
-    */
-  def release(): Unit = synchronized {
-    pinned.foreach(_.unpersist(blocking = false))
-    pinned.clear()
-  }
+  def release(): Unit = CacheScope.release()
 
   /** The lifted e6 frame, pinned — shared entry for the
     * trained-quantizer family (vec_id-partitioned by [[VectorOps
@@ -2565,15 +2537,15 @@ object Similarity extends QueryPack {
     * partitioning).
     */
   private def liftedX(s: SparkSession, d: String): DataFrame =
-    pin(VectorOps.liftE6(emb(s, d), "vec_id", "embedding"))
+    CacheScope.pin(VectorOps.liftE6(emb(s, d), "vec_id", "embedding"))
 
   /** Reassembled double arrays + squared norms off the lifted frame —
     * the exact-ground-truth projection every trained-IVF report scans
     * (several times per report: query vectors, candidate members,
-    * exact top-5 — pinned, see [[pin]]).
+    * exact top-5 — pinned, see [[release]]).
     */
   private def e6Arrays(x: DataFrame): DataFrame =
-    pin(x.groupBy(col("vec_id"))
+    CacheScope.pin(x.groupBy(col("vec_id"))
       .agg(transform(
         array_sort(collect_list(struct(col("dim"), col("x")))),
         t => t.getField("x").cast("double")).as("v"))
@@ -2671,7 +2643,7 @@ object Similarity extends QueryPack {
       Seq(col("qid")), Seq(col("dd").asc, col("c").asc), 2)
       .select(col("qid"), col("c"))
     // arrs feeds the query vectors, the member scan and the exact
-    // top-5; scanned is both ranked and counted — pinned (see [[pin]])
+    // top-5; scanned is both ranked and counted — pinned (see [[release]])
     val arrs = e6Arrays(x)
     val qv = arrs.filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
@@ -2679,7 +2651,7 @@ object Similarity extends QueryPack {
     val members = cells.join(arrs, Seq("vec_id"))
       .select(col("vec_id").as("cid"), col("c"), col("v").as("cv"),
         col("n2").as("cn2"))
-    val scanned = pin(route.join(qv, Seq("qid"))
+    val scanned = CacheScope.pin(route.join(qv, Seq("qid"))
       .join(members, Seq("c"))
       .filter(col("cid") =!= col("qid"))
       .select(col("qid"), col("cid"),
@@ -2781,9 +2753,9 @@ object Similarity extends QueryPack {
       trainNOverride: Long = -1L): DataFrame = {
     val x = liftedX(s, d)
     // pinned: membership feeds the budget route's occupancy sizes AND
-    // the member scan (see [[pin]])
+    // the member scan (see [[release]])
     val (cent, cellsRaw) = imiQuantizer(x, k1, rounds, trainNOverride)
-    val cells = pin(cellsRaw)
+    val cells = CacheScope.pin(cellsRaw)
     val route = imiRouteBudget(x, cent, k1, cells, budget)
     imiFlatReport(route, cells, x)
   }
@@ -2807,8 +2779,8 @@ object Similarity extends QueryPack {
         (col("qn2") + col("cn2") -
           lit(2L) * VectorOps.dot(col("qv"), col("cv")).cast("long"))
           .as("dist"))
-    // pinned: the report ranks it AND counts it (see [[pin]])
-    ivfServingReport(pin(scored), arrs)
+    // pinned: the report ranks it AND counts it (see [[release]])
+    ivfServingReport(CacheScope.pin(scored), arrs)
   }
 
   /** One DuckDB Lloyd round (assignment + shift-floor mean update)
@@ -3148,8 +3120,8 @@ object Similarity extends QueryPack {
         (col("qn2") + col("cn2") -
           lit(2L) * VectorOps.dot(col("qv"), col("cv")).cast("long"))
           .as("dist"))
-    // pinned: the report ranks it AND counts it (see [[pin]])
-    ivfServingReport(pin(scored), arrs)
+    // pinned: the report ranks it AND counts it (see [[release]])
+    ivfServingReport(CacheScope.pin(scored), arrs)
   }
 
   private val q259Sql = {
@@ -3357,8 +3329,8 @@ object Similarity extends QueryPack {
       .join(broadcast(tab), Seq("qid", "sub", "c"))
       .groupBy(col("qid"), col("cid"))
       .agg(sum(col("dd")).as("dist"))
-    // pinned: the report ranks it AND counts it (see [[pin]])
-    ivfServingReport(pin(adc), e6Arrays(x))
+    // pinned: the report ranks it AND counts it (see [[release]])
+    ivfServingReport(CacheScope.pin(adc), e6Arrays(x))
   }
 
   /** The m=8 PQ Lloyd chain + per-query ADC tables, shared by the
@@ -3498,13 +3470,13 @@ object Similarity extends QueryPack {
     val (cent, cellsRaw) = imiQuantizer(x, k1, rounds)
     // pinned: membership feeds the route's occupancy sizes AND the
     // candidate join; the route feeds the per-cell residual tables AND
-    // the candidate join (see [[pin]] — each reference re-derived the
+    // the candidate join (see [[release]] — each reference re-derived the
     // whole trained chain before round 13)
-    val cells = pin(cellsRaw)
+    val cells = CacheScope.pin(cellsRaw)
     val rxs = imiResidualSubspaces(s, d, k1, rounds)
     val rCent = IndexStore.codebook(rxs, k = kq, rounds = 2)
     val rCodes = IndexStore.codes(rxs, k = kq, rounds = 2)
-    val route = pin(routeOf(x, cent, cells))
+    val route = CacheScope.pin(routeOf(x, cent, cells))
     // per-(query, probed cell) residual → per-cell ADC table: the
     // probed composite cell decomposes into its two half codes
     // (cell div k1, cell mod k1), each resolving its own half-space
@@ -3534,7 +3506,7 @@ object Similarity extends QueryPack {
       .agg(sum(col("dd")).as("dist"))
     // pinned: q255 ranks it AND counts it; q257/q260 shortlist it AND
     // count it (queries × scanned rows — bounded)
-    (pin(adc), e6Arrays(x))
+    (CacheScope.pin(adc), e6Arrays(x))
   }
 
   /** Exact-refine shortlist size for q257: the top-R ADC candidates

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{CacheScope, Tables}
 import graft.ops.{SubwordOps, TextOps, TopKOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -234,7 +234,7 @@ object TextAnalytics extends QueryPack {
     val tokens = docs(s, d)
       .select(col("doc_id"), explode(toks).as("word"))
       .filter(!col("word").isInCollection(TextOps.stopwords))
-      .cache()
+      .transform(CacheScope.cache)
     val vocab = TopKOps.topN(
       tokens.groupBy(col("word")).agg(count(lit(1)).as("n")),
       Seq(col("n").desc, col("word").asc), 10)

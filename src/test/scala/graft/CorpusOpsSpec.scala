@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.GraftSession
+import graft.core.{CacheScope, GraftSession}
 import graft.ops.CorpusOps
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -49,12 +49,12 @@ class CorpusOpsSpec extends AnyFunSuite {
     val sq = spark
     import sq.implicits._
     val docs = Seq((1L, Seq("x y")), (2L, Seq("a b"))).toDF("doc_id", "segs")
-    CorpusOps.release()
-    val before = CorpusOps.retainedCount
+    CacheScope.release()
+    val before = CacheScope.size
     CorpusOps.lineDedup(docs, "doc_id", "segs", 3).collect()
-    assert(CorpusOps.retainedCount === before + 1)
-    CorpusOps.release()
-    assert(CorpusOps.retainedCount === 0)
+    assert(CacheScope.size === before + 1)
+    CacheScope.release()
+    assert(CacheScope.size === 0)
   }
 
   test("lineDedup yields NULL text when every segment is boilerplate") {

@@ -1,7 +1,7 @@
 package graft
 
-import graft.core.GraftSession
-import graft.ops.CurationOps
+import graft.core.{CacheScope, GraftSession}
+import graft.ops.{ArtifactStore, CurationOps}
 import org.scalatest.funsuite.AnyFunSuite
 
 class CurationOpsSpec extends AnyFunSuite {
@@ -68,7 +68,7 @@ class CurationOpsSpec extends AnyFunSuite {
       .select("d1", "d2").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pt === vp)
-    CurationOps.clearArtifacts()
+    ArtifactStore.clear()
   }
 
   test("same-schema local corpora never share an artifact key") {
@@ -86,7 +86,7 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(a(2L) === 1L, "near-dup corpus keeps its clustering")
     assert(b === Map(1L -> 1L, 2L -> 2L, 3L -> 3L),
       s"all-singleton corpus must not inherit the other corpus's labels: $b")
-    CurationOps.clearArtifacts()
+    ArtifactStore.clear()
   }
 
   test("empty-shingle docs pair as candidates but never crash or verify") {
@@ -141,17 +141,17 @@ class CurationOpsSpec extends AnyFunSuite {
   }
 
   test("release unpersists exactly the frames this API pinned") {
-    CurationOps.release()
-    assert(CurationOps.retainedCount === 0)
+    CacheScope.release()
+    assert(CacheScope.size === 0)
     CurationOps.verifiedPairs(docsDf, threshold = 0.5).count()
-    assert(CurationOps.retainedCount > 0,
+    assert(CacheScope.size > 0,
       "the pipeline must register its cached frames")
     // the band relation is one of the pinned frames — visible through
     // the cache manager via a plan-identical probe
     assert(CurationOps.bandKeys(docsDf).storageLevel.useMemory,
       "band keys must be cached while retained")
-    CurationOps.release()
-    assert(CurationOps.retainedCount === 0)
+    CacheScope.release()
+    assert(CacheScope.size === 0)
     assert(!CurationOps.bandKeys(docsDf).storageLevel.useMemory,
       "release must unpersist the band relation")
   }
@@ -268,7 +268,7 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(pref === brute,
       s"prefix-filtered join must be exact: pref=$pref brute=$brute")
     assert(pref.nonEmpty, "fixture must produce at least one pair")
-    CurationOps.release()
+    CacheScope.release()
   }
 
   test("exactPrefixJoin prefix math is exact at boundary sizes") {
@@ -284,7 +284,7 @@ class CurationOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getAs[Long]("d1"), r.getAs[Long]("d2"))).toSet
     assert(out === Set((1L, 2L)),
       s"exact twins must pair, disjoint doc must not: $out")
-    CurationOps.release()
+    CacheScope.release()
   }
 
   test("exactSegmentJoin equals brute-force pairs — pigeonhole is exact") {
@@ -298,7 +298,7 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(seg === brute,
       s"segment join must be exact: seg=$seg brute=$brute")
     assert(seg.nonEmpty, "fixture must produce at least one pair")
-    CurationOps.release()
+    CacheScope.release()
   }
 
   test("exactSegmentJoin boundary sizes and empty-segment coverage") {
@@ -319,7 +319,7 @@ class CurationOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getAs[Long]("d1"), r.getAs[Long]("d2"))).toSet
     assert(out === Set((1L, 2L), (4L, 5L)),
       s"twins (incl. tiny docs) must pair, disjoint doc must not: $out")
-    CurationOps.release()
+    CacheScope.release()
   }
 
   test("exactSimilarityJoin cost probe: both routes return the exact answer") {
@@ -337,7 +337,7 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(viaSegment === brute && viaPrefix === brute,
       s"both physical routes must be exact: seg=$viaSegment " +
         s"pref=$viaPrefix brute=$brute")
-    CurationOps.release()
+    CacheScope.release()
   }
 
   test("curate drops non-canonical dups AND low-quality docs, keeps schema") {
@@ -377,7 +377,7 @@ class CurationOpsSpec extends AnyFunSuite {
     val b = CurationOps.lshCandidatePairsCapped(docsDf, bucketCap = 1000)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(a === b, "cap above every bucket size must change nothing")
-    CurationOps.release()
+    CacheScope.release()
   }
 
   test("hot bucket emits a star: O(B) candidates, same components") {
@@ -401,7 +401,7 @@ class CurationOpsSpec extends AnyFunSuite {
       "capped chain must reach the same connected components")
     assert(lc.filter(_._1 < 900).values.toSet === Set(0L),
       "all viral docs collapse to the minimum id")
-    CurationOps.release()
+    CacheScope.release()
   }
 
   test("degenerate corpora: empty, single-doc, and all-identical inputs") {
@@ -425,7 +425,7 @@ class CurationOpsSpec extends AnyFunSuite {
     val lab = CurationOps.clusterLabels(same)
       .collect().map(r => r.getLong(1)).toSet
     assert(lab === Set(0L))
-    CurationOps.release()
+    CacheScope.release()
   }
 
   test("capped incremental probe: linear per new doc in a viral bucket, " +
@@ -455,6 +455,6 @@ class CurationOpsSpec extends AnyFunSuite {
         bucketCap = 1000)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(wide === un, "inactive cap must change nothing")
-    CurationOps.release()
+    CacheScope.release()
   }
 }

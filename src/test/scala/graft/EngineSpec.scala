@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.GraftSession
+import graft.core.{CacheScope, GraftSession}
 import graft.queries._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,11 +13,67 @@ class EngineSpec extends AnyFunSuite {
   lazy val spark = GraftSession.local("graft-test", cores = 4)
   val sf = "/root/testdata/sf0.001"
 
+  private def cacheManager = spark.sharedState.cacheManager
+
+  /** Start a check from an empty cache and an empty scope. */
+  private def clearAll(): Unit = {
+    spark.catalog.clearCache()
+    CacheScope.release()
+  }
+
+  private def assertNothingCached(what: String): Unit = {
+    assert(cacheManager.isEmpty, s"$what: left cached frames behind")
+    assert(CacheScope.size === 0, s"$what: scope not released")
+  }
+
   test("every query in every pack runs and returns a schema") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.schema.nonEmpty, s"$name: empty schema")
+    clearAll()
+    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+      val schema = SparkEntry.run(spark, name, sf)(_.schema)
+      assert(schema.nonEmpty, s"$name: empty schema")
+      assertNothingCached(name)
     }
+  }
+
+  test("the runner releases pinned frames when the query fails") {
+    clearAll()
+    intercept[IllegalStateException] {
+      CacheScope.scoped {
+        CacheScope.pin(spark.range(10).toDF("id"))
+        assert(!cacheManager.isEmpty)
+        throw new IllegalStateException("build failed after a pin")
+      }
+    }
+    assertNothingCached("failing build")
+    // q241 pins its lifted frame while it builds; the sink then fails
+    intercept[IllegalStateException] {
+      SparkEntry.run(spark, "q241_pq_adc_recall", sf) { _ =>
+        assert(CacheScope.size > 0, "q241 pins the lifted frame")
+        throw new IllegalStateException("sink failed")
+      }
+    }
+    assertNothingCached("q241 with a failing sink")
+  }
+
+  test("pack order does not change outputs of queries sharing frames") {
+    // q50/q55 share the embeddings input, q53/q56 the ratings frame,
+    // q227/q238/q241 the lifted e6 frame
+    val names = Seq("q50_kmeans_clusters", "q55_kmeans_elbow",
+      "q53_als_recommend", "q56_als_all_recommend", "q227_sq8_adc_recall",
+      "q238_ivf_sq8_serving", "q241_pq_adc_recall")
+    def pack(order: Seq[String]): Map[String, Seq[String]] =
+      order.map { name =>
+        name -> SparkEntry.run(spark, name, sf)(
+          _.collect().map(_.toString).toSeq.sorted)
+      }.toMap
+    clearAll()
+    val forward = pack(names)
+    val reverse = pack(names.reverse)
+    names.foreach { name =>
+      assert(forward(name).nonEmpty, s"$name: no rows")
+      assert(forward(name) === reverse(name), s"$name: order-dependent")
+    }
+    assertNothingCached("order check")
   }
 
   test("oracle keys all map to queries") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.GraftSession
+import graft.core.{CacheScope, GraftSession}
 import graft.ops.GraphOps
 import org.apache.spark.sql.functions.expr
 import org.scalatest.funsuite.AnyFunSuite
@@ -199,6 +199,6 @@ class GraphOpsSpec extends AnyFunSuite {
     val (labels, _) = GraphOps.connectedComponentsRounds(pairs, "d1", "d2")
     // every family collapses to its minimum doc_id
     assert(labels.filter(expr("comp != (id div 8) * 8")).count() === 0L)
-    graft.ops.CurationOps.release()
+    CacheScope.release()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.GraftSession
+import graft.core.{CacheScope, GraftSession}
 import graft.queries._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
@@ -146,11 +146,11 @@ class PlanSpec extends AnyFunSuite {
     // pre-Generate filter; against raw text that re-runs the whole
     // tokenize+segment pipeline 2-3x per row (ENGINE.md note 14). The
     // explode must therefore read the cached relation.
-    graft.ops.CorpusOps.release()
+    CacheScope.release()
     val p = planOf(Corpus.all("q96_line_dedup")(spark, sf))
     assert(p.contains("InMemoryTableScan"),
       s"segment explode must scan the pinned cache:\n${p.take(2000)}")
-    graft.ops.CorpusOps.release()
+    CacheScope.release()
   }
 
   test("q97 per-source cap plans as WindowGroupLimit, q100 rank too") {
@@ -427,14 +427,14 @@ class PlanSpec extends AnyFunSuite {
     val p = planOf(Dedup.all("q206_capped_candidates")(spark, sf))
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p.take(3000))
-    graft.ops.CurationOps.release()
+    CacheScope.release()
   }
 
   test("q207 capped incremental probes via semi-join + equi-joins only") {
     val p = planOf(Dedup.all("q207_capped_incremental")(spark, sf))
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p.take(3000))
-    graft.ops.CurationOps.release()
+    CacheScope.release()
   }
 
   test("q209 semantic best-of-cluster windows stay cluster-partitioned " +
@@ -448,8 +448,8 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SinglePartition") &&
       !p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p.take(3000))
-    graft.ops.SemanticOps.release()
-    graft.ops.CurationOps.clearArtifacts()
+    CacheScope.release()
+    graft.ops.ArtifactStore.clear()
   }
 
   test("selective build-side filter injects a runtime bloom filter " +

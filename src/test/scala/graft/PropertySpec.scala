@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Exact, GraftSession}
+import graft.core.{CacheScope, Exact, GraftSession}
 import graft.ops.{StatsOps, TopKOps}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -339,7 +339,7 @@ class PropertySpec extends AnyFunSuite {
       // cap above every bucket ⇒ identical pair set
       val wide = pairs(CurationOps.lshCandidatePairsCapped(docs, 1000))
       assert(wide === un, "inactive cap must be the identity")
-      CurationOps.release()
+      CacheScope.release()
     }
   }
 }

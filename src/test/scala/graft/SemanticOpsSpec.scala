@@ -1,7 +1,7 @@
 package graft
 
-import graft.core.GraftSession
-import graft.ops.{CurationOps, SemanticOps, VectorOps}
+import graft.core.{CacheScope, GraftSession}
+import graft.ops.{ArtifactStore, SemanticOps, VectorOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -49,7 +49,7 @@ class SemanticOpsSpec extends AnyFunSuite {
     // pairs are guaranteed candidates
     assert(got.contains((0L, 1L)) && got.contains((0L, 2L)) &&
       got.contains((10L, 11L)), s"tight clusters must pair: $got")
-    SemanticOps.release()
+    CacheScope.release()
   }
 
   test("semanticLabels is a total assignment with min-id clusters; " +
@@ -69,8 +69,8 @@ class SemanticOpsSpec extends AnyFunSuite {
     assert(!plan.contains("Join") && !plan.contains("Aggregate"),
       s"second labelsTable call must read the artifact:\n$plan")
     // registry shared with the text chain: one clear resets both
-    CurationOps.clearArtifacts()
-    SemanticOps.release()
+    ArtifactStore.clear()
+    CacheScope.release()
   }
 
   test("capped pairing stars a duplicated-embedding bucket, is the " +
@@ -104,7 +104,7 @@ class SemanticOpsSpec extends AnyFunSuite {
       "d1", "d2")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lu === lc, "capped chain must reach the same components")
-    SemanticOps.release()
+    CacheScope.release()
   }
 
   test("incremental probe is new-side-restricted and orientation-safe") {
@@ -122,6 +122,6 @@ class SemanticOpsSpec extends AnyFunSuite {
     assert(inc.contains((0L, 2L)) && inc.contains((1L, 2L)))
     // old-old pairs never form
     assert(!inc.contains((0L, 1L)), "corpus-internal pair must not form")
-    SemanticOps.release()
+    CacheScope.release()
   }
 }
