@@ -1,0 +1,91 @@
+#!/usr/bin/env bash
+# Same-boot A/B of the engine benchmark (perfbench/): a base revision
+# against this checkout, one seed per pair, pairs run back to back.
+#
+#   scripts/perfbench_ab.sh <base-rev> <workload> <seed>...
+#
+# The base revision is exported with `git archive` into
+# ${TMPDIR:-/tmp}/perfbench_ab-<sha> (reused when it already exists;
+# perfbench builds it into its own .bench_build/ on the first run).
+# The new side is this checkout's working tree. For each seed both
+# sides run `perfbench/run.py --workload <workload> --seed <seed>`; the
+# side that goes first alternates from pair to pair (base first in the
+# first pair). Each run's result line is kept under
+# ${TMPDIR:-/tmp}/perfbench_ab-<sha>.results/<workload>/. At the end
+# the script prints, per end-to-end metric, every pair (base, new,
+# new/base) and a summary: both medians, their ratio, the base runs'
+# interquartile range relative to their median, and how many pairs the
+# new side won (lower is better for every end-to-end metric).
+set -euo pipefail
+
+if [ $# -lt 3 ]; then
+  echo "usage: $0 <base-rev> <workload> <seed>..." >&2
+  exit 2
+fi
+base_rev=$1
+workload=$2
+shift 2
+
+root=$(git rev-parse --show-toplevel)
+sha=$(git -C "$root" rev-parse --short=12 "$base_rev^{commit}")
+base_dir="${TMPDIR:-/tmp}/perfbench_ab-$sha"
+results="$base_dir.results/$workload"
+if [ ! -d "$base_dir" ]; then
+  mkdir -p "$base_dir.partial"
+  git -C "$root" archive "$sha" | tar -x -C "$base_dir.partial"
+  mv "$base_dir.partial" "$base_dir"
+fi
+mkdir -p "$results"
+
+# run <side> <dir> <seed>: one benchmark run; its last stdout line
+# (the result) goes to $results/<side>-<seed>.json
+run() {
+  local out="$results/$1-$3.json"
+  echo "== $1 seed $3 ($(date -u +%H:%M:%S))" >&2
+  (cd "$2" && python3 perfbench/run.py --workload "$workload" --seed "$3") \
+    > "$out.log" 2> "$out.err"
+  tail -n 1 "$out.log" > "$out"
+}
+
+i=0
+for seed in "$@"; do
+  if [ $((i % 2)) -eq 0 ]; then
+    run base "$base_dir" "$seed"
+    run new "$root" "$seed"
+  else
+    run new "$root" "$seed"
+    run base "$base_dir" "$seed"
+  fi
+  i=$((i + 1))
+done
+
+python3 - "$results" "$@" <<'EOF'
+import json, statistics, sys
+
+results, seeds = sys.argv[1], sys.argv[2:]
+runs = {side: [json.load(open(f"{results}/{side}-{s}.json")) for s in seeds]
+        for side in ("base", "new")}
+for side, rs in runs.items():
+    bad = [(s, r["failed"]) for s, r in zip(seeds, rs) if not r["correct"]]
+    print(f"{side}: {len(rs)} runs, incorrect: {bad or 'none'}")
+
+
+def quartiles(xs):
+    q = statistics.quantiles(xs, n=4) if len(xs) > 1 else [xs[0]] * 3
+    return q[0], q[2]
+
+
+for name in runs["base"][0]["metrics"]:
+    b = [r["metrics"][name]["value"] for r in runs["base"]]
+    n = [r["metrics"][name]["value"] for r in runs["new"]]
+    print(f"\n{name} ({runs['base'][0]['metrics'][name]['unit']})")
+    print("  seed      base       new   new/base")
+    for s, x, y in zip(seeds, b, n):
+        print(f"  {s:>4} {x:9.3f} {y:9.3f} {y / x:10.3f}")
+    mb, mn = statistics.median(b), statistics.median(n)
+    q1, q3 = quartiles(b)
+    wins = sum(y < x for x, y in zip(b, n))
+    print(f"  median {mb:9.3f} {mn:9.3f} {mn / mb:10.3f}   "
+          f"base IQR/median {(q3 - q1) / mb:.3f}   "
+          f"new wins {wins}/{len(seeds)}")
+EOF

@@ -172,23 +172,22 @@ object GraphOps {
       .withColumn("wdeg", sum(col("w")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("u"))))
       .cache()
-    e.count()
-    var scores = e.select(col("u")).distinct()
-      .select(col("u"), lit(1000000000L).as("score"))
-    for (_ <- 1 to iters) {
-      scores = e.join(scores, "u")
-        .select(col("v"), expr("(score * w) div wdeg").as("contrib"))
-        .groupBy(col("v"))
-        .agg(sum(col("contrib")).as("m"))
-        .select(col("v").as("u"),
-          expr("150000000 + (85 * m) div 100").as("score"))
-    }
-    // materialize the result, then release the edge cache — the API
-    // must not leak pinned storage to callers (round-4 advice on
-    // CurationOps; same contract here)
-    val out = scores.localCheckpoint()
-    e.unpersist()
-    out
+    // materialize the result, then release the edge cache, also when a
+    // round fails — the API must not leak pinned storage to callers
+    try {
+      e.count()
+      var scores = e.select(col("u")).distinct()
+        .select(col("u"), lit(1000000000L).as("score"))
+      for (_ <- 1 to iters) {
+        scores = e.join(scores, "u")
+          .select(col("v"), expr("(score * w) div wdeg").as("contrib"))
+          .groupBy(col("v"))
+          .agg(sum(col("contrib")).as("m"))
+          .select(col("v").as("u"),
+            expr("150000000 + (85 * m) div 100").as("score"))
+      }
+      scores.localCheckpoint()
+    } finally e.unpersist()
   }
 
   /** k-core decomposition by iterative peeling: repeatedly drop nodes

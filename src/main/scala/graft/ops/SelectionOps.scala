@@ -27,9 +27,9 @@ import org.apache.spark.sql.functions._
   * trajectories are deterministic across engines, partitionings, and
   * runs — the property the q200/q202 DuckDB oracles check.
   *
-  * Transient caches are scoped to each call (unpersisted before
-  * return) — unlike the long-lived CurationOps pins, nothing is
-  * retained.
+  * Transient caches are scoped to each call (unpersisted in a
+  * `finally`, on return and on failure) — unlike the long-lived
+  * CurationOps pins, nothing is retained.
   */
 object SelectionOps {
 
@@ -66,35 +66,33 @@ object SelectionOps {
       .select(col(idCol).cast("long").as("id"),
         fixedVec(col(vecCol)).as("v7"))
       .cache()
-    if (f.count() == 0L) { // pin: scanned once per round
-      f.unpersist(blocking = false)
-      return Seq.empty
-    }
-    def distTo(center: Seq[Long]) =
-      sqDist(col("v7"), typedLit(center))
-    val seed = f.orderBy(col("id")).limit(1).collect()(0)
-    var centerV = seed.getSeq[Long](1)
-    val picked = scala.collection.mutable.ArrayBuffer(
-      Pick(0L, seed.getLong(0), 0L))
-    var dmin = f.select(col("id"), col("v7"),
-      distTo(centerV).as("dmin")).cache()
-    dmin.count()
-    for (r <- 1 until k) {
-      val far = dmin.orderBy(col("dmin").desc, col("id").asc).limit(1)
-        .collect()(0)
-      centerV = far.getSeq[Long](1)
-      picked += Pick(r.toLong, far.getLong(0), far.getLong(2))
-      if (r < k - 1) { // the update after the final pick is unused
-        val next = dmin.select(col("id"), col("v7"),
-          least(col("dmin"), distTo(centerV)).as("dmin")).cache()
-        next.count()
-        dmin.unpersist(blocking = false)
-        dmin = next
-      }
-    }
-    dmin.unpersist(blocking = false)
-    f.unpersist(blocking = false)
-    picked.toSeq
+    try {
+      if (f.count() == 0L) return Seq.empty // pin: scanned once per round
+      def distTo(center: Seq[Long]) =
+        sqDist(col("v7"), typedLit(center))
+      val seed = f.orderBy(col("id")).limit(1).collect()(0)
+      var centerV = seed.getSeq[Long](1)
+      val picked = scala.collection.mutable.ArrayBuffer(
+        Pick(0L, seed.getLong(0), 0L))
+      var dmin = f.select(col("id"), col("v7"),
+        distTo(centerV).as("dmin")).cache()
+      try {
+        dmin.count()
+        for (r <- 1 until k) {
+          val far = dmin.orderBy(col("dmin").desc, col("id").asc).limit(1)
+            .collect()(0)
+          centerV = far.getSeq[Long](1)
+          picked += Pick(r.toLong, far.getLong(0), far.getLong(2))
+          if (r < k - 1) { // the update after the final pick is unused
+            val next = dmin.select(col("id"), col("v7"),
+              least(col("dmin"), distTo(centerV)).as("dmin")).cache()
+            try next.count()
+            finally { dmin.unpersist(blocking = false); dmin = next }
+          }
+        }
+      } finally dmin.unpersist(blocking = false)
+      picked.toSeq
+    } finally f.unpersist(blocking = false)
   }
 
   /** Assign every vector to its nearest center (tie → smaller center
@@ -179,35 +177,34 @@ object SelectionOps {
         TextOps.tokens(col(textCol)).as("toks"))
       .select(col("id"), explode(DedupOps.shingles(col("toks"), n)).as("sh"))
       .cache()
-    sh.count() // pin: scanned once per round
-    val spark = docs.sparkSession
-    val picked = scala.collection.mutable.ArrayBuffer.empty[Pick]
-    val covered = scala.collection.mutable.HashSet.empty[String]
-    for (r <- 0 until k) {
-      val fresh =
-        if (covered.isEmpty) sh
-        else if (covered.size <= COVERED_LITERAL_MAX)
-          sh.filter(!col("sh").isInCollection(covered))
-        else {
-          import spark.implicits._
-          sh.join(broadcast(covered.toSeq.toDF("sh")), Seq("sh"),
-            "left_anti")
-        }
-      val top = fresh.groupBy(col("id"))
-        .agg(count(lit(1)).as("gain"))
-        .orderBy(col("gain").desc, col("id").asc).limit(1)
-        .collect()
-      if (top.isEmpty) { // corpus fully covered before k rounds
-        sh.unpersist(blocking = false)
-        return picked.toSeq
+    try {
+      sh.count() // pin: scanned once per round
+      val spark = docs.sparkSession
+      val picked = scala.collection.mutable.ArrayBuffer.empty[Pick]
+      val covered = scala.collection.mutable.HashSet.empty[String]
+      for (r <- 0 until k) {
+        val fresh =
+          if (covered.isEmpty) sh
+          else if (covered.size <= COVERED_LITERAL_MAX)
+            sh.filter(!col("sh").isInCollection(covered))
+          else {
+            import spark.implicits._
+            sh.join(broadcast(covered.toSeq.toDF("sh")), Seq("sh"),
+              "left_anti")
+          }
+        val top = fresh.groupBy(col("id"))
+          .agg(count(lit(1)).as("gain"))
+          .orderBy(col("gain").desc, col("id").asc).limit(1)
+          .collect()
+        if (top.isEmpty) // corpus fully covered before k rounds
+          return picked.toSeq
+        val pickedId = top(0).getLong(0)
+        picked += Pick(r.toLong, pickedId, top(0).getLong(1))
+        if (r < k - 1)
+          covered ++= sh.filter(col("id") === pickedId)
+            .select(col("sh")).collect().map(_.getString(0))
       }
-      val pickedId = top(0).getLong(0)
-      picked += Pick(r.toLong, pickedId, top(0).getLong(1))
-      if (r < k - 1)
-        covered ++= sh.filter(col("id") === pickedId)
-          .select(col("sh")).collect().map(_.getString(0))
-    }
-    sh.unpersist(blocking = false)
-    picked.toSeq
+      picked.toSeq
+    } finally sh.unpersist(blocking = false)
   }
 }

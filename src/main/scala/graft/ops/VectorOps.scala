@@ -1,7 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField,
+  StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** Dense-vector arithmetic over `array<float>` embedding columns as
   * native higher-order expressions (no UDF, no MLlib Vector boxing —
@@ -215,109 +219,137 @@ object VectorOps {
     *
     * Everything replays in the oracle:
     *  - seeding is hash-rank deterministic (md5-prefix64 of
-    *    "pqseed:"+vec_id, vec_id tie-break) — the k seed vectors'
-    *    subvectors initialize every subspace's centroids, no RNG;
-    *  - assignment distance is exact integer Σ(x−v)² (e6 components →
-    *    per-term ≤ 4·10¹², subDim-term sums far under 2⁵³), argmin
-    *    tie-breaks on centroid id;
+    *    "pqseed:"+vec_id, vec_id tie-break) — the first k vectors of
+    *    that ordering initialize every subspace's centroids, no RNG;
+    *  - training sees only the trainN smallest vectors of the SAME
+    *    ordering (the faiss recipe: quantizers train on a bounded
+    *    sample, the full corpus is only assigned), so seeds ⊂ sample
+    *    and the sample's DuckDB twin is one `rn <= trainN` predicate
+    *    over the seedrank CTE; trainN = MaxValue (or ≥ n) trains on
+    *    the full corpus;
+    *  - assignment is [[pqAssign]]'s exact integer Σ(x−v)² argmin
+    *    with its centroid-id tie-break;
     *  - the centroid update is floor-division in BOTH engines: Spark
     *    `div` truncates toward zero while DuckDB `//` floors, so the
     *    mean is computed on a +2·10⁶-per-element SHIFTED numerator
-    *    (unit-vector components are ≥ −10⁶, so the shifted sum is
-    *    non-negative and truncation ≡ floor), then unshifted;
+    *    (e6 unit-vector components and their residuals are ≥ −2·10⁶,
+    *    so the shifted sum is non-negative and truncation ≡ floor),
+    *    then unshifted;
     *  - a centroid whose cluster empties keeps its previous value.
-    * Output: (sub, c, j, v). Lloyd is k·m small aggregates per round
-    * over a frame of |corpus|·DIM rows — linear passes, the k×m×subDim
-    * codebook (a few KB) broadcasts everywhere it joins.
+    *
+    * Plan shape: the training sample is gathered ONCE into j-ordered
+    * array rows and cached for the call; the codebook (k·m·subDim
+    * longs) stays on the driver. A round is one small aggregate:
+    * broadcast the codebook as a local leaf, fold every row to its
+    * nearest centroid, `groupBy(sub, c)` for the count and the per-j
+    * sums, collect the ≤ k·m rows, and form the new means on the
+    * driver with exact (overflow-checked) long arithmetic. No plan
+    * grows with `rounds`: the result is one LocalRelation
+    * (sub, c, j, v), all LONG, where j is the position in the
+    * subvector — j itself for a [[pqSubspaces]] frame.
     */
-  def pqCodebook(xs: org.apache.spark.sql.DataFrame, k: Int,
-      rounds: Int,
-      trainN: Long = Long.MaxValue): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def pqCodebook(xs: DataFrame, k: Int, rounds: Int,
+      trainN: Long = Long.MaxValue): DataFrame = {
     require(trainN >= k,
       s"trainN=$trainN must cover the $k seeds")
-    // the deterministic hash-rank TRAINING SAMPLE (round 13, the
-    // faiss recipe: quantizers train on a bounded sample — default
-    // max_points_per_centroid = 256 — and the full corpus is only
-    // ASSIGNED, one broadcast pass): the trainN smallest (hash, id)
-    // rows of the SAME "pqseed:" ordering the seeds cut from, so
-    // seeds ⊂ sample by construction and the sample's DuckDB twin is
-    // one `rn <= trainN` predicate over the seedrank CTE every
-    // trained-quantizer oracle already builds. trainN = MaxValue (or
-    // ≥ n) trains on the full corpus, bit-identically to the
-    // historical behavior. Everything is a global top-N
-    // (TakeOrderedAndProject — no full sort at corpus scale); the
-    // rank-assignment window then runs over ≤ trainN rows.
+    val spark = xs.sparkSession
     val ranked = xs.select(col("vec_id")).distinct()
-      .withColumn("h", graft.ops.TextOps.tokenHashReference(
+      .withColumn("h", TextOps.tokenHashReference(
         concat(lit("pqseed:"), col("vec_id").cast("string"))))
-    val sampling = trainN < Int.MaxValue.toLong
-    val sample = ranked.orderBy(col("h"), col("vec_id"))
-      .limit(if (sampling) trainN.toInt else k)
-    val seeds = sample
+      .orderBy(col("h"), col("vec_id"))
+    val seeds = ranked.limit(k).select(col("vec_id").cast("long"))
+      .collect().map(_.getLong(0)).toSeq
+    var book = collectBook(xs.filter(col("vec_id").isin(seeds: _*))
       .withColumn("c",
-        row_number().over(Window.orderBy(col("h"), col("vec_id"))) - 1)
-      .filter(col("c") < k)
-      .select(col("vec_id"), col("c").cast("long").as("c"))
-    // the Lloyd frame: sample rows only — training cost is bounded by
-    // trainN regardless of corpus size (the full-corpus Lloyd at
-    // k ≈ √n was O(n^1.5) total, the measured sf10 build blocker)
-    val xsT =
-      if (sampling)
-        xs.join(broadcast(sample.select(col("vec_id"))), Seq("vec_id"))
-      else xs
-    var cent = xs.join(broadcast(seeds), Seq("vec_id"))
-      .select(col("sub"), col("c"), col("j"), col("x").as("v"))
-    for (_ <- 1 to rounds) {
-      val assigned = pqAssign(xsT, cent)
-      val updated = assigned.join(xsT, Seq("vec_id", "sub"))
-        .groupBy(col("sub"), col("c"), col("j"))
-        .agg(expr("(sum(x) + count(1) * 2000000) div count(1) - 2000000")
-          .as("nv"))
-      cent = cent.join(updated, Seq("sub", "c", "j"), "left")
-        .select(col("sub"), col("c"), col("j"),
-          coalesce(col("nv"), col("v")).as("v"))
+        array_position(typedLit(seeds), col("vec_id").cast("long")) - 1)
+      .withColumnRenamed("x", "v"))
+    if (rounds > 0 && book.nonEmpty) {
+      val widths = book.values.map(_.length).toSet
+      require(widths.size == 1,
+        s"subspaces must share one width, got ${widths.mkString(",")}")
+      val sums = (0 until widths.head).map(i => sum(col("xa").getItem(i)))
+      // the Lloyd frame: sample rows only, so training cost is bounded
+      // by trainN whatever the corpus size
+      val xsT =
+        if (trainN < Int.MaxValue.toLong)
+          xs.join(broadcast(ranked.limit(trainN.toInt)
+            .select(col("vec_id"))), Seq("vec_id"))
+        else xs
+      val g = gather(xsT).cache()
+      try {
+        for (_ <- 1 to rounds)
+          // assigned clusters get their new mean, empty ones keep theirs
+          book ++= nearest(g, codebookLeaf(spark, book))
+            .groupBy(col("sub"), col("c"))
+            .agg(count(lit(1)), sums: _*)
+            .collect()
+            .map { r =>
+              (r.getLong(0), r.getLong(1)) -> Array.tabulate(sums.size)(i =>
+                shiftedMean(r.getLong(3 + i), r.getLong(2)))
+            }
+      } finally g.unpersist()
     }
-    cent
+    val rows = for {
+      ((sub, c), v) <- book.toSeq
+      (x, j) <- v.zipWithIndex
+    } yield Row(sub, c, j.toLong, x)
+    spark.createDataFrame(rows.asJava, StructType(
+      Seq("sub", "c", "j", "v").map(StructField(_, LongType, false))))
   }
 
-  /** Nearest-centroid assignment per (vec, subspace): exact integer
-    * squared-L2 argmin with centroid-id tie-break → (vec_id, sub, c).
-    * After training this IS the PQ encoder (m codes per vector).
-    *
-    * Plan shape (round 13): each (vector, subspace) is gathered into
-    * ONE j-ordered array row, each subspace's whole codebook into ONE
-    * broadcast row of k j-ordered centroid arrays (c ascending), and
-    * the argmin resolves INSIDE a single row-local fold — exact
-    * integer Σ(x−v)² per centroid, strict `<` so the FIRST (= lowest
-    * c, since the array is c-sorted) minimum wins: the identical
-    * (dd asc, c asc) tie-break the historical implementation ranked
-    * with a window, so results are bit-for-bit unchanged and no
-    * oracle moves. What changes is the cost: the old plan joined the
-    * n·DIM lifted frame against all k centroids and windowed the
-    * n·m·k distance rows — at the sf10 point (200k vectors,
-    * k_pq = 256) that is a ~3.3 B-row assignment join with a 9.8 GB
-    * mid-flight shuffle PER Lloyd pass, the measured 100 TB build
-    * blocker. This plan shuffles only the n·m gathered subvector
-    * rows, broadcasts the k·m·subDim codebook (≤ 16 K longs at the
-    * largest shipped budget), and burns the k·subDim arithmetic as
-    * row-local expression work — O(n·m) rows end to end, no
-    * per-centroid row explosion anywhere.
+  private val SHIFT = 2000000L
+
+  /** `(Σx + n·SHIFT) div n − SHIFT` — the oracle's centroid update;
+    * Scala `/` truncates exactly as Spark `div` does, and the exact
+    * ops throw where an ANSI Spark expression would.
     */
-  def pqAssign(xs: org.apache.spark.sql.DataFrame,
-      cent: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val sv = xs.groupBy(col("vec_id"), col("sub"))
+  private def shiftedMean(s: Long, n: Long): Long =
+    Math.subtractExact(
+      Math.addExact(s, Math.multiplyExact(n, SHIFT)) / n, SHIFT)
+
+  /** A long-form (sub, c, j, v) codebook frame collected into the
+    * driver-held form: (sub, c) → j-ordered centroid.
+    */
+  private def collectBook(cent: DataFrame): Map[(Long, Long), Array[Long]] =
+    cent.select(Seq("sub", "c", "j", "v").map(col(_).cast("long")): _*)
+      .collect()
+      .groupBy(r => (r.getLong(0), r.getLong(1)))
+      .map { case (key, rs) =>
+        key -> rs.sortBy(_.getLong(2)).map(_.getLong(3))
+      }
+
+  /** A driver-held codebook as one local (sub, cbs) leaf: per
+    * subspace the c-ascending array of (c, j-ordered centroid)
+    * structs.
+    */
+  private def codebookLeaf(spark: SparkSession,
+      book: Map[(Long, Long), Array[Long]]): DataFrame = {
+    val centroid = StructType(Seq(StructField("c", LongType, false),
+      StructField("cv", ArrayType(LongType, false), false)))
+    spark.createDataFrame(
+      book.groupBy(_._1._1).toSeq.map { case (sub, cs) =>
+        Row(sub, cs.toSeq.sortBy(_._1._2)
+          .map { case ((_, c), v) => Row(c, v.toSeq) })
+      }.asJava,
+      StructType(Seq(StructField("sub", LongType, false),
+        StructField("cbs", ArrayType(centroid, false), false))))
+  }
+
+  /** Each (vector, subspace) of a (vec_id, sub, j, x) frame as ONE
+    * j-ordered array row (vec_id, sub, xa).
+    */
+  private def gather(xs: DataFrame): DataFrame =
+    xs.groupBy(col("vec_id"), col("sub"))
       .agg(transform(
         array_sort(collect_list(struct(col("j"), col("x")))),
         t => t.getField("x")).as("xa"))
-    val cb = cent.groupBy(col("sub"), col("c"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("j"), col("v")))),
-        t => t.getField("v")).as("cv"))
-      .groupBy(col("sub"))
-      .agg(array_sort(collect_list(struct(col("c"), col("cv"))))
-        .as("cbs"))
+
+  /** Gathered rows joined to their subspace's (sub, cbs) codebook row
+    * with the nearest centroid `c` resolved INSIDE one row-local fold:
+    * exact integer Σ(x−v)² per centroid, strict `<` so the FIRST (=
+    * lowest c, since `cbs` is c-sorted) minimum wins.
+    */
+  private def nearest(g: DataFrame, cbs: DataFrame): DataFrame = {
     val best = aggregate(col("cbs"),
       struct(lit(Long.MaxValue).as("dd"), lit(-1L).as("c")),
       (acc, ce) => {
@@ -329,7 +361,26 @@ object VectorOps {
           struct(dd.as("dd"), ce.getField("c").as("c")))
           .otherwise(acc)
       })
-    sv.join(broadcast(cb), Seq("sub"))
-      .select(col("vec_id"), col("sub"), best.getField("c").as("c"))
+    g.join(broadcast(cbs), Seq("sub"))
+      .withColumn("c", best.getField("c"))
   }
+
+  /** Nearest-centroid assignment per (vec, subspace): exact integer
+    * squared-L2 argmin with centroid-id tie-break → (vec_id, sub, c).
+    * After training this IS the PQ encoder (m codes per vector).
+    *
+    * Plan shape: the codebook (≤ k·m·subDim longs, 16 K at the
+    * largest shipped budget) is collected to the driver and broadcast
+    * as ONE local leaf of one row per subspace, holding its k
+    * j-ordered centroid arrays (c ascending); each (vector, subspace)
+    * is gathered into ONE j-ordered array row, and the argmin
+    * resolves inside a single row-local fold — the same kernel every
+    * [[pqCodebook]] round runs. It shuffles only the n·m gathered
+    * subvector rows and burns the k·subDim arithmetic as row-local
+    * expression work — O(n·m) rows end to end, no per-centroid row
+    * explosion anywhere.
+    */
+  def pqAssign(xs: DataFrame, cent: DataFrame): DataFrame =
+    nearest(gather(xs), codebookLeaf(xs.sparkSession, collectBook(cent)))
+      .select(col("vec_id"), col("sub"), col("c"))
 }

@@ -532,12 +532,15 @@ object Corpus extends QueryPack {
     // the same code is right at any scale.
     val tok = positionedTokens(docs(s, d))
       .repartition(col("doc_id")).cache()
-    tok.count()
-    val pairs = windowCooccurrence(tok, textrankWindow)
-    val ranked = GraphOps.weightedPageRank(pairs, "w1", "w2", "w", iters = 3)
-    tok.unpersist()
-    ranked.select(col("u").as("word"), col("score"))
-      .orderBy(col("score").desc, col("word").asc)
+    // the ranking is checkpointed, so the select below no longer
+    // reads `tok`
+    try {
+      tok.count()
+      val pairs = windowCooccurrence(tok, textrankWindow)
+      GraphOps.weightedPageRank(pairs, "w1", "w2", "w", iters = 3)
+        .select(col("u").as("word"), col("score"))
+        .orderBy(col("score").desc, col("word").asc)
+    } finally tok.unpersist()
   }
 
   /** TextRank co-occurrence window, in raw-token positions (stopwords

@@ -66,6 +66,32 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(got.size === 64 && got.values.forall(_ == 0L))
   }
 
+  test("per-round checkpoints keep the CC result flat in rounds") {
+    // the lazy-checkpoint invariant: each round's sig() aggregate
+    // materializes that round's localCheckpoint, so the labels read
+    // one checkpointed leaf with a cut lineage however many rounds ran
+    val sq = spark
+    import sq.implicits._
+    def lineage(rdd: org.apache.spark.rdd.RDD[_]): Int =
+      1 + (rdd.dependencies.map(d => lineage(d.rdd)) :+ 0).max
+    def shape(nodes: Long): (Int, Int, Seq[Int]) = {
+      val path = (0L until nodes - 1).map(i => (i, i + 1)).toDF("a", "b")
+      val (labels, rounds) =
+        GraphOps.connectedComponentsRounds(path, "a", "b")
+      val plan = labels.queryExecution.analyzed
+      (rounds, plan.collect { case p => p }.size, plan.collectLeaves().map {
+        case l: org.apache.spark.sql.execution.LogicalRDD => lineage(l.rdd)
+        case other => fail(s"labels read a non-checkpoint leaf: $other")
+      })
+    }
+    val (shortRounds, shortPlan, shortLineage) = shape(3)
+    val (longRounds, longPlan, longLineage) = shape(512)
+    assert(shortRounds === 2)
+    assert(longRounds >= 5, s"a 512-node path ran $longRounds rounds")
+    assert(longPlan === shortPlan)
+    assert(longLineage === shortLineage)
+  }
+
   test("hub-heavy graph (boilerplate duplicated widely) converges fast") {
     // the shape a viral near-dup produces: one hub connected to 100
     // docs, chained to a second hub's star — a high-degree node must

@@ -2,8 +2,10 @@ package graft.ops
 
 import graft.core.{GraftSession, Tables}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fit-once/serve-many contract of the persisted ANN-index layer:
@@ -40,6 +42,63 @@ class IndexStoreSpec extends AnyFunSuite {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** The legacy assignment plan (round ≤ 12): join every lifted row
+    * against all k centroids, window-rank the n·m·k distance rows —
+    * kept as the executable spec of the assignment SEMANTICS the
+    * row-local fold must reproduce exactly (same exact integer
+    * Σ(x−v)², same (dd asc, c asc) tie-break).
+    */
+  private def legacyAssign(xs: DataFrame, cent: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val dist = xs.join(broadcast(cent), Seq("sub", "j"))
+      .groupBy(col("vec_id"), col("sub"), col("c"))
+      .agg(sum((col("x") - col("v")) * (col("x") - col("v"))).as("dd"))
+    dist.withColumn("rn", row_number().over(
+        Window.partitionBy(col("vec_id"), col("sub"))
+          .orderBy(col("dd"), col("c"))))
+      .filter(col("rn") === 1)
+      .select(col("vec_id"), col("sub"), col("c"))
+  }
+
+  /** The legacy Lloyd trainer: every round unrolled into one lazy plan
+    * (assign + join + aggregate + left join per round), seeds cut by a
+    * global row_number over the hash-rank sample — kept as the
+    * executable spec of the training SEMANTICS the driver-held
+    * trainer must reproduce bit for bit.
+    */
+  private def legacyCodebook(xs: DataFrame, k: Int, rounds: Int,
+      trainN: Long = Long.MaxValue): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val ranked = xs.select(col("vec_id")).distinct()
+      .withColumn("h", TextOps.tokenHashReference(
+        concat(lit("pqseed:"), col("vec_id").cast("string"))))
+    val sampling = trainN < Int.MaxValue.toLong
+    val sample = ranked.orderBy(col("h"), col("vec_id"))
+      .limit(if (sampling) trainN.toInt else k)
+    val seeds = sample
+      .withColumn("c",
+        row_number().over(Window.orderBy(col("h"), col("vec_id"))) - 1)
+      .filter(col("c") < k)
+      .select(col("vec_id"), col("c").cast("long").as("c"))
+    val xsT =
+      if (sampling)
+        xs.join(broadcast(sample.select(col("vec_id"))), Seq("vec_id"))
+      else xs
+    var cent = xs.join(broadcast(seeds), Seq("vec_id"))
+      .select(col("sub"), col("c"), col("j"), col("x").as("v"))
+    for (_ <- 1 to rounds) {
+      val assigned = legacyAssign(xsT, cent)
+      val updated = assigned.join(xsT, Seq("vec_id", "sub"))
+        .groupBy(col("sub"), col("c"), col("j"))
+        .agg(expr("(sum(x) + count(1) * 2000000) div count(1) - 2000000")
+          .as("nv"))
+      cent = cent.join(updated, Seq("sub", "c", "j"), "left")
+        .select(col("sub"), col("c"), col("j"),
+          coalesce(col("nv"), col("v")).as("v"))
+    }
+    cent
+  }
+
   test("trained codebook artifact equals the direct Lloyd derivation") {
     val xs = VectorOps.pqSubspaces(lifted, subDim = 8)
     val direct = sortedRows(VectorOps.pqCodebook(xs, k = 16, rounds = 2))
@@ -67,22 +126,6 @@ class IndexStoreSpec extends AnyFunSuite {
 
   test("round-13 gather-argmin assignment equals the historical " +
       "exploded-join + window rank, bit for bit") {
-    // the legacy plan (round ≤ 12): join every lifted row against all
-    // k centroids, window-rank the n·m·k distance rows — kept here as
-    // the executable spec of the assignment SEMANTICS the new
-    // row-local fold must reproduce exactly (same exact integer
-    // Σ(x−v)², same (dd asc, c asc) tie-break)
-    def legacyAssign(xs: DataFrame, cent: DataFrame): DataFrame = {
-      import org.apache.spark.sql.expressions.Window
-      val dist = xs.join(broadcast(cent), Seq("sub", "j"))
-        .groupBy(col("vec_id"), col("sub"), col("c"))
-        .agg(sum((col("x") - col("v")) * (col("x") - col("v"))).as("dd"))
-      dist.withColumn("rn", row_number().over(
-          Window.partitionBy(col("vec_id"), col("sub"))
-            .orderBy(col("dd"), col("c"))))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("sub"), col("c"))
-    }
     // both the PQ frame (m=8) and the IMI half frame (m=2) — the two
     // subspace geometries every trained quantizer in the engine uses
     for (subDim <- Seq(8, 32)) {
@@ -92,6 +135,56 @@ class IndexStoreSpec extends AnyFunSuite {
         sortedRows(legacyAssign(xs, cent)),
         s"assignment drift at subDim=$subDim")
     }
+  }
+
+  test("driver-held Lloyd rounds equal the unrolled legacy plan, " +
+      "bit for bit") {
+    def same(xs: DataFrame, rounds: Int, trainN: Long, what: String) = {
+      val got = sortedRows(VectorOps.pqCodebook(xs, 16, rounds, trainN))
+      assert(got.nonEmpty, what)
+      assert(got === sortedRows(legacyCodebook(xs, 16, rounds, trainN)),
+        s"codebook drift at $what")
+    }
+    // the full-space IVF (m=1), IMI half (m=2) and PQ (m=8) geometries
+    for (subDim <- Seq(8, 32, 64); rounds <- Seq(0, 1, 2, 4))
+      same(VectorOps.pqSubspaces(lifted, subDim), rounds, Long.MaxValue,
+        s"subDim=$subDim rounds=$rounds")
+    // a biting hash-rank training sample (125 of 500 vectors)
+    for (rounds <- Seq(1, 4))
+      same(VectorOps.pqSubspaces(lifted, 8), rounds, 125L,
+        s"trainN=125 rounds=$rounds")
+    // the IMI residual frame: components go negative, so the shifted
+    // numerator and the truncating division both get exercised
+    val rxs = graft.queries.Similarity.imiResidualSubspaces(spark, dir, 4)
+    assert(rxs.agg(min(col("x"))).head().getLong(0) < 0L)
+    same(rxs, 2, Long.MaxValue, "residual subDim=8 rounds=2")
+  }
+
+  test("a trained codebook is one local leaf whatever the round count") {
+    val xs = VectorOps.pqSubspaces(lifted, subDim = 8)
+    for (rounds <- Seq(1, 4)) {
+      val plan = VectorOps.pqCodebook(xs, 16, rounds).queryExecution.analyzed
+      assert(plan.isInstanceOf[LocalRelation],
+        s"rounds=$rounds planned:\n$plan")
+      assert(plan.output.map(a => a.name -> a.dataType) ===
+        Seq("sub", "c", "j", "v").map(_ -> LongType))
+    }
+  }
+
+  test("pqCodebook releases its gathered frame on return and on failure") {
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val xs = VectorOps.pqSubspaces(lifted, subDim = 8)
+    VectorOps.pqCodebook(xs, 16, 2)
+    assert(cacheManager.isEmpty, "a returning call left its frame cached")
+    // e12-scale components overflow Σ(x−v)² in the round's long
+    // arithmetic, which ANSI mode turns into an error mid-round
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    val huge = xs.withColumn("x", col("x") * 1000000L)
+    val err = intercept[Exception](VectorOps.pqCodebook(huge, 16, 2))
+    assert(String.valueOf(err.getMessage).toLowerCase.contains("overflow"),
+      err.toString)
+    assert(cacheManager.isEmpty, "a failing call left its frame cached")
   }
 
   test("sampled training: covering sample is bit-identical to full " +
