@@ -15,7 +15,12 @@
 # the script prints, per end-to-end metric, every pair (base, new,
 # new/base) and a summary: both medians, their ratio, the base runs'
 # interquartile range relative to their median, and how many pairs the
-# new side won (lower is better for every end-to-end metric).
+# new side won (each metric's better direction and bound are read from
+# BENCHMARK.json, read-only here). Each metric ends with two verdicts:
+# `claim` is met when the new side wins at least 9 of every 10 pairs
+# and its median is better than the base's by more than the base IQR;
+# `regression` is none while the new median stays within the metric's
+# relative bound.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
@@ -59,10 +64,11 @@ for seed in "$@"; do
   i=$((i + 1))
 done
 
-python3 - "$results" "$@" <<'EOF'
-import json, statistics, sys
+python3 - "$root/BENCHMARK.json" "$results" "$@" <<'EOF'
+import json, math, statistics, sys
 
-results, seeds = sys.argv[1], sys.argv[2:]
+spec, results, seeds = sys.argv[1], sys.argv[2], sys.argv[3:]
+declared = {m["name"]: m for m in json.load(open(spec))["end_to_end"]}
 runs = {side: [json.load(open(f"{results}/{side}-{s}.json")) for s in seeds]
         for side in ("base", "new")}
 for side, rs in runs.items():
@@ -84,8 +90,18 @@ for name in runs["base"][0]["metrics"]:
         print(f"  {s:>4} {x:9.3f} {y:9.3f} {y / x:10.3f}")
     mb, mn = statistics.median(b), statistics.median(n)
     q1, q3 = quartiles(b)
-    wins = sum(y < x for x, y in zip(b, n))
+    # +1 when lower is better, so sign * (base - new) > 0 is a gain
+    sign = 1 if declared[name]["better"] == "lower" else -1
+    wins = sum(sign * (x - y) > 0 for x, y in zip(b, n))
     print(f"  median {mb:9.3f} {mn:9.3f} {mn / mb:10.3f}   "
           f"base IQR/median {(q3 - q1) / mb:.3f}   "
           f"new wins {wins}/{len(seeds)}")
+    claim = (wins >= math.ceil(0.9 * len(seeds))
+             and sign * (mb - mn) > q3 - q1)
+    print(f"  claim: {'met' if claim else 'not met'} "
+          f"(wins >= 9/10 of pairs and median gain > base IQR)")
+    bound = declared[name]["bound"]
+    worse = sign * (mn - mb) / mb
+    print(f"  regression: {'EXCEEDS' if worse > bound else 'none'} "
+          f"(new median {worse:+.3f} of base, bound {bound})")
 EOF

@@ -26,15 +26,17 @@ object CacheScope {
     c
   }
 
-  /** Cache, record and materialize with an eager count: for a frame
-    * that feeds both sides of a self-join or several consumers, since
-    * two concurrent stage scans race an unmaterialized cache and both
-    * recompute. Recorded before the count, so a failing count is
-    * still released.
+  /** Cache, record and materialize eagerly: for a frame that feeds
+    * both sides of a self-join or several consumers, since two
+    * concurrent stage scans race an unmaterialized cache and both
+    * recompute. The action is a write to the `noop` sink, which fills
+    * every partition in one stage (a `count()` adds a final
+    * single-partition aggregate, one more job under AQE). Recorded
+    * before it runs, so a failing materialization is still released.
     */
   def pin[T](ds: Dataset[T]): Dataset[T] = {
     val c = cache(ds)
-    c.count()
+    c.write.format("noop").mode("overwrite").save()
     c
   }
 

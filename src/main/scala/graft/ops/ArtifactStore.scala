@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StructType
 
 /** Write-once parquet artifact registry shared by the curation APIs
   * ([[CurationOps.pairsTable]]/`labelsTable`, [[SemanticOps]] twins):
@@ -26,8 +27,12 @@ import org.apache.spark.sql.DataFrame
   */
 private[graft] object ArtifactStore {
 
+  /** key → (path, readback schema); the schema is known when this
+    * session wrote the artifact, None for a durable-cache hit (read
+    * with footer inference) and for a [[pathOnce]] tree.
+    */
   private val artifacts =
-    scala.collection.mutable.Map.empty[String, String]
+    scala.collection.mutable.Map.empty[String, (String, Option[StructType])]
 
   /** Session-unique base dir (override: spark.graft.artifactDir). */
   private lazy val artifactRunId =
@@ -113,33 +118,57 @@ private[graft] object ArtifactStore {
     * callers that join on it rely on Spark's UnwrapCastInBinary-
     * Comparison keeping pruning intact under the int/long coercion,
     * and callers that filter should compare against int literals.
+    *
+    * A just-written artifact is read back with the schema it was
+    * written with, which skips the parquet footer-inference job a
+    * plain `read.parquet` launches. Partition columns are left out of
+    * that schema, so Spark still infers them from the directory names
+    * (driver-side, no job) and appends them last, as inference does.
     */
   def materializedOnce(df: DataFrame, key: String,
       partitionBy: Seq[String] = Nil)
-      (build: => DataFrame): DataFrame = {
+      (build: => DataFrame): DataFrame =
+    materializedTogether(df, Seq(key), partitionBy)(save =>
+      save(Seq(build))).head
+
+  /** [[materializedOnce]] for one derivation that yields several
+    * artifacts: when any of `keys` is neither registered nor committed
+    * under a durable dir, `build` runs once and hands `save` one frame
+    * per key, in order, while the frames' inputs are live; `save`
+    * writes those not yet stored.
+    */
+  def materializedTogether(df: DataFrame, keys: Seq[String],
+      partitionBy: Seq[String] = Nil)
+      (build: (Seq[DataFrame] => Unit) => Unit): Seq[DataFrame] = {
     val spark = df.sparkSession
     val durableBase = spark.conf.getOption("spark.graft.artifactDir")
-    val path = synchronized {
-      artifacts.getOrElseUpdate(key, {
-        val base = durableBase.getOrElse(sys.props("java.io.tmpdir") +
-          s"/graft-artifacts-$artifactRunId")
-        val p = s"$base/$key"
-        // a pinned artifactDir is a durable cross-session cache: a
-        // committed (_SUCCESS) artifact under the same content-
-        // addressed key is the same derivation — read it back, skip
-        // the build entirely
-        val committed = durableBase.isDefined && {
-          val marker = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
-          marker.getFileSystem(spark.sessionState.newHadoopConf())
-            .exists(marker)
+    val base = durableBase.getOrElse(sys.props("java.io.tmpdir") +
+      s"/graft-artifacts-$artifactRunId")
+    val stored = synchronized {
+      // a pinned artifactDir is a durable cross-session cache: a
+      // committed (_SUCCESS) artifact under the same content-
+      // addressed key is the same derivation — read it back, skip
+      // the build entirely
+      for (k <- keys if !artifacts.contains(k) && durableBase.isDefined) {
+        val marker = new org.apache.hadoop.fs.Path(s"$base/$k", "_SUCCESS")
+        if (marker.getFileSystem(spark.sessionState.newHadoopConf())
+            .exists(marker))
+          artifacts(k) = (s"$base/$k", None)
+      }
+      if (!keys.forall(artifacts.contains))
+        build { frames =>
+          for ((k, f) <- keys.zip(frames) if !artifacts.contains(k)) {
+            f.write.mode("overwrite").partitionBy(partitionBy: _*)
+              .parquet(s"$base/$k")
+            artifacts(k) = (s"$base/$k", Some(StructType(
+              f.schema.filterNot(c => partitionBy.contains(c.name)))))
+          }
         }
-        if (!committed)
-          build.write.mode("overwrite").partitionBy(partitionBy: _*)
-            .parquet(p)
-        p
-      })
+      keys.map(artifacts)
     }
-    spark.read.parquet(path)
+    stored.map { case (p, schema) =>
+      schema.fold(spark.read)(spark.read.schema(_)).parquet(p)
+    }
   }
 
   /** [[materializedOnce]] for PATH-shaped artifacts whose layout the
@@ -169,17 +198,17 @@ private[graft] object ArtifactStore {
           build(p)
           fs.create(marker, true).close()
         }
-        p
-      })
+        (p, None)
+      })._1
     }
   }
 
-  /** Drop the in-memory registry. No longer needed for staleness
-    * (the key's file snapshot handles in-place overwrites); kept as
-    * the explicit "fresh registry" hook for tests and for forcing a
-    * re-derive into a NEW tmp path. A durable `spark.graft.
-    * artifactDir` cache survives this by design — delete the
-    * directory itself to invalidate it.
+  /** Drop the in-memory registry (paths and written schemas). No
+    * longer needed for staleness (the key's file snapshot handles
+    * in-place overwrites); kept as the explicit "fresh registry" hook
+    * for tests and for forcing a re-derive into a NEW tmp path. A
+    * durable `spark.graft.artifactDir` cache survives this by design —
+    * delete the directory itself to invalidate it.
     */
   def clear(): Unit = synchronized { artifacts.clear() }
 
@@ -205,7 +234,7 @@ private[graft] object ArtifactStore {
         val fs = basePath.getFileSystem(spark.sessionState.newHadoopConf())
         if (!fs.exists(basePath)) Nil
         else {
-          val live = artifacts.values.toSet
+          val live = artifacts.values.map(_._1).toSet
           val cutoff = System.currentTimeMillis() - retainMs
           fs.listStatus(basePath).toSeq
             .filter(_.isDirectory)

@@ -84,34 +84,37 @@ object IndexStore {
   /** Trained codebook over a PQ subspace frame (vec_id, sub, j, x):
     * k centroids per subspace, `rounds` integer-exact Lloyd rounds
     * over the [[trainN]]-row hash-rank training sample
-    * ([[VectorOps.pqCodebook]]; `trainNOverride` > 0 pins an explicit
-    * sample size — q261's hash-gated twin proof). One full-space
-    * subspace = a trained IVF coarse quantizer; m subspaces = the PQ
-    * codebook. Output (sub, c, j, v), persisted once per (corpus, k,
-    * rounds, sample, subspace projection).
+    * (`trainNOverride` > 0 pins an explicit sample size — q261's
+    * hash-gated twin proof). One full-space subspace = a trained IVF
+    * coarse quantizer; m subspaces = the PQ codebook. Output
+    * (sub, c, j, v), persisted once per (corpus, k, rounds, sample,
+    * subspace projection) by the same build that writes [[codes]].
     */
   def codebook(xs: DataFrame, k: Int, rounds: Int,
-      trainNOverride: Long = -1L): DataFrame = {
-    val tN = if (trainNOverride > 0) trainNOverride else trainN(k)
-    ArtifactStore.materializedOnce(xs,
-      ArtifactStore.key(xs, "codebook", s"k$k-r$rounds${tTag(tN)}")) {
-      VectorOps.pqCodebook(xs, k, rounds, tN)
-    }
-  }
+      trainNOverride: Long = -1L): DataFrame =
+    quantizer(xs, k, rounds, trainNOverride).head
 
   /** Per-vector code assignment under the trained [[codebook]] —
-    * (vec_id, sub, c): the FULL corpus assigned in one broadcast
-    * pass (training itself saw only the sample). For the full-space
-    * quantizer this is the IVF cell membership table; for m
-    * subspaces it is the PQ code table (the compressed database a
-    * store actually keeps hot).
+    * (vec_id, sub, c) for the FULL corpus (training itself saw only
+    * the sample). For the full-space quantizer this is the IVF cell
+    * membership table; for m subspaces it is the PQ code table (the
+    * compressed database a store actually keeps hot).
     */
   def codes(xs: DataFrame, k: Int, rounds: Int,
-      trainNOverride: Long = -1L): DataFrame = {
+      trainNOverride: Long = -1L): DataFrame =
+    quantizer(xs, k, rounds, trainNOverride)(1)
+
+  /** [[codebook]] and [[codes]] from ONE [[VectorOps.pqQuantize]]
+    * build: neither artifact reads the other back.
+    */
+  private def quantizer(xs: DataFrame, k: Int, rounds: Int,
+      trainNOverride: Long): Seq[DataFrame] = {
     val tN = if (trainNOverride > 0) trainNOverride else trainN(k)
-    ArtifactStore.materializedOnce(xs,
-      ArtifactStore.key(xs, "codes", s"k$k-r$rounds${tTag(tN)}")) {
-      VectorOps.pqAssign(xs, codebook(xs, k, rounds, trainNOverride))
+    val params = s"k$k-r$rounds${tTag(tN)}"
+    ArtifactStore.materializedTogether(xs,
+      Seq("codebook", "codes").map(ArtifactStore.key(xs, _, params))) {
+      save => VectorOps.pqQuantize(xs, k, rounds, tN)((b, c) =>
+        save(Seq(b, c)))
     }
   }
 
@@ -178,14 +181,8 @@ object IndexStore {
       ArtifactStore.key(x, "ivfmembers",
         s"k$k-r$rounds-d$dim${tTag(trainN(k))}"),
       partitionBy = Seq("c")) {
-      val xs = VectorOps.pqSubspaces(x, dim)
-      val arrs = x.groupBy(col("vec_id"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("x")))),
-          t => t.getField("x").cast("double")).as("v"))
-        .withColumn("n2", VectorOps.dot(col("v"), col("v")).cast("long"))
-      codes(xs, k, rounds).select(col("vec_id"), col("c"))
-        .join(arrs, Seq("vec_id"))
+      codes(VectorOps.pqSubspaces(x, dim), k, rounds)
+        .select(col("vec_id"), col("c")).join(vectorRows(x), Seq("vec_id"))
     }
 
   /** THE count-scaled key-space resolution rule, shared by every
@@ -414,13 +411,16 @@ object IndexStore {
       val cells = codes(xs2, k1, rounds).groupBy(col("vec_id"))
         .agg((max(when(col("sub") === 0, col("c"))) * k1 +
           max(when(col("sub") === 1, col("c")))).as("cell"))
-      val arrs = x.groupBy(col("vec_id"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("x")))),
-          t => t.getField("x").cast("double")).as("v"))
-        .withColumn("n2", VectorOps.dot(col("v"), col("v")).cast("long"))
-      cells.join(arrs, Seq("vec_id"))
+      cells.join(vectorRows(x), Seq("vec_id"))
     }
+
+  /** A lifted frame's vectors reassembled: (vec_id, v, n2). */
+  private def vectorRows(x: DataFrame): DataFrame =
+    x.groupBy(col("vec_id"))
+      .agg(transform(
+        array_sort(collect_list(struct(col("dim"), col("x")))),
+        t => t.getField("x").cast("double")).as("v"))
+      .withColumn("n2", VectorOps.dot(col("v"), col("v")).cast("long"))
 
   /** Count-scaled cell resolution shared by the kNN-graph build and
     * its incremental maintenance (whose rebuild-equivalence proof

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -109,18 +109,6 @@ object VectorOps {
           .reduce(_ + _).as("bkey"))
     }: _*)
 
-  /** SQL mirror of one band's key (band `b`); expects the hyperplanes
-    * exposed as `__pl{j}` columns (CROSS JOIN of a planes CTE), as with
-    * [[lshBucketSql]].
-    */
-  def lshBandKeySql(v: String, b: Int, rowsPerBand: Int): String =
-    (0 until rowsPerBand)
-      .map { j =>
-        s"""(CASE WHEN round(${dotSql(v, s"__pl${b * rowsPerBand + j}")}, 6) > 0
-             THEN ${1L << j} ELSE 0 END)"""
-      }
-      .mkString("(", " + ", ")")
-
   /** FULL-RESOLUTION (16-bit) band keys as two stacked 8-bit sign
     * blocks: bit j < 8 of band b comes from plane b·8+j — exactly
     * [[lshBandKeys]](v, dim, bands, 8), so masking the key to r ≤ 8
@@ -210,11 +198,12 @@ object VectorOps {
     x.select(col("vec_id"), expr(s"dim div $subDim").as("sub"),
       (col("dim") % subDim).as("j"), col("x"))
 
-  /** Product-quantization codebook over the subspace frame: k
-    * centroids per subspace, trained with `rounds` integer-exact
-    * Lloyd iterations. The 16-64× compression layer a 10 B-vector
-    * store runs (faiss IndexPQ / IVF+PQ): each vector becomes m
-    * sub-codes of log2(k) bits, and serving scores against a
+  /** Product-quantization codebook AND code table over the subspace
+    * frame, from one build: k centroids per subspace trained with
+    * `rounds` integer-exact Lloyd iterations, then the full corpus
+    * encoded under the final codebook. The 16-64× compression layer a
+    * 10 B-vector store runs (faiss IndexPQ / IVF+PQ): each vector
+    * becomes m sub-codes of log2(k) bits, and serving scores against a
     * per-query distance table instead of the raw floats.
     *
     * Everything replays in the oracle:
@@ -225,10 +214,10 @@ object VectorOps {
     *    ordering (the faiss recipe: quantizers train on a bounded
     *    sample, the full corpus is only assigned), so seeds ⊂ sample
     *    and the sample's DuckDB twin is one `rn <= trainN` predicate
-    *    over the seedrank CTE; trainN = MaxValue (or ≥ n) trains on
-    *    the full corpus;
-    *  - assignment is [[pqAssign]]'s exact integer Σ(x−v)² argmin
-    *    with its centroid-id tie-break;
+    *    over the seedrank CTE; trainN ≥ n trains on the full corpus;
+    *  - assignment is the exact integer Σ(x−v)² argmin in
+    *    `Math.*Exact` long arithmetic (an overflow throws, as the ANSI
+    *    expression it replaced did), strict `<` so the lowest c wins;
     *  - the centroid update is floor-division in BOTH engines: Spark
     *    `div` truncates toward zero while DuckDB `//` floors, so the
     *    mean is computed on a +2·10⁶-per-element SHIFTED numerator
@@ -237,67 +226,79 @@ object VectorOps {
     *    then unshifted;
     *  - a centroid whose cluster empties keeps its previous value.
     *
-    * Plan shape: the training sample is gathered ONCE into j-ordered
-    * array rows and cached for the call; the codebook (k·m·subDim
-    * longs) stays on the driver. A round is one small aggregate:
-    * broadcast the codebook as a local leaf, fold every row to its
-    * nearest centroid, `groupBy(sub, c)` for the count and the per-j
-    * sums, collect the ≤ k·m rows, and form the new means on the
-    * driver with exact (overflow-checked) long arithmetic. No plan
-    * grows with `rounds`: the result is one LocalRelation
-    * (sub, c, j, v), all LONG, where j is the position in the
-    * subvector — j itself for a [[pqSubspaces]] frame.
+    * Plan shape: the frame is gathered ONCE into j-ordered array rows
+    * (vec_id, sub, xa), cached for the call; one collect ranks its
+    * vec_ids. The codebook (k·m·subDim longs) stays on the driver, and
+    * a round is ONE job: a `mapPartitions` over the cached rows, the
+    * codebook in its closure, returns per-(sub, c) counts and per-j
+    * sums that the driver merges into the new means — no exchange, so
+    * no AQE stage job. `use` gets the codebook, one LocalRelation
+    * (sub, c, j, v) of LONGs, and the codes (vec_id, sub, c) of every
+    * vector from the same kernel and cached rows; consume the codes
+    * inside `use`, the cache is released when it returns.
     */
-  def pqCodebook(xs: DataFrame, k: Int, rounds: Int,
-      trainN: Long = Long.MaxValue): DataFrame = {
-    require(trainN >= k,
-      s"trainN=$trainN must cover the $k seeds")
-    val spark = xs.sparkSession
-    val ranked = xs.select(col("vec_id")).distinct()
-      .withColumn("h", TextOps.tokenHashReference(
-        concat(lit("pqseed:"), col("vec_id").cast("string"))))
-      .orderBy(col("h"), col("vec_id"))
-    val seeds = ranked.limit(k).select(col("vec_id").cast("long"))
-      .collect().map(_.getLong(0)).toSeq
-    var book = collectBook(xs.filter(col("vec_id").isin(seeds: _*))
-      .withColumn("c",
-        array_position(typedLit(seeds), col("vec_id").cast("long")) - 1)
-      .withColumnRenamed("x", "v"))
-    if (rounds > 0 && book.nonEmpty) {
-      val widths = book.values.map(_.length).toSet
-      require(widths.size == 1,
-        s"subspaces must share one width, got ${widths.mkString(",")}")
-      val sums = (0 until widths.head).map(i => sum(col("xa").getItem(i)))
-      // the Lloyd frame: sample rows only, so training cost is bounded
-      // by trainN whatever the corpus size
-      val xsT =
-        if (trainN < Int.MaxValue.toLong)
-          xs.join(broadcast(ranked.limit(trainN.toInt)
-            .select(col("vec_id"))), Seq("vec_id"))
-        else xs
-      val g = gather(xsT).cache()
-      try {
-        for (_ <- 1 to rounds)
+  def pqQuantize[A](xs: DataFrame, k: Int, rounds: Int,
+      trainN: Long = Long.MaxValue)(use: (DataFrame, DataFrame) => A): A = {
+    require(trainN >= k, s"trainN=$trainN must cover the $k seeds")
+    val g = gather(xs).cache()
+    try {
+      val ranked = g.select(col("vec_id")).distinct()
+        .orderBy(TextOps.tokenHashReference(
+          concat(lit("pqseed:"), col("vec_id").cast("string"))),
+          col("vec_id"))
+        .select(col("vec_id"))
+      // a top-N pre-allocates N slots per partition: only a bounded
+      // sample is cut in Spark
+      val ids = (if (trainN <= TOP_N_MAX) ranked.limit(trainN.toInt)
+        else ranked).collect().map(_.getLong(0))
+      // sorted sample ids, or None when the whole corpus trains
+      val sample = Option.when(ids.length >= trainN)(
+        ids.take(trainN.toInt).sorted)
+      val seedC = ids.take(k).zipWithIndex.toMap
+      val rows = g.rdd
+      var book = rows.filter(r => seedC.contains(r._1)).collect()
+        .map { case (id, sub, xa) => (sub, seedC(id).toLong) -> xa }.toMap
+      if (rounds > 0 && book.nonEmpty) {
+        val widths = book.values.map(_.length).toSet
+        require(widths.size == 1,
+          s"subspaces must share one width, got ${widths.mkString(",")}")
+        for (_ <- 1 to rounds) {
+          val cs = bySub(book)
           // assigned clusters get their new mean, empty ones keep theirs
-          book ++= nearest(g, codebookLeaf(spark, book))
-            .groupBy(col("sub"), col("c"))
-            .agg(count(lit(1)), sums: _*)
+          book ++= rows.mapPartitions(lloydPartials(_, cs, sample))
             .collect()
-            .map { r =>
-              (r.getLong(0), r.getLong(1)) -> Array.tabulate(sums.size)(i =>
-                shiftedMean(r.getLong(3 + i), r.getLong(2)))
+            .groupMapReduce(p => (p._1, p._2))(_._3)((a, b) =>
+              Array.tabulate(a.length)(i => Math.addExact(a(i), b(i))))
+            .map { case (key, a) =>
+              key -> Array.tabulate(a.length - 1)(i =>
+                shiftedMean(a(i + 1), a(0)))
             }
-      } finally g.unpersist()
-    }
-    val rows = for {
-      ((sub, c), v) <- book.toSeq
-      (x, j) <- v.zipWithIndex
-    } yield Row(sub, c, j.toLong, x)
-    spark.createDataFrame(rows.asJava, StructType(
-      Seq("sub", "c", "j", "v").map(StructField(_, LongType, false))))
+        }
+      }
+      use(bookFrame(xs.sparkSession, book), encode(g, book))
+    } finally g.unpersist()
   }
 
+  /** The trained codebook alone ([[pqQuantize]]'s first output). */
+  def pqCodebook(xs: DataFrame, k: Int, rounds: Int,
+      trainN: Long = Long.MaxValue): DataFrame =
+    pqQuantize(xs, k, rounds, trainN)((book, _) => book)
+
+  /** Nearest-centroid assignment (vec_id, sub, c) under a given
+    * (sub, c, j, v) codebook: [[pqQuantize]]'s encoder, one pass over
+    * freshly gathered rows with the collected codebook in its closure.
+    */
+  def pqAssign(xs: DataFrame, cent: DataFrame): DataFrame =
+    encode(gather(xs),
+      cent.select(Seq("sub", "c", "j", "v").map(col(_).cast("long")): _*)
+        .collect()
+        .groupBy(r => (r.getLong(0), r.getLong(1)))
+        .map { case (key, rs) =>
+          key -> rs.sortBy(_.getLong(2)).map(_.getLong(3))
+        })
+
   private val SHIFT = 2000000L
+  private val TOP_N_MAX = 1L << 20
 
   /** `(Σx + n·SHIFT) div n − SHIFT` — the oracle's centroid update;
     * Scala `/` truncates exactly as Spark `div` does, and the exact
@@ -307,80 +308,77 @@ object VectorOps {
     Math.subtractExact(
       Math.addExact(s, Math.multiplyExact(n, SHIFT)) / n, SHIFT)
 
-  /** A long-form (sub, c, j, v) codebook frame collected into the
-    * driver-held form: (sub, c) → j-ordered centroid.
-    */
-  private def collectBook(cent: DataFrame): Map[(Long, Long), Array[Long]] =
-    cent.select(Seq("sub", "c", "j", "v").map(col(_).cast("long")): _*)
-      .collect()
-      .groupBy(r => (r.getLong(0), r.getLong(1)))
-      .map { case (key, rs) =>
-        key -> rs.sortBy(_.getLong(2)).map(_.getLong(3))
-      }
-
-  /** A driver-held codebook as one local (sub, cbs) leaf: per
-    * subspace the c-ascending array of (c, j-ordered centroid)
-    * structs.
-    */
-  private def codebookLeaf(spark: SparkSession,
+  /** A driver-held codebook as one local (sub, c, j, v) leaf. */
+  private def bookFrame(spark: SparkSession,
       book: Map[(Long, Long), Array[Long]]): DataFrame = {
-    val centroid = StructType(Seq(StructField("c", LongType, false),
-      StructField("cv", ArrayType(LongType, false), false)))
-    spark.createDataFrame(
-      book.groupBy(_._1._1).toSeq.map { case (sub, cs) =>
-        Row(sub, cs.toSeq.sortBy(_._1._2)
-          .map { case ((_, c), v) => Row(c, v.toSeq) })
-      }.asJava,
-      StructType(Seq(StructField("sub", LongType, false),
-        StructField("cbs", ArrayType(centroid, false), false))))
+    val rows = for {
+      ((sub, c), v) <- book.toSeq
+      (x, j) <- v.zipWithIndex
+    } yield Row(sub, c, j.toLong, x)
+    spark.createDataFrame(rows.asJava, StructType(
+      Seq("sub", "c", "j", "v").map(StructField(_, LongType, false))))
   }
 
+  /** The kernels' codebook view: per sub, c-ascending (c, centroid). */
+  private def bySub(book: Map[(Long, Long), Array[Long]])
+      : Map[Long, Array[(Long, Array[Long])]] =
+    book.toSeq.groupMap(_._1._1) { case ((_, c), v) => (c, v) }
+      .map { case (sub, cs) => sub -> cs.toArray.sortBy(_._1) }
+
   /** Each (vector, subspace) of a (vec_id, sub, j, x) frame as ONE
-    * j-ordered array row (vec_id, sub, xa).
+    * j-ordered array row (vec_id, sub, xa), typed for the kernels.
     */
-  private def gather(xs: DataFrame): DataFrame =
-    xs.groupBy(col("vec_id"), col("sub"))
+  private def gather(xs: DataFrame): Dataset[(Long, Long, Array[Long])] =
+    xs.groupBy(col("vec_id").cast("long").as("vec_id"),
+        col("sub").cast("long").as("sub"))
       .agg(transform(
         array_sort(collect_list(struct(col("j"), col("x")))),
         t => t.getField("x")).as("xa"))
+      .as(Encoders.product[(Long, Long, Array[Long])])
 
-  /** Gathered rows joined to their subspace's (sub, cbs) codebook row
-    * with the nearest centroid `c` resolved INSIDE one row-local fold:
-    * exact integer Σ(x−v)² per centroid, strict `<` so the FIRST (=
-    * lowest c, since `cbs` is c-sorted) minimum wins.
+  /** The nearest centroid of `xa` in `cs` (c-ascending): exact integer
+    * Σ(x−v)², strict `<` so the FIRST (= lowest c) minimum wins; a
+    * centroid of another width never matches.
     */
-  private def nearest(g: DataFrame, cbs: DataFrame): DataFrame = {
-    val best = aggregate(col("cbs"),
-      struct(lit(Long.MaxValue).as("dd"), lit(-1L).as("c")),
-      (acc, ce) => {
-        val dd = aggregate(
-          zip_with(col("xa"), ce.getField("cv"),
-            (a, b) => (a - b) * (a - b)),
-          lit(0L), (s, t) => s + t)
-        when(dd < acc.getField("dd"),
-          struct(dd.as("dd"), ce.getField("c").as("c")))
-          .otherwise(acc)
-      })
-    g.join(broadcast(cbs), Seq("sub"))
-      .withColumn("c", best.getField("c"))
+  private def nearest(xa: Array[Long], cs: Array[(Long, Array[Long])])
+      : Long = {
+    var best = Long.MaxValue
+    var bestC = -1L
+    for ((c, v) <- cs if v.length == xa.length) {
+      var dd = 0L
+      for (i <- xa.indices) {
+        val d = Math.subtractExact(xa(i), v(i))
+        dd = Math.addExact(dd, Math.multiplyExact(d, d))
+      }
+      if (dd < best) { best = dd; bestC = c }
+    }
+    bestC
   }
 
-  /** Nearest-centroid assignment per (vec, subspace): exact integer
-    * squared-L2 argmin with centroid-id tie-break → (vec_id, sub, c).
-    * After training this IS the PQ encoder (m codes per vector).
-    *
-    * Plan shape: the codebook (≤ k·m·subDim longs, 16 K at the
-    * largest shipped budget) is collected to the driver and broadcast
-    * as ONE local leaf of one row per subspace, holding its k
-    * j-ordered centroid arrays (c ascending); each (vector, subspace)
-    * is gathered into ONE j-ordered array row, and the argmin
-    * resolves inside a single row-local fold — the same kernel every
-    * [[pqCodebook]] round runs. It shuffles only the n·m gathered
-    * subvector rows and burns the k·subDim arithmetic as row-local
-    * expression work — O(n·m) rows end to end, no per-centroid row
-    * explosion anywhere.
+  /** One partition's share of a Lloyd round: per (sub, c), the count
+    * of sample rows nearest to c (slot 0) and their per-j sums.
     */
-  def pqAssign(xs: DataFrame, cent: DataFrame): DataFrame =
-    nearest(gather(xs), codebookLeaf(xs.sparkSession, collectBook(cent)))
-      .select(col("vec_id"), col("sub"), col("c"))
+  private def lloydPartials(it: Iterator[(Long, Long, Array[Long])],
+      cs: Map[Long, Array[(Long, Array[Long])]],
+      sample: Option[Array[Long]]): Iterator[(Long, Long, Array[Long])] = {
+    val acc = collection.mutable.HashMap.empty[(Long, Long), Array[Long]]
+    for ((id, sub, xa) <- it
+         if sample.forall(java.util.Arrays.binarySearch(_, id) >= 0);
+         cents <- cs.get(sub)) {
+      val a = acc.getOrElseUpdate((sub, nearest(xa, cents)),
+        new Array[Long](xa.length + 1))
+      a(0) += 1
+      for (i <- xa.indices) a(i + 1) = Math.addExact(a(i + 1), xa(i))
+    }
+    acc.iterator.map { case ((sub, c), a) => (sub, c, a) }
+  }
+
+  /** Codes (vec_id, sub, c); a subspace without centroids gets none. */
+  private def encode(rows: Dataset[(Long, Long, Array[Long])],
+      book: Map[(Long, Long), Array[Long]]): DataFrame = {
+    val cs = bySub(book)
+    rows.flatMap { case (id, sub, xa) =>
+      cs.get(sub).map(cents => (id, sub, nearest(xa, cents)))
+    }(Encoders.product[(Long, Long, Long)]).toDF("vec_id", "sub", "c")
+  }
 }

@@ -1287,9 +1287,10 @@ object Similarity extends QueryPack {
     val x = liftedX(s, d) // subspace frame, norms and ground truth
     val xs = VectorOps.pqSubspaces(x, subDim = 8)
     // trained ONCE per corpus snapshot and persisted
-    // ([[IndexStore.codebook]]/[[IndexStore.codes]]): two Lloyd
-    // rounds of one small job each against a driver-held codebook,
-    // then codebook and code table read back as file scans
+    // ([[IndexStore.codebook]]/[[IndexStore.codes]]): one build runs
+    // two Lloyd rounds of one job each against a driver-held codebook
+    // and encodes the corpus from the same cached rows, then codebook
+    // and code table read back as file scans
     val cent = IndexStore.codebook(xs, k = 16, rounds = 2)
     val codes = IndexStore.codes(xs, k = 16, rounds = 2)
     val qxs = xs.filter(col("vec_id") < 20)

@@ -1,9 +1,11 @@
 package graft.ops
 
 import graft.core.{GraftSession, Tables}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
@@ -41,6 +43,33 @@ class IndexStoreSpec extends AnyFunSuite {
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
+
+  /** Spark jobs launched while `body` runs, counted by a listener. A
+    * marker job afterwards flushes the listener queue: its events
+    * arrive after every earlier job's.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.job.description")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription("jobsOf-marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      Iterator.continually(
+        seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile { d =>
+          assert(d != null, "listener queue did not drain")
+          d != "jobsOf-marker"
+        }.size
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** The legacy assignment plan (round ≤ 12): join every lifted row
     * against all k centroids, window-rank the n·m·k distance rows —
@@ -139,17 +168,24 @@ class IndexStoreSpec extends AnyFunSuite {
 
   test("driver-held Lloyd rounds equal the unrolled legacy plan, " +
       "bit for bit") {
+    // the fused build's codebook AND its full-corpus codes
     def same(xs: DataFrame, rounds: Int, trainN: Long, what: String) = {
-      val got = sortedRows(VectorOps.pqCodebook(xs, 16, rounds, trainN))
-      assert(got.nonEmpty, what)
-      assert(got === sortedRows(legacyCodebook(xs, 16, rounds, trainN)),
-        s"codebook drift at $what")
+      val (book, codes) = VectorOps.pqQuantize(xs, 16, rounds, trainN)(
+        (b, c) => (sortedRows(b), sortedRows(c)))
+      assert(book.nonEmpty, what)
+      val legacy = legacyCodebook(xs, 16, rounds, trainN)
+      assert(book === sortedRows(legacy), s"codebook drift at $what")
+      assert(codes === sortedRows(legacyAssign(xs, legacy)),
+        s"codes drift at $what")
+      assert(codes.size === xs.select(col("vec_id"), col("sub"))
+        .distinct().count(), s"codes miss a (vector, subspace) at $what")
     }
     // the full-space IVF (m=1), IMI half (m=2) and PQ (m=8) geometries
     for (subDim <- Seq(8, 32, 64); rounds <- Seq(0, 1, 2, 4))
       same(VectorOps.pqSubspaces(lifted, subDim), rounds, Long.MaxValue,
         s"subDim=$subDim rounds=$rounds")
-    // a biting hash-rank training sample (125 of 500 vectors)
+    // a biting hash-rank training sample (125 of 500 vectors): the
+    // sample filter is taken, the codes still cover the full corpus
     for (rounds <- Seq(1, 4))
       same(VectorOps.pqSubspaces(lifted, 8), rounds, 125L,
         s"trainN=125 rounds=$rounds")
@@ -158,6 +194,54 @@ class IndexStoreSpec extends AnyFunSuite {
     val rxs = graft.queries.Similarity.imiResidualSubspaces(spark, dir, 4)
     assert(rxs.agg(min(col("x"))).head().getLong(0) < 0L)
     same(rxs, 2, Long.MaxValue, "residual subDim=8 rounds=2")
+  }
+
+  test("a fused quantizer build runs each Lloyd round as one job") {
+    // k = 12 keys no other test builds, so both calls train
+    val xs = VectorOps.pqSubspaces(lifted, subDim = 8)
+    val jobs = Seq(2, 4).map(r =>
+      jobsOf(IndexStore.codebook(xs, k = 12, rounds = r)))
+    assert(jobs(1) - jobs(0) === 2, s"jobs at rounds 2 and 4: $jobs")
+  }
+
+  test("every IndexStore artifact reads back with its inferred schema " +
+      "and no job") {
+    // input frames built up front: reading a source table infers its
+    // schema with a job of its own
+    val x = lifted
+    val iv = idVecs
+    val xsc = VectorOps.pqSubspaces(x, subDim = 64)
+    val cells = IndexStore.codes(xsc, k = 16, rounds = 2)
+      .select(col("vec_id"), col("c").as("cell"))
+    val rxs = graft.queries.Similarity.imiResidualSubspaces(spark, dir, 4)
+    val lv = emb.select(col("label"),
+      VectorOps.toDouble(col("embedding")).as("v"))
+    val kinds: Seq[(String, () => DataFrame)] = Seq(
+      "codebook" -> (() => IndexStore.codebook(xsc, k = 16, rounds = 2)),
+      "codes" -> (() => IndexStore.codes(xsc, k = 16, rounds = 2)),
+      "sq8" -> (() => IndexStore.sq8Table(x)),
+      "labcent" -> (() => IndexStore.labelCentroids(lv, 64)),
+      "lshbkt" -> (() => IndexStore.lshBuckets(iv, 64, 8)),
+      "ivfmembers" -> (() =>
+        IndexStore.ivfMembers(x, k = 16, rounds = 2, dim = 64)),
+      "imimembers" -> (() =>
+        IndexStore.imiMembers(x, k1 = 4, rounds = 2, dim = 64)),
+      "pqlists" -> (() =>
+        IndexStore.pqLists(rxs, cells, k = 16, rounds = 2, m = 8)),
+      "knngraph" -> (() => IndexStore.knnGraph(iv, 64, 8)))
+    for ((kind, artifact) <- kinds) {
+      val built = artifact()
+      val path = built.queryExecution.analyzed.collectFirst {
+        case lr: LogicalRelation => lr.relation
+      }.collect { case r: HadoopFsRelation =>
+        r.location.rootPaths.head.toString
+      }.get
+      assert(path.contains(s"/$kind-"), path)
+      assert(built.schema === spark.read.parquet(path).schema, kind)
+      var again: DataFrame = null
+      assert(jobsOf { again = artifact(); again.schema } === 0, kind)
+      assert(again.schema === built.schema, kind)
+    }
   }
 
   test("a trained codebook is one local leaf whatever the round count") {
