@@ -115,29 +115,22 @@ object PlanDump {
           graft.ops.IndexStore.knnGraphBuild(v, 64, 8)
         }),
       Pick("ivf_member_probe",
-        "IVF point-probe SERVING (round 10: the count-scaled IMI " +
-          "member table): laid out partitionBy(cell) over the k1² " +
-          "composite cells, so an nprobe probe is a partition-PRUNED " +
-          "scan — nprobe directories of bounded occupancy, never the " +
-          "corpus — feeding one TakeOrderedAndProject; no join " +
-          "anywhere (ServeBench.serveIvf's exact plan)",
+        "IVF point-probe SERVING (the count-scaled IMI member table): " +
+          "laid out partitionBy(cell) over the k1² composite cells, so " +
+          "an nprobe probe is a partition-PRUNED scan — nprobe " +
+          "directories of bounded occupancy, never the corpus — " +
+          "feeding one TakeOrderedAndProject; no join anywhere " +
+          "(ServeOps.flatScan, the flat point-query plan)",
         Seq("PartitionFilters", " IN (3,7)", "TakeOrderedAndProject",
           "!Join"),
         frame = Some { (s, d) =>
-          import org.apache.spark.sql.functions._
-          val emb = graft.core.Tables(s, d, "embeddings")
-          val x = graft.ops.VectorOps.liftE6(emb, "vec_id", "embedding")
-          val k1 = graft.queries.Similarity.imiK1(s, d)
-          val members = graft.ops.IndexStore.imiMembers(x, k1 = k1,
-            rounds = 2, dim = 64)
-          val qv = (0 until 64).map(_ => 0.0)
-          members
-            .filter(col("cell").isin(3, 7) && col("vec_id") =!= lit(0L))
-            .select(col("vec_id"),
-              (lit(0L) + col("n2") - lit(2L) *
-                graft.ops.VectorOps.dot(typedlit(qv), col("v"))
-                  .cast("long")).as("dist"))
-            .orderBy(col("dist"), col("vec_id")).limit(5)
+          val x = graft.ops.VectorOps.liftE6(
+            graft.core.Tables(s, d, "embeddings"), "vec_id", "embedding")
+          graft.ops.ServeOps.flatScan(
+            graft.ops.IndexStore.imiMembers(x,
+              k1 = graft.queries.Similarity.imiK1(s, d), rounds = 2,
+              dim = 64),
+            Seq(3, 7), 0L, Array.fill(64)(0.0))
         }))
 
     val sections = picks.map { p =>

@@ -407,15 +407,21 @@ object IndexStore {
       ArtifactStore.key(x, "imimembers",
         s"k$k1-r$rounds-d$dim${tTag(trainN(k1))}"),
       partitionBy = Seq("cell")) {
-      val xs2 = VectorOps.pqSubspaces(x, subDim = dim / 2)
-      val cells = codes(xs2, k1, rounds).groupBy(col("vec_id"))
-        .agg((max(when(col("sub") === 0, col("c"))) * k1 +
-          max(when(col("sub") === 1, col("c")))).as("cell"))
-      cells.join(vectorRows(x), Seq("vec_id"))
+      compositeCells(VectorOps.pqSubspaces(x, subDim = dim / 2), k1,
+        rounds).join(vectorRows(x), Seq("vec_id"))
     }
 
+  /** Composite IMI cell of every vector of a two-half subspace frame:
+    * (vec_id, cell = c_hi·k1 + c_lo) from the trained half [[codes]].
+    */
+  def compositeCells(xs2: DataFrame, k1: Int, rounds: Int,
+      trainNOverride: Long = -1L): DataFrame =
+    codes(xs2, k1, rounds, trainNOverride).groupBy(col("vec_id"))
+      .agg((max(when(col("sub") === 0, col("c"))) * k1 +
+        max(when(col("sub") === 1, col("c")))).as("cell"))
+
   /** A lifted frame's vectors reassembled: (vec_id, v, n2). */
-  private def vectorRows(x: DataFrame): DataFrame =
+  private[graft] def vectorRows(x: DataFrame): DataFrame =
     x.groupBy(col("vec_id"))
       .agg(transform(
         array_sort(collect_list(struct(col("dim"), col("x")))),

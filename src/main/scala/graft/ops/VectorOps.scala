@@ -71,6 +71,15 @@ object VectorOps {
         k -> ((((k + 1) * $aj + $bj) % 97) - 48)::DOUBLE / 48.0)"""
   }
 
+  /** [[plane]] evaluated on the driver: the same integer arithmetic,
+    * for a router that ranks bit flips before issuing its probe.
+    */
+  private[graft] def planeArray(j: Int, dim: Int): Array[Double] = {
+    val (aj, bj) = planeCoef(j)
+    Array.tabulate(dim)(k =>
+      (Math.floorMod((k + 1) * aj + bj, 97) - 48).toDouble / 48.0)
+  }
+
   private def planeCoef(j: Int): (Int, Int) = (2 * j + 3, 7 * j + 1)
 
   /** Sign-bucket of `v` under `nPlanes` hyperplanes → LONG bucket id.
@@ -289,13 +298,19 @@ object VectorOps {
     * freshly gathered rows with the collected codebook in its closure.
     */
   def pqAssign(xs: DataFrame, cent: DataFrame): DataFrame =
-    encode(gather(xs),
-      cent.select(Seq("sub", "c", "j", "v").map(col(_).cast("long")): _*)
-        .collect()
-        .groupBy(r => (r.getLong(0), r.getLong(1)))
-        .map { case (key, rs) =>
-          key -> rs.sortBy(_.getLong(2)).map(_.getLong(3))
-        })
+    encode(gather(xs), collectBook(cent))
+
+  /** A (sub, c, j, v) codebook frame collected to the driver as
+    * (sub, c) → j-ordered centroid.
+    */
+  private[graft] def collectBook(cent: DataFrame)
+      : Map[(Long, Long), Array[Long]] =
+    cent.select(Seq("sub", "c", "j", "v").map(col(_).cast("long")): _*)
+      .collect()
+      .groupBy(r => (r.getLong(0), r.getLong(1)))
+      .map { case (key, rs) =>
+        key -> rs.sortBy(_.getLong(2)).map(_.getLong(3))
+      }
 
   private val SHIFT = 2000000L
   private val TOP_N_MAX = 1L << 20
@@ -320,7 +335,7 @@ object VectorOps {
   }
 
   /** The kernels' codebook view: per sub, c-ascending (c, centroid). */
-  private def bySub(book: Map[(Long, Long), Array[Long]])
+  private[graft] def bySub(book: Map[(Long, Long), Array[Long]])
       : Map[Long, Array[(Long, Array[Long])]] =
     book.toSeq.groupMap(_._1._1) { case ((_, c), v) => (c, v) }
       .map { case (sub, cs) => sub -> cs.toArray.sortBy(_._1) }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.core.{CacheScope, Exact, Tables}
-import graft.ops.{IndexStore, RerankOps, TopKOps, VectorOps}
+import graft.ops.{IndexStore, RerankOps, ServeOps, TopKOps, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -77,8 +77,8 @@ object Similarity extends QueryPack {
     * centroids, PQ/SQ8 codes, label-cell quantizer, LSH buckets, kNN
     * graph) exactly as a production pipeline schedules them — batch
     * index builds consumed by the whole serving family, not per-query
-    * work. PerfProfile calls this so serving queries profile as
-    * probe-only cost.
+    * work. PerfProfile and ScaleBench call this so serving queries
+    * profile as probe-only cost.
     */
   private[graft] def prebuildIndexArtifacts(
       s: SparkSession, d: String): Unit = {
@@ -1779,7 +1779,8 @@ object Similarity extends QueryPack {
     val (k1, budget) = imiSqrtGeom(s, d)
     val x = VectorOps.liftE6(emb(s, d), "vec_id", "embedding")
     val (cent, cellsTbl) = imiQuantizer(x, k1, SQRT_ROUNDS)
-    val route = imiRouteBudget(x, cent, k1, cellsTbl, budget)
+    val route = routeLeaf(x, cent, k1,
+      ServeOps.ScanBudget(budget, ServeOps.sizes(cellsTbl, "cell")))
     val postScored = qs.filter(col("strategy") === "post")
       .join(route, Seq("qid"))
       .join(cands.join(cellsTbl.withColumnRenamed("vec_id", "cid"),
@@ -1968,38 +1969,19 @@ object Similarity extends QueryPack {
     // fixed-resolution key (occupancy ∝ n ⇒ per-probe cost linear:
     // n_multi 8 → 245 across the shipped→sf1 span)
     val v = idVecs(s, d)
+    val r = IndexStore.scaledBitsRow(v, 16, PLANES, "r").head().getInt(0)
     val bucketed = IndexStore.lshBuckets(v, DIM, KEY_PLANES)
-      .crossJoin(broadcast(IndexStore.scaledBitsRow(v, 16, PLANES, "r")))
       .select(col("vec_id"), col("v"), col("nrm"),
-        (col("bkt") % expr("shiftleft(CAST(1 AS BIGINT), r)")).as("bkt"),
-        col("r"))
+        (col("bkt") % (1L << r)).as("bkt"))
     val qs = bucketed.filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qn"), col("bkt").as("b0"), col("r"))
-    val planeDots = array((0 until KEY_PLANES).map(j =>
-      struct(lit(j.toLong).as("j"),
-        abs(round(VectorOps.dot(col("qv"), VectorOps.plane(j, DIM)), 6))
-          .as("adj"))): _*)
-    // margin-ranked single-bit flips over the r MASKED planes, flip
-    // count COUNT-SCALED: max(2, r − 6) — 2 at the r=8 floor (the
-    // historical probe set bit-for-bit), 5 at sf1's r=11, 10 at the
-    // 16-bit ceiling — the probe side grows with the key side instead
-    // of freezing while the space fines away underneath it
-    val flips = qs
-      .select(col("qid"), col("b0"), col("r"), explode(planeDots).as("pd"))
-      .select(col("qid"), col("b0"), col("r"), col("pd.j").as("j"),
-        col("pd.adj").as("adj"))
-      .filter(col("j") < col("r"))
-      .withColumn("rnk", rank().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid"))
-          .orderBy(col("adj").asc, col("j").asc)))
-      .filter(col("rnk") <= greatest(lit(2), col("r") - 6))
-      .select(col("qid"),
-        expr("b0 ^ shiftleft(CAST(1 AS BIGINT), CAST(j AS INT))")
-          .as("probe"))
-    val probes = qs.select(col("qid"), col("b0").as("probe"))
-      .unionByName(flips)
+        col("nrm").as("qn"), col("bkt").as("b0"))
+    // the own bucket plus the margin-ranked single-bit flips over the r
+    // MASKED planes, flip count COUNT-SCALED: max(2, r − 6) — 2 at the
+    // r=8 floor, 5 at sf1's r=11, 10 at the 16-bit ceiling — so the
+    // probe side grows with the key side. ServeOps ranks the flips on
+    // the driver, exactly as a point query does.
+    val probes = ServeOps.probeFrame(s, ServeOps.queryVectors(v, 20), r)
     val cands = probes
       .join(qs.select(col("qid"), col("qv"), col("qn"), col("b0")),
         Seq("qid"))
@@ -2304,8 +2286,8 @@ object Similarity extends QueryPack {
 
   // ---- IMI (inverted multi-index) shared machinery ---------------
   // The count-scaled coarse quantizer (q256) and everything composed
-  // on top of it (q253 IVFPQ, q255 residual IVFPQ, ServeBench's
-  // serving paths, the RecallCurve sweep) share ONE quantizer
+  // on top of it (q253 IVFPQ, q255 residual IVFPQ, ServeOps' point
+  // serving, the RecallCurve sweep) share ONE quantizer
   // derivation so the trained artifacts are addressed by a single
   // canonical plan and the DuckDB mirrors replay a single CTE chain.
 
@@ -2444,76 +2426,20 @@ object Similarity extends QueryPack {
   private def imiQuantizer(x: DataFrame, k1: Int, rounds: Int = 2,
       trainNOverride: Long = -1L): (DataFrame, DataFrame) = {
     val xs2 = VectorOps.pqSubspaces(x, subDim = 32)
-    val cent = IndexStore.codebook(xs2, k = k1, rounds = rounds,
-      trainNOverride = trainNOverride)
-    val halfCodes = IndexStore.codes(xs2, k = k1, rounds = rounds,
-      trainNOverride = trainNOverride)
-    val cells = halfCodes.groupBy(col("vec_id"))
-      .agg((max(when(col("sub") === 0, col("c"))) * k1 +
-        max(when(col("sub") === 1, col("c")))).as("cell"))
-    (cent, cells)
+    (IndexStore.codebook(xs2, k = k1, rounds = rounds,
+      trainNOverride = trainNOverride),
+      IndexStore.compositeCells(xs2, k1, rounds, trainNOverride))
   }
 
-  /** Per-(bounded query, composite cell) centroid distance frame —
-    * each query half scores against k1 centroids, the k1² composite
-    * sums form the multi-sequence ranking key (dd asc, cell asc — a
-    * total order; Babenko & Lempitsky). Shared by the fixed-count
-    * route ([[imiRoute]]) and the budget route ([[imiRouteBudget]]).
+  /** The bounded queries' (qid, cell) route under `probe` as one local
+    * leaf: [[ServeOps]] routes the query vectors (vec_id < 20) on the
+    * driver against the collected half-space codebook `cent` — the
+    * router point serving uses.
     */
-  private def imiCompositeDd(x: DataFrame, cent: DataFrame,
-      k1: Int): DataFrame = {
-    val qxs = VectorOps.pqSubspaces(x, subDim = 32)
-      .filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("sub"), col("j"),
-        col("x").as("qx"))
-    val halfDd = qxs.join(broadcast(cent), Seq("sub", "j"))
-      .groupBy(col("qid"), col("sub"), col("c"))
-      .agg(sum((col("qx") - col("v")) * (col("qx") - col("v")))
-        .as("dd"))
-    halfDd.filter(col("sub") === 0)
-      .select(col("qid"), col("c").as("c0"), col("dd").as("dd0"))
-      .join(halfDd.filter(col("sub") === 1)
-        .select(col("qid").as("qid1"), col("c").as("c1"),
-          col("dd").as("dd1")),
-        col("qid") === col("qid1"))
-      .select(col("qid"), (col("c0") * k1 + col("c1")).as("cell"),
-        (col("dd0") + col("dd1")).as("dd"))
-  }
-
-  /** nprobe nearest composite cells per bounded query (vec_id < 20) —
-    * the share-pinned family's fixed-count route.
-    */
-  private def imiRoute(x: DataFrame, cent: DataFrame, k1: Int,
-      nprobe: Int): DataFrame =
-    TopKOps.topKPerGroup(imiCompositeDd(x, cent, k1),
-      Seq(col("qid")), Seq(col("dd").asc, col("cell").asc), nprobe)
-      .select(col("qid"), col("cell"))
-
-  /** SCAN-BUDGET route (round 12, the √n family's probe rule): probe
-    * composite cells in multi-sequence order until their cumulative
-    * membership reaches `budget` (the crossing cell included) — the
-    * per-query scanned mass is pinned to ~budget at any cell
-    * granularity, so n_scanned grows exactly as the budget rule
-    * (4·√n ⇒ √10 per decade) and the EMERGENT probe count rises by
-    * itself where cells are finer. Deterministic: the ranking key
-    * (dd, cell) is a total order and cell sizes are exact counts;
-    * cells with no members consume rank but no budget.
-    */
-  private def imiRouteBudget(x: DataFrame, cent: DataFrame, k1: Int,
-      cells: DataFrame, budget: Long): DataFrame = {
-    val sizes = cells.groupBy(col("cell")).agg(count(lit(1)).as("sz"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("dd").asc, col("cell").asc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    imiCompositeDd(x, cent, k1)
-      .join(sizes, Seq("cell"), "left")
-      .withColumn("sz", coalesce(col("sz"), lit(0L)))
-      .withColumn("cum", sum(col("sz")).over(w))
-      .filter(col("cum") - col("sz") < budget)
-      .select(col("qid"), col("cell"))
-  }
+  private def routeLeaf(x: DataFrame, cent: DataFrame, k1: Int,
+      probe: ServeOps.Probe): DataFrame =
+    ServeOps.routeFrame(x.sparkSession, ServeOps.imi(cent, k1, probe),
+      ServeOps.queryVectors(IndexStore.vectorRows(x), 20))
 
   /** Releases the [[CacheScope]]; kept for the benchmark harness
     * (`perfbench/`), whose between-pass reset calls it.
@@ -2546,11 +2472,7 @@ object Similarity extends QueryPack {
     * exact top-5 — pinned, see [[release]]).
     */
   private def e6Arrays(x: DataFrame): DataFrame =
-    CacheScope.pin(x.groupBy(col("vec_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("dim"), col("x")))),
-        t => t.getField("x").cast("double")).as("v"))
-      .withColumn("n2", VectorOps.dot(col("v"), col("v")).cast("long")))
+    CacheScope.pin(IndexStore.vectorRows(x))
 
   /** Assemble the (qid, n_scanned, n_hits) serving report shared by
     * the whole trained-IVF family: rank the served candidates
@@ -2742,8 +2664,7 @@ object Similarity extends QueryPack {
       k1: Int, nprobe: Int, rounds: Int): DataFrame = {
     val x = liftedX(s, d)
     val (cent, cells) = imiQuantizer(x, k1, rounds)
-    val route = imiRoute(x, cent, k1, nprobe)
-    imiFlatReport(route, cells, x)
+    imiFlatReport(routeLeaf(x, cent, k1, ServeOps.NProbe(nprobe)), cells, x)
   }
 
   /** [[imiIvfReportAtR]] with the scan-BUDGET route — q258's shape
@@ -2757,7 +2678,8 @@ object Similarity extends QueryPack {
     // the member scan (see [[release]])
     val (cent, cellsRaw) = imiQuantizer(x, k1, rounds, trainNOverride)
     val cells = CacheScope.pin(cellsRaw)
-    val route = imiRouteBudget(x, cent, k1, cells, budget)
+    val route = routeLeaf(x, cent, k1,
+      ServeOps.ScanBudget(budget, ServeOps.sizes(cells, "cell")))
     imiFlatReport(route, cells, x)
   }
 
@@ -3313,7 +3235,7 @@ object Similarity extends QueryPack {
     val xsp = VectorOps.pqSubspaces(x, subDim = 8) // PQ frame
     val pqCent = IndexStore.codebook(xsp, k = kq, rounds = 2)
     val pqCodes = IndexStore.codes(xsp, k = kq, rounds = 2)
-    val route = imiRoute(x, cent, k1, nprobe)
+    val route = routeLeaf(x, cent, k1, ServeOps.NProbe(nprobe))
     // per-query ADC distance table over the PQ codebook (q241's rule)
     val qxsp = xsp.filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("sub"), col("j"),
@@ -3413,9 +3335,9 @@ object Similarity extends QueryPack {
     * concatenation of its two trained half-space centroids — the IMI
     * makes the residual a per-HALF subtraction, no k1²-row centroid
     * table ever materializes), split into m=8 subspaces. ONE
-    * construction path (also used by the PerfProfile/ServeBench
-    * prebuilds) so the residual codebook/code artifacts are addressed
-    * by a single canonical plan.
+    * construction path (also used by [[prebuildIndexArtifacts]] and
+    * ServeBench's timed builds) so the residual codebook/code
+    * artifacts are addressed by a single canonical plan.
     */
   private[graft] def imiResidualSubspaces(s: SparkSession, d: String,
       k1: Int, rounds: Int = 2): DataFrame = {
@@ -3454,30 +3376,27 @@ object Similarity extends QueryPack {
     */
   private def imiResidualAdc(s: SparkSession, d: String,
       k1: Int, nprobe: Int): (DataFrame, DataFrame) =
-    imiResidualAdcWith(s, d, k1, rounds = 2,
-      (x, cent, _) => imiRoute(x, cent, k1, nprobe))
+    imiResidualAdcWith(s, d, k1, rounds = 2, _ => ServeOps.NProbe(nprobe))
 
   /** [[imiResidualAdc]] generalized over the coarse geometry: Lloyd
-    * `rounds` for the half-space quantizer and a route provider
-    * (fixed-count for the share-pinned family, scan-budget for the
-    * √n family — q260).
+    * `rounds` for the half-space quantizer and the route's probe rule
+    * given the cell membership (fixed-count for the share-pinned
+    * family, scan-budget for the √n family — q260).
     */
   private def imiResidualAdcWith(s: SparkSession, d: String, k1: Int,
-      rounds: Int,
-      routeOf: (DataFrame, DataFrame, DataFrame) => DataFrame)
+      rounds: Int, probeOf: DataFrame => ServeOps.Probe)
       : (DataFrame, DataFrame) = {
     val x = liftedX(s, d)
     val kq = pqK(s, d) // count-scaled PQ code budget
     val (cent, cellsRaw) = imiQuantizer(x, k1, rounds)
     // pinned: membership feeds the route's occupancy sizes AND the
-    // candidate join; the route feeds the per-cell residual tables AND
-    // the candidate join (see [[release]] — each reference re-derived the
+    // candidate join (see [[release]] — each reference re-derived the
     // whole trained chain before round 13)
     val cells = CacheScope.pin(cellsRaw)
     val rxs = imiResidualSubspaces(s, d, k1, rounds)
     val rCent = IndexStore.codebook(rxs, k = kq, rounds = 2)
     val rCodes = IndexStore.codes(rxs, k = kq, rounds = 2)
-    val route = CacheScope.pin(routeOf(x, cent, cells))
+    val route = routeLeaf(x, cent, k1, probeOf(cells))
     // per-(query, probed cell) residual → per-cell ADC table: the
     // probed composite cell decomposes into its two half codes
     // (cell div k1, cell mod k1), each resolving its own half-space
@@ -3663,7 +3582,7 @@ object Similarity extends QueryPack {
   private def q260IvfPqSqrtRefine(s: SparkSession, d: String): DataFrame = {
     val (k1, budget) = imiSqrtGeom(s, d)
     refineReport(imiResidualAdcWith(s, d, k1, rounds = SQRT_ROUNDS,
-      (x, cent, cells) => imiRouteBudget(x, cent, k1, cells, budget)))
+      cells => ServeOps.ScanBudget(budget, ServeOps.sizes(cells, "cell"))))
   }
 
   private val q260Sql = imiRefineSql(imiSqrtCtes, s"ic$SQRT_ROUNDS")
