@@ -57,7 +57,7 @@ object ServeBench {
       "/root/testdata/sf0.001,/root/testdata/sf0.01,/root/testdata/sf0.1")
     val clusteredDirs = dirs("SPARK_GRAFT_SERVE_CLUSTERED_SFS",
       Seq("0.01", "0.1", "1", "10")
-        .map(sf => s"/root/repo/testdata-sf$sf-clustered").mkString(","))
+        .map(sf => s"testdata-sf$sf-clustered").mkString(","))
     val repeats = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt)
     val spark = GraftSession.local("graft-servebench")
