@@ -19,8 +19,13 @@
 # BENCHMARK.json, read-only here). Each metric ends with two verdicts:
 # `claim` is met when the new side wins at least 9 of every 10 pairs
 # and its median is better than the base's by more than the base IQR;
-# `regression` is none while the new median stays within the metric's
-# relative bound.
+# `regression` is EXCEEDS when the new median is worse than the base's
+# by more than the metric's relative bound, `unresolved` when it is not
+# but the base IQR/median is wider than that bound and some new run
+# reads no better than some base run, and none otherwise.
+# A run that exits non-zero or whose last stdout line is not JSON is
+# named (side, seed, .err path) when it fails; its pair is left out of
+# the summary, and the script then exits 1.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
@@ -43,13 +48,22 @@ fi
 mkdir -p "$results"
 
 # run <side> <dir> <seed>: one benchmark run; its last stdout line
-# (the result) goes to $results/<side>-<seed>.json
+# (the result) goes to $results/<side>-<seed>.json, and a failed run
+# leaves no result file
 run() {
-  local out="$results/$1-$3.json"
+  local out="$results/$1-$3.json" status=0
   echo "== $1 seed $3 ($(date -u +%H:%M:%S))" >&2
+  rm -f "$out"
   (cd "$2" && python3 perfbench/run.py --workload "$workload" --seed "$3") \
-    > "$out.log" 2> "$out.err"
-  tail -n 1 "$out.log" > "$out"
+    > "$out.log" 2> "$out.err" || status=$?
+  if [ "$status" -ne 0 ]; then
+    echo "FAILED: $1 seed $3 exited $status; see $out.err" >&2
+  elif ! tail -n 1 "$out.log" |
+      python3 -c 'import json, sys; json.load(sys.stdin)' 2> /dev/null; then
+    echo "FAILED: $1 seed $3 printed no JSON result line; see $out.err" >&2
+  else
+    tail -n 1 "$out.log" > "$out"
+  fi
 }
 
 i=0
@@ -65,10 +79,18 @@ for seed in "$@"; do
 done
 
 python3 - "$root/BENCHMARK.json" "$results" "$@" <<'EOF'
-import json, math, statistics, sys
+import json, math, os, statistics, sys
 
-spec, results, seeds = sys.argv[1], sys.argv[2], sys.argv[3:]
+spec, results, asked = sys.argv[1], sys.argv[2], sys.argv[3:]
 declared = {m["name"]: m for m in json.load(open(spec))["end_to_end"]}
+seeds = [s for s in asked
+         if all(os.path.exists(f"{results}/{side}-{s}.json")
+                for side in ("base", "new"))]
+failed = [s for s in asked if s not in seeds]
+if failed:
+    print(f"pairs left out (a run failed, see FAILED above): seeds {failed}")
+if not seeds:
+    sys.exit(1)
 runs = {side: [json.load(open(f"{results}/{side}-{s}.json")) for s in seeds]
         for side in ("base", "new")}
 for side, rs in runs.items():
@@ -102,6 +124,16 @@ for name in runs["base"][0]["metrics"]:
           f"(wins >= 9/10 of pairs and median gain > base IQR)")
     bound = declared[name]["bound"]
     worse = sign * (mn - mb) / mb
-    print(f"  regression: {'EXCEEDS' if worse > bound else 'none'} "
+    # a base spread wider than the bound cannot tell "within bound"
+    # from a regression, unless every new run beats every base run
+    separated = all(sign * (x - y) > 0 for x in b for y in n)
+    if worse > bound:
+        verdict = "EXCEEDS"
+    elif (q3 - q1) / mb > bound and not separated:
+        verdict = "unresolved"
+    else:
+        verdict = "none"
+    print(f"  regression: {verdict} "
           f"(new median {worse:+.3f} of base, bound {bound})")
+sys.exit(1 if failed else 0)
 EOF

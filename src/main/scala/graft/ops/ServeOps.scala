@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -163,38 +162,51 @@ object ServeOps {
         .flatMap { case (qid, ks) => ks.map(k => Row(qid, k)) }.asJava,
       StructType(Seq("qid", name).map(StructField(_, LongType, false))))
 
-  /** Exact integer-L2 top-5 of each query id below `upTo` over a
-    * (vec_id, v, n2) frame, ties by id: the serving ground truth.
+  /** The bounded query rows (qid, qv, qn2), ids below `upTo`, of a
+    * (vec_id, v, n2) frame ([[IndexStore.vectorRows]]).
     */
-  def exactTopL2(arrs: DataFrame, upTo: Long): Map[Long, Seq[Long]] =
-    top5(arrs.filter(col("vec_id") < upTo)
+  def queryRows(arrs: DataFrame, upTo: Long): DataFrame =
+    arrs.filter(col("vec_id") < upTo)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         col("n2").as("qn2"))
+
+  /** The top-5 rows per qid of a scored (qid, cid, …) frame, ranked by
+    * (`order`, cid asc): the rank every recall report grades with.
+    */
+  def top5(scored: DataFrame, order: Column): DataFrame =
+    TopKOps.topKPerGroup(scored, Seq(col("qid")),
+      Seq(order, col("cid").asc), 5)
+
+  /** Exact integer-L2 top-5 (qid, cid) of each query id below `upTo`
+    * against every other row of a (vec_id, v, n2) frame: the ground
+    * truth of the L2 recall reports and of point serving.
+    */
+  def groundTruthL2(arrs: DataFrame, upTo: Long): DataFrame =
+    top5(queryRows(arrs, upTo)
       .join(arrs.select(col("vec_id").as("cid"), col("v").as("cv"),
         col("n2").as("cn2")), col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        (col("qn2") + col("cn2") -
-          lit(2L) * VectorOps.dot(col("qv"), col("cv")).cast("long"))
-          .as("dist")), col("dist"))
+        VectorOps.l2E6(col("qv"), col("qn2"), col("cv"), col("cn2"))
+          .as("dist")), col("dist").asc)
+      .select(col("qid"), col("cid"))
+
+  /** [[groundTruthL2]] collected per qid. */
+  def exactTopL2(arrs: DataFrame, upTo: Long): Map[Long, Seq[Long]] =
+    byQid(groundTruthL2(arrs, upTo))
 
   /** Exact round-6dp cosine top-5 over a (vec_id, v, nrm) frame. */
   def exactTopCos(vecs: DataFrame, upTo: Long): Map[Long, Seq[Long]] =
-    top5(vecs.filter(col("vec_id") < upTo)
+    byQid(top5(vecs.filter(col("vec_id") < upTo)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         col("nrm").as("qn"))
       .join(vecs.select(col("vec_id").as("cid"), col("v").as("cv"),
         col("nrm").as("cn")), col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         round(VectorOps.dot(col("qv"), col("cv")) /
-          (col("qn") * col("cn")), 6).as("cos")), col("cos").desc)
+          (col("qn") * col("cn")), 6).as("cos")), col("cos").desc))
 
-  private def top5(scored: DataFrame,
-      order: org.apache.spark.sql.Column): Map[Long, Seq[Long]] =
-    scored
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(order, col("cid"))))
-      .filter(col("rn") <= 5).select(col("qid"), col("cid"))
-      .collect().groupBy(_.getAs[Long]("qid"))
+  private def byQid(top: DataFrame): Map[Long, Seq[Long]] =
+    top.collect().groupBy(_.getAs[Long]("qid"))
       .map { case (q, rs) => q -> rs.map(_.getAs[Long]("cid")).toSeq }
 
   /** Exact integer-L2 scan of the probed cells of a cell-partitioned
@@ -210,9 +222,8 @@ object ServeOps {
   private def exactTop5(rows: DataFrame, q: Array[Double]): DataFrame = {
     val qn2 = e6(q).map(v => v * v).sum
     rows.select(col("vec_id"),
-        (lit(qn2) + col("n2") -
-          lit(2L) * VectorOps.dot(typedlit(q.toSeq), col("v"))
-            .cast("long")).as("dist"))
+        VectorOps.l2E6(typedlit(q.toSeq), lit(qn2), col("v"), col("n2"))
+          .as("dist"))
       .orderBy(col("dist"), col("vec_id")).limit(5)
   }
 

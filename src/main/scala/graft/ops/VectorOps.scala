@@ -53,6 +53,14 @@ object VectorOps {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
+  /** Exact integer L2² of two e6 vectors held as doubles, from their
+    * squared norms: ‖a‖² + ‖b‖² − 2⟨a,b⟩, identical to Σ(a−b)². Each
+    * product is ≤ 4·10¹² and a 64-term sum stays far under 2⁵³, so the
+    * double dot is an exact integer and the LONG cast is lossless.
+    */
+  def l2E6(a: Column, an2: Column, b: Column, bn2: Column): Column =
+    an2 + bn2 - lit(2L) * dot(a, b).cast("long")
+
   def normSql(a: String): String = s"sqrt(${dotSql(a, a)})"
 
   /** Deterministic pseudo-random hyperplane component k (0-based) of

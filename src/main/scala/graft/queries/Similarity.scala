@@ -1074,31 +1074,12 @@ object Similarity extends QueryPack {
   private def q227Sq8AdcRecall(s: SparkSession, d: String): DataFrame = {
     val x = liftedX(s, d) // the exact ground-truth side scans it twice
     val recon = IndexStore.sq8Table(x)
-      .select(col("vec_id"), col("dim"), col("recon").as("r"))
-    def toArr(df: DataFrame, valCol: String) = df.groupBy(col("vec_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("dim"), col(valCol)))),
-        t => t.getField(valCol).cast("double")).as("v"))
-    val exactArr = toArr(x, "x")
-    val adcArr = toArr(recon, "r")
-    val q = exactArr.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("v").as("qv"))
-    def top5(cands: DataFrame) = TopKOps.topKPerGroup(
-      q.join(cands.select(col("vec_id").as("cid"), col("v").as("cv")),
-          col("qid") =!= col("cid"))
-        .select(col("qid"), col("cid"),
-          VectorOps.dot(col("qv"), col("cv")).cast("long").as("score")),
-      Seq(col("qid")), Seq(col("score").desc, col("cid").asc), 5)
-      .select(col("qid"), col("cid"))
-    // x stays cached for the session (the q38 precedent): Verify
-    // clears caches per query, Bench's LRU bounds accumulation — no
-    // cache-then-unpersist dance that would leave a second pinned
-    // frame behind.
-    top5(exactArr)
-      .join(top5(adcArr).withColumnRenamed("cid", "adc_cid"), Seq("qid"))
-      .groupBy(col("qid"))
-      .agg(sum(when(col("cid") === col("adc_cid"), lit(1L))
-        .otherwise(lit(0L))).as("n_hits"))
+      .select(col("vec_id"), col("dim"), col("recon").as("x"))
+    val exact = IndexStore.vectorRows(x)
+    val qs = ServeOps.queryRows(exact, 20)
+    def top5(cands: DataFrame) =
+      ServeOps.top5(ipScored(qs, cands), col("score").desc)
+    hits(top5(exact), top5(IndexStore.vectorRows(recon)))
       .orderBy(col("qid"))
   }
 
@@ -1159,22 +1140,16 @@ object Similarity extends QueryPack {
     */
   private def q238IvfSq8Serving(s: SparkSession, d: String): DataFrame = {
     val x = liftedX(s, d) // the exact ground-truth side scans it twice
-    // the persisted SQ8 code table ([[IndexStore.sq8Table]]): quantized
-    // once per corpus snapshot, read back as a pruned file scan here
-    val recon = IndexStore.sq8Table(x)
-      .select(col("vec_id"), col("dim"), col("recon").as("r"))
-    def toArr(df: DataFrame, valCol: String) = df.groupBy(col("vec_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("dim"), col(valCol)))),
-        t => t.getField(valCol).cast("double")).as("v"))
-    val exactArr = toArr(x, "x")
-    val qs = exactArr.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("v").as("qv"))
+    val exact = IndexStore.vectorRows(x)
+    val qs = ServeOps.queryRows(exact, 20)
     // coarse routing: q85's nprobe=2 nearest-centroid assignment
     val route = ivfAssigned(s, d, nprobe = 2)
       .select(col("qid"), col("clabel"))
-    // the compressed database side: SQ8 reconstructions, cell-keyed
-    val members = toArr(recon, "r")
+    // the compressed database side: the persisted SQ8 code table's
+    // reconstructions ([[IndexStore.sq8Table]], quantized once per
+    // corpus snapshot), cell-keyed
+    val members = IndexStore.vectorRows(IndexStore.sq8Table(x)
+        .select(col("vec_id"), col("dim"), col("recon").as("x")))
       .join(emb(s, d).select(col("vec_id"), col("label").as("clabel")),
         Seq("vec_id"))
       .select(col("vec_id").as("cid"), col("clabel"), col("v").as("cv"))
@@ -1183,26 +1158,10 @@ object Similarity extends QueryPack {
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         VectorOps.dot(col("qv"), col("cv")).cast("long").as("score"))
-    val nScanned = scored.groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_scanned"))
-    val ivfTop = TopKOps.topKPerGroup(scored, Seq(col("qid")),
-      Seq(col("score").desc, col("cid").asc), 5)
-      .select(col("qid"), col("cid").as("ivf_cid"))
     // exact full-scan ground truth — same metric (e6 inner product)
-    val exactTop = TopKOps.topKPerGroup(
-      qs.join(exactArr.select(col("vec_id").as("cid"), col("v").as("cv")),
-          col("qid") =!= col("cid"))
-        .select(col("qid"), col("cid"),
-          VectorOps.dot(col("qv"), col("cv")).cast("long").as("score")),
-      Seq(col("qid")), Seq(col("score").desc, col("cid").asc), 5)
-      .select(col("qid"), col("cid"))
-    exactTop.join(ivfTop, Seq("qid"))
-      .groupBy(col("qid"))
-      .agg(sum(when(col("cid") === col("ivf_cid"), lit(1L))
-        .otherwise(lit(0L))).as("n_hits"))
-      .join(nScanned, Seq("qid"))
-      .select(col("qid"), col("n_scanned"), col("n_hits"))
-      .orderBy(col("qid"))
+    ivfServingReport(scored,
+      ServeOps.top5(ipScored(qs, exact), col("score").desc),
+      col("score").desc)
   }
 
   private val q238Sql = {
@@ -1264,7 +1223,7 @@ object Similarity extends QueryPack {
 
   /** q241: PRODUCT quantization — the compression layer past q226's
     * SQ8: m=8 subspaces × k=16 centroids trained with 2 integer-exact
-    * Lloyd rounds ([[VectorOps.pqCodebook]]), so each 64-dim float
+    * Lloyd rounds ([[VectorOps.pqQuantize]]), so each 64-dim float
     * vector becomes 8 four-bit codes (a 64× cut vs float32 — the
     * faiss IndexPQ layout a 10 B-vector store runs where even SQ8's
     * 4× doesn't fit RAM). Serving is the PQ ADC shape: per query, an
@@ -1273,15 +1232,15 @@ object Similarity extends QueryPack {
     * — no per-candidate arithmetic on raw vectors at all. Report is
     * recall@5 vs the exact integer L2 top-5. Deterministic end to
     * end (hash-rank seeding, argmin tie-breaks, shift-floor centroid
-    * means — see pqCodebook's scaladoc), so the DuckDB oracle replays
+    * means — see pqQuantize's scaladoc), so the DuckDB oracle replays
     * the full train→encode→table→lookup→rank chain value-for-value
     * with the two Lloyd rounds unrolled as CTEs (the q129 MMR
-    * precedent). Scale shape: training is linear passes with a
-    * broadcast codebook (k·m·subDim rows ≈ KBs); the ADC join is
-    * codes⋈table on (sub, c) — candidate-driven, never
-    * queries×corpus×dims. Reference analogue: hw4's brute-force
-    * cosine top-1 (hw4/hw4.py:102-117), upgraded to the
-    * memory-bounded shape that actually serves at 100 TB.
+    * precedent). Scale shape: each Lloyd round is one `mapPartitions`
+    * + collect against a driver-held codebook (k·m·subDim longs ≈
+    * KBs); the ADC join is codes⋈table on (sub, c) —
+    * candidate-driven, never queries×corpus×dims. Reference analogue:
+    * hw4's brute-force cosine top-1 (hw4/hw4.py:102-117), upgraded to
+    * the memory-bounded shape that actually serves at 100 TB.
     */
   private def q241PqAdcRecall(s: SparkSession, d: String): DataFrame = {
     val x = liftedX(s, d) // subspace frame, norms and ground truth
@@ -1293,43 +1252,16 @@ object Similarity extends QueryPack {
     // and code table read back as file scans
     val cent = IndexStore.codebook(xs, k = 16, rounds = 2)
     val codes = IndexStore.codes(xs, k = 16, rounds = 2)
-    val qxs = xs.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("sub"), col("j"),
-        col("x").as("qx"))
-    val tab = qxs.join(broadcast(cent), Seq("sub", "j"))
-      .groupBy(col("qid"), col("sub"), col("c"))
-      .agg(sum((col("qx") - col("v")) * (col("qx") - col("v"))).as("dd"))
+    val tab = adcTable(querySubs(xs), cent)
     val adc = codes.join(broadcast(tab), Seq("sub", "c"))
       .filter(col("vec_id") =!= col("qid"))
       .groupBy(col("qid"), col("vec_id"))
       .agg(sum(col("dd")).as("dist"))
       .select(col("qid"), col("vec_id").as("cid"), col("dist"))
-    val pqTop = TopKOps.topKPerGroup(adc, Seq(col("qid")),
-      Seq(col("dist").asc, col("cid").asc), 5)
-      .select(col("qid"), col("cid").as("pq_cid"))
-    // exact integer-L2 ground truth: ‖q‖²+‖c‖²−2⟨q,c⟩ over the same
-    // e6 ints (identical to Σ(q−c)², which the oracle computes)
-    val arrs = x.groupBy(col("vec_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("dim"), col("x")))),
-        t => t.getField("x").cast("double")).as("v"))
-      .withColumn("n2", VectorOps.dot(col("v"), col("v")).cast("long"))
-    val q = arrs.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("n2").as("qn2"))
-    val exactTop = TopKOps.topKPerGroup(
-      q.join(arrs.select(col("vec_id").as("cid"), col("v").as("cv"),
-          col("n2").as("cn2")), col("qid") =!= col("cid"))
-        .select(col("qid"), col("cid"),
-          (col("qn2") + col("cn2") -
-            lit(2L) * VectorOps.dot(col("qv"), col("cv")).cast("long"))
-            .as("dist")),
-      Seq(col("qid")), Seq(col("dist").asc, col("cid").asc), 5)
-      .select(col("qid"), col("cid"))
-    exactTop.join(pqTop, Seq("qid"))
-      .groupBy(col("qid"))
-      .agg(sum(when(col("cid") === col("pq_cid"), lit(1L))
-        .otherwise(lit(0L))).as("n_hits"))
+    // exact integer-L2 ground truth over the same e6 ints (identical
+    // to Σ(q−c)², which the oracle computes)
+    hits(ServeOps.groundTruthL2(IndexStore.vectorRows(x), 20),
+      ServeOps.top5(adc, col("dist").asc))
       .orderBy(col("qid"))
   }
 
@@ -1437,7 +1369,6 @@ object Similarity extends QueryPack {
     import org.apache.spark.sql.types._
     val v = vecs(s, d)
     val base = v.filter(col("vec_id") % 5 =!= 4)
-    // coarse quantizer trained on the BASE snapshot only
     // coarse quantizer trained on the BASE snapshot only — the SAME
     // persisted artifact q244's compaction reads as its old quantizer
     // ([[IndexStore.labelCentroids]] over [[baseLabelVecs]])
@@ -1511,24 +1442,16 @@ object Similarity extends QueryPack {
       count(lit(1)).as("n_scanned"),
       sum(when(col("src") === "delta", lit(1L)).otherwise(lit(0L)))
         .as("n_delta_scanned"))
-    val annTop = TopKOps.topKPerGroup(scored, Seq(col("qid")),
-      Seq(col("cos").desc, col("cid").asc), 5)
-      .select(col("qid"), col("cid").as("ann_cid"))
     // exact ground truth: full scan over base ∪ delta (= the table)
-    val exactTop = TopKOps.topKPerGroup(
+    val exactTop = ServeOps.top5(
       qs.join(v.select(col("vec_id").as("cid"), col("v").as("cv"),
           col("nrm").as("cn")), col("qid") =!= col("cid"))
-        .select(col("qid"), col("cid"), cosCol.as("cos")),
-      Seq(col("qid")), Seq(col("cos").desc, col("cid").asc), 5)
-      .select(col("qid"), col("cid"))
+        .select(col("qid"), col("cid"), cosCol.as("cos")), col("cos").desc)
     val deltaSum = dAssign.agg(
       count(lit(1)).as("n_delta_total"),
       coalesce(sum(col("vec_id") * col("clabel")), lit(0L))
         .as("delta_checksum"))
-    exactTop.join(annTop, Seq("qid"))
-      .groupBy(col("qid"))
-      .agg(sum(when(col("cid") === col("ann_cid"), lit(1L))
-        .otherwise(lit(0L))).as("n_hits"))
+    hits(exactTop, ServeOps.top5(scored, col("cos").desc))
       .join(nsc, Seq("qid"))
       .crossJoin(broadcast(deltaSum))
       .select(col("qid"), col("n_scanned"), col("n_delta_scanned"),
@@ -1779,7 +1702,7 @@ object Similarity extends QueryPack {
     val (k1, budget) = imiSqrtGeom(s, d)
     val x = VectorOps.liftE6(emb(s, d), "vec_id", "embedding")
     val (cent, cellsTbl) = imiQuantizer(x, k1, SQRT_ROUNDS)
-    val route = routeLeaf(x, cent, k1,
+    val route = routeLeaf(IndexStore.vectorRows(x), cent, k1,
       ServeOps.ScanBudget(budget, ServeOps.sizes(cellsTbl, "cell")))
     val postScored = qs.filter(col("strategy") === "post")
       .join(route, Seq("qid"))
@@ -1793,28 +1716,20 @@ object Similarity extends QueryPack {
       .withColumn("n_sc", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("qid"))))
-    val annTop = TopKOps.topKPerGroup(scored, Seq(col("qid")),
-      Seq(col("cos").desc, col("cid").asc), 5)
-      .select(col("qid"), col("cid").as("acid"), col("n_sc"))
+    val annTop = ServeOps.top5(scored, col("cos").desc)
     val nScanned = annTop.groupBy(col("qid"))
       .agg(max(col("n_sc")).as("n_sc"))
     // exact filtered ground truth: full scan of the lang subset
-    val exactTop = TopKOps.topKPerGroup(
+    val exactTop = ServeOps.top5(
       qs.join(cands,
           col("clang") === col("qlang") && col("cid") =!= col("qid"))
-        .select(col("qid"), col("cid"), scoreCos.as("cos")),
-      Seq(col("qid")), Seq(col("cos").desc, col("cid").asc), 5)
-      .select(col("qid"), col("cid"))
-    val hits = exactTop.join(annTop, Seq("qid"))
-      .groupBy(col("qid"))
-      .agg(sum(when(col("cid") === col("acid"), lit(1L)).otherwise(lit(0L)))
-        .as("n_h"))
+        .select(col("qid"), col("cid"), scoreCos.as("cos")), col("cos").desc)
     qs.select(col("qid"), col("qlang"), col("strategy"))
       .join(nScanned, Seq("qid"), "left")
-      .join(hits, Seq("qid"), "left")
+      .join(hits(exactTop, annTop), Seq("qid"), "left")
       .select(col("qid"), col("qlang"), col("strategy"),
         coalesce(col("n_sc"), lit(0L)).as("n_scanned"),
-        coalesce(col("n_h"), lit(0L)).as("n_hits"))
+        coalesce(col("n_hits"), lit(0L)).as("n_hits"))
       .orderBy(col("qid"))
   }
 
@@ -2385,7 +2300,8 @@ object Similarity extends QueryPack {
     * the historical 16 (zero output churn), mints 64 centroids at the
     * synthetic-sf1 point, and lands on 256 (8-bit sub-codes — the
     * faiss production default) at ~131k vectors and beyond. Training
-    * stays n·k_pq·DIM per Lloyd round with a broadcast codebook;
+    * stays n·k_pq·DIM per Lloyd round (one `mapPartitions` + collect
+    * against a driver-held codebook, [[VectorOps.pqQuantize]]);
     * the ADC table grows to nprobe·m·k_pq entries — still KBs.
     * 1-row driver edge, mirrored from COUNT(*) in the oracles
     * ([[pqKSqlCte]]).
@@ -2432,14 +2348,16 @@ object Similarity extends QueryPack {
   }
 
   /** The bounded queries' (qid, cell) route under `probe` as one local
-    * leaf: [[ServeOps]] routes the query vectors (vec_id < 20) on the
-    * driver against the collected half-space codebook `cent` — the
-    * router point serving uses.
+    * leaf: [[ServeOps]] routes the query vectors (vec_id < 20) of the
+    * (vec_id, v, n2) frame `arrs` on the driver against the collected
+    * half-space codebook `cent` — the router point serving uses. The
+    * trained-IMI reports pass their pinned [[e6Arrays]], so the
+    * collect reads the cached rows.
     */
-  private def routeLeaf(x: DataFrame, cent: DataFrame, k1: Int,
+  private def routeLeaf(arrs: DataFrame, cent: DataFrame, k1: Int,
       probe: ServeOps.Probe): DataFrame =
-    ServeOps.routeFrame(x.sparkSession, ServeOps.imi(cent, k1, probe),
-      ServeOps.queryVectors(IndexStore.vectorRows(x), 20))
+    ServeOps.routeFrame(arrs.sparkSession, ServeOps.imi(cent, k1, probe),
+      ServeOps.queryVectors(arrs, 20))
 
   /** Releases the [[CacheScope]]; kept for the benchmark harness
     * (`perfbench/`), whose between-pass reset calls it.
@@ -2474,44 +2392,101 @@ object Similarity extends QueryPack {
   private def e6Arrays(x: DataFrame): DataFrame =
     CacheScope.pin(IndexStore.vectorRows(x))
 
-  /** Assemble the (qid, n_scanned, n_hits) serving report shared by
-    * the whole trained-IVF family: rank the served candidates
-    * (`scored`: qid, cid, dist) to top-5, count hits against the
-    * exact integer-L2 full-scan top-5 over `arrs`.
+  /** The grading blocks every ANN recall report shares. The exact
+    * side is one full scan of the bounded queries; the served side is
+    * whatever the index scanned; both rank by (score, cid asc) — L2
+    * reports by (dist asc, cid asc) ([[ServeOps.groundTruthL2]]),
+    * inner-product and cosine reports by their score descending.
+    *
+    * n_hits per qid: |served top-5 ∩ exact top-5|, over two ranked
+    * top-5 frames ([[ServeOps.top5]]).
     */
-  private def ivfServingReport(scored: DataFrame, arrs: DataFrame,
-      cost: Option[DataFrame] = None): DataFrame = {
-    val nScanned = cost.getOrElse(scored).groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_scanned"))
-    val servedTop = TopKOps.topKPerGroup(scored, Seq(col("qid")),
-      Seq(col("dist").asc, col("cid").asc), 5)
-      .select(col("qid"), col("cid").as("served_cid"))
-    val qv = arrs.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("n2").as("qn2"))
-    val exactTop = TopKOps.topKPerGroup(
-      qv.join(arrs.select(col("vec_id").as("cid"), col("v").as("cv"),
-          col("n2").as("cn2")), col("qid") =!= col("cid"))
-        .select(col("qid"), col("cid"),
-          (col("qn2") + col("cn2") -
-            lit(2L) * VectorOps.dot(col("qv"), col("cv")).cast("long"))
-            .as("dist")),
-      Seq(col("qid")), Seq(col("dist").asc, col("cid").asc), 5)
-      .select(col("qid"), col("cid"))
-    exactTop.join(servedTop, Seq("qid"))
+  private def hits(exactTop: DataFrame, servedTop: DataFrame): DataFrame =
+    exactTop.select(col("qid"), col("cid"))
+      .join(servedTop.select(col("qid"), col("cid").as("served_cid")),
+        Seq("qid"))
       .groupBy(col("qid"))
       .agg(sum(when(col("cid") === col("served_cid"), lit(1L))
         .otherwise(lit(0L))).as("n_hits"))
+
+  /** The (qid, n_scanned, n_hits) serving report: the served candidates
+    * (`scored`: qid, cid, score) ranked by (`order`, cid asc) and graded
+    * against `exactTop`; n_scanned counts the rows of `cost` (the
+    * candidates themselves unless a shortlist re-ranks them) per qid.
+    */
+  private def ivfServingReport(scored: DataFrame, exactTop: DataFrame,
+      order: org.apache.spark.sql.Column = col("dist").asc,
+      cost: Option[DataFrame] = None): DataFrame = {
+    val nScanned = cost.getOrElse(scored).groupBy(col("qid"))
+      .agg(count(lit(1)).as("n_scanned"))
+    hits(exactTop, ServeOps.top5(scored, order))
       .join(nScanned, Seq("qid"))
       .select(col("qid"), col("n_scanned"), col("n_hits"))
       .orderBy(col("qid"))
   }
 
+  /** e6 inner-product scores (qid, cid, score) of the query rows `qs`
+    * against every other (vec_id, v) row of `cands`.
+    */
+  private def ipScored(qs: DataFrame, cands: DataFrame): DataFrame =
+    qs.join(cands.select(col("vec_id").as("cid"), col("v").as("cv")),
+        col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"),
+        VectorOps.dot(col("qv"), col("cv")).cast("long").as("score"))
+
+  /** The routed-cell scan: route (qid, cell) ⋈ the query rows of `arrs`
+    * ⋈ `members` (cid, cell, cv, cn2) on the cell key, each query's own
+    * row excluded, scored by exact integer L2 → (qid, cid, dist).
+    */
+  private def cellScan(route: DataFrame, arrs: DataFrame,
+      members: DataFrame): DataFrame =
+    route.join(ServeOps.queryRows(arrs, 20), Seq("qid"))
+      .join(members, Seq("cell"))
+      .filter(col("cid") =!= col("qid"))
+      .select(col("qid"), col("cid"),
+        VectorOps.l2E6(col("qv"), col("qn2"), col("cv"), col("cn2"))
+          .as("dist"))
+
+  /** The bounded queries' subvectors (qid, sub, j, qx) of a
+    * (vec_id, sub, j, x) subspace frame.
+    */
+  private def querySubs(xs: DataFrame): DataFrame =
+    xs.filter(col("vec_id") < 20)
+      .select(col("vec_id").as("qid"), col("sub"), col("j"),
+        col("x").as("qx"))
+
+  /** The per-query ADC distance table: Σ(qx−v)² of each query
+    * subvector (qid, [cell,] sub, j, qx) against every centroid of the
+    * (sub, c, j, v) codebook `book`, per (qid, [cell,] sub, c). The
+    * residual path keys it by the probed cell too, since the query's
+    * residual differs per cell.
+    */
+  private def adcTable(qx: DataFrame, book: DataFrame): DataFrame = {
+    val keys = qx.columns.filterNot(Set("sub", "j", "qx")) ++ Seq("sub", "c")
+    qx.join(broadcast(book), Seq("sub", "j"))
+      .groupBy(keys.map(col).toIndexedSeq: _*)
+      .agg(sum((col("qx") - col("v")) * (col("qx") - col("v"))).as("dd"))
+  }
+
+  /** ADC scores (qid, cid, dist) of the routed cells' members: each
+    * member's codes (vec_id, sub, c) looked up in `tab` ([[adcTable]])
+    * on its key columns and summed.
+    */
+  private def routedAdc(route: DataFrame, cells: DataFrame,
+      codes: DataFrame, tab: DataFrame): DataFrame =
+    route.join(cells, Seq("cell"))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("cell"), col("vec_id").as("cid"))
+      .join(codes.withColumnRenamed("vec_id", "cid"), Seq("cid"))
+      .join(broadcast(tab), tab.columns.filterNot(_ == "dd").toSeq)
+      .groupBy(col("qid"), col("cid"))
+      .agg(sum(col("dd")).as("dist"))
+
   /** q251: TRAINED-quantizer IVF serving — closes the one gap between
     * this pack's IVF family (q37/q85/q238/q243-q245 route on LABEL
     * cells, a partition the data happens to ship) and a real index:
     * the coarse quantizer here is TRAINED — k=16 full-space centroids
-    * from 2 integer-exact Lloyd rounds ([[VectorOps.pqCodebook]] with
+    * from 2 integer-exact Lloyd rounds ([[VectorOps.pqQuantize]] with
     * one subspace = plain k-means; hash-rank seeding, argmin
     * tie-breaks, shift-floor means — every step the q241 oracle
     * already replays). Queries route to their nprobe=2 nearest
@@ -2520,9 +2495,10 @@ object Similarity extends QueryPack {
     * exact full-scan top-5 (the recall). This is faiss IndexIVFFlat
     * end to end: train → assign → route → scan → rank, every stage
     * DuckDB-replayed with the Lloyd rounds unrolled as CTEs. Scale
-    * shape: training is linear passes with a broadcast codebook;
-    * membership is one argmin per vector; serving joins on the
-    * trained cell id — candidate-driven, never queries×corpus.
+    * shape: each Lloyd round is one `mapPartitions` + collect against
+    * a driver-held codebook; membership is one argmin per vector;
+    * serving joins on the trained cell id — candidate-driven, never
+    * queries×corpus.
     * Reference analogue: hw4's cosine top-1 (hw4/hw4.py:102-117)
     * behind a trained router.
     *
@@ -2554,54 +2530,11 @@ object Similarity extends QueryPack {
     // snapshot, every serving query after that routes off a file scan
     val cent = IndexStore.codebook(xs, k = k, rounds = 2)
     val cells = IndexStore.codes(xs, k = k, rounds = 2)
-      .select(col("vec_id"), col("c"))
-    val qxs = xs.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("sub"), col("j"),
-        col("x").as("qx"))
-    val route = TopKOps.topKPerGroup(
-      qxs.join(broadcast(cent), Seq("sub", "j"))
-        .groupBy(col("qid"), col("c"))
-        .agg(sum((col("qx") - col("v")) * (col("qx") - col("v")))
-          .as("dd")),
+      .select(col("vec_id"), col("c").as("cell"))
+    val route = TopKOps.topKPerGroup(adcTable(querySubs(xs), cent),
       Seq(col("qid")), Seq(col("dd").asc, col("c").asc), 2)
-      .select(col("qid"), col("c"))
-    // arrs feeds the query vectors, the member scan and the exact
-    // top-5; scanned is both ranked and counted — pinned (see [[release]])
-    val arrs = e6Arrays(x)
-    val qv = arrs.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("n2").as("qn2"))
-    val members = cells.join(arrs, Seq("vec_id"))
-      .select(col("vec_id").as("cid"), col("c"), col("v").as("cv"),
-        col("n2").as("cn2"))
-    val scanned = CacheScope.pin(route.join(qv, Seq("qid"))
-      .join(members, Seq("c"))
-      .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"),
-        (col("qn2") + col("cn2") -
-          lit(2L) * VectorOps.dot(col("qv"), col("cv")).cast("long"))
-          .as("dist")))
-    val nScanned = scanned.groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_scanned"))
-    val ivfTop = TopKOps.topKPerGroup(scanned, Seq(col("qid")),
-      Seq(col("dist").asc, col("cid").asc), 5)
-      .select(col("qid"), col("cid").as("ivf_cid"))
-    val exactTop = TopKOps.topKPerGroup(
-      qv.join(arrs.select(col("vec_id").as("cid"), col("v").as("cv"),
-          col("n2").as("cn2")), col("qid") =!= col("cid"))
-        .select(col("qid"), col("cid"),
-          (col("qn2") + col("cn2") -
-            lit(2L) * VectorOps.dot(col("qv"), col("cv")).cast("long"))
-            .as("dist")),
-      Seq(col("qid")), Seq(col("dist").asc, col("cid").asc), 5)
-      .select(col("qid"), col("cid"))
-    exactTop.join(ivfTop, Seq("qid"))
-      .groupBy(col("qid"))
-      .agg(sum(when(col("cid") === col("ivf_cid"), lit(1L))
-        .otherwise(lit(0L))).as("n_hits"))
-      .join(nScanned, Seq("qid"))
-      .select(col("qid"), col("n_scanned"), col("n_hits"))
-      .orderBy(col("qid"))
+      .select(col("qid"), col("c").as("cell"))
+    flatReport(route, cells, e6Arrays(x))
   }
 
   private val q251Sql = trainedIvfSql(kkCte = "", seedLimit = "16")
@@ -2618,7 +2551,7 @@ object Similarity extends QueryPack {
     * the 10× sf1 step before this shape. The multi-index squares a
     * cheap quantizer instead: the vector splits into TWO 32-dim
     * halves, ONE k1-centroid codebook is trained over the half-space
-    * frame ([[VectorOps.pqCodebook]] with m=2 — machinery and oracle
+    * frame ([[VectorOps.pqQuantize]] with m=2 — machinery and oracle
     * chain identical to q241's PQ), and the serving cell is the
     * PRODUCT (c_hi·k1 + c_lo) — k1² cells for n·k1·dims train/encode
     * cost. k1 = 2^⌈b/2⌉ with b = [[IndexStore.scaledBitsRow]] at
@@ -2664,7 +2597,9 @@ object Similarity extends QueryPack {
       k1: Int, nprobe: Int, rounds: Int): DataFrame = {
     val x = liftedX(s, d)
     val (cent, cells) = imiQuantizer(x, k1, rounds)
-    imiFlatReport(routeLeaf(x, cent, k1, ServeOps.NProbe(nprobe)), cells, x)
+    val arrs = e6Arrays(x)
+    flatReport(routeLeaf(arrs, cent, k1, ServeOps.NProbe(nprobe)),
+      cells, arrs)
   }
 
   /** [[imiIvfReportAtR]] with the scan-BUDGET route — q258's shape
@@ -2678,32 +2613,25 @@ object Similarity extends QueryPack {
     // the member scan (see [[release]])
     val (cent, cellsRaw) = imiQuantizer(x, k1, rounds, trainNOverride)
     val cells = CacheScope.pin(cellsRaw)
-    val route = routeLeaf(x, cent, k1,
+    val arrs = e6Arrays(x)
+    val route = routeLeaf(arrs, cent, k1,
       ServeOps.ScanBudget(budget, ServeOps.sizes(cells, "cell")))
-    imiFlatReport(route, cells, x)
+    flatReport(route, cells, arrs)
   }
 
   /** Exact-L2 scan of the routed cells' members + the serving report
-    * — the flat-IMI tail shared by the fixed-count and budget routes.
+    * — the flat tail shared by q251's trained cells and the IMI
+    * fixed-count and budget routes. `arrs` ([[e6Arrays]]) feeds the
+    * query vectors, the member scan and the exact top-5.
     */
-  private def imiFlatReport(route: DataFrame, cells: DataFrame,
-      x: DataFrame): DataFrame = {
-    val arrs = e6Arrays(x)
-    val qv = arrs.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("n2").as("qn2"))
+  private def flatReport(route: DataFrame, cells: DataFrame,
+      arrs: DataFrame): DataFrame = {
     val members = cells.join(arrs, Seq("vec_id"))
       .select(col("vec_id").as("cid"), col("cell"), col("v").as("cv"),
         col("n2").as("cn2"))
-    val scored = route.join(qv, Seq("qid"))
-      .join(members, Seq("cell"))
-      .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"),
-        (col("qn2") + col("cn2") -
-          lit(2L) * VectorOps.dot(col("qv"), col("cv")).cast("long"))
-          .as("dist"))
     // pinned: the report ranks it AND counts it (see [[release]])
-    ivfServingReport(CacheScope.pin(scored), arrs)
+    ivfServingReport(CacheScope.pin(cellScan(route, arrs, members)),
+      ServeOps.groundTruthL2(arrs, 20))
   }
 
   /** One DuckDB Lloyd round (assignment + shift-floor mean update)
@@ -3033,18 +2961,9 @@ object Similarity extends QueryPack {
       .withColumn("cum", sum(col("sz")).over(w))
       .filter(col("cum") - col("sz") < budget)
       .select(col("qid"), col("cell"))
-    val qv = arrs.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("n2").as("qn2"))
-    val scored = route.join(qv, Seq("qid"))
-      .join(members, Seq("cell"))
-      .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"),
-        (col("qn2") + col("cn2") -
-          lit(2L) * VectorOps.dot(col("qv"), col("cv")).cast("long"))
-          .as("dist"))
     // pinned: the report ranks it AND counts it (see [[release]])
-    ivfServingReport(CacheScope.pin(scored), arrs)
+    ivfServingReport(CacheScope.pin(cellScan(route, arrs, members)),
+      ServeOps.groundTruthL2(arrs, 20))
   }
 
   private val q259Sql = {
@@ -3235,25 +3154,14 @@ object Similarity extends QueryPack {
     val xsp = VectorOps.pqSubspaces(x, subDim = 8) // PQ frame
     val pqCent = IndexStore.codebook(xsp, k = kq, rounds = 2)
     val pqCodes = IndexStore.codes(xsp, k = kq, rounds = 2)
-    val route = routeLeaf(x, cent, k1, ServeOps.NProbe(nprobe))
-    // per-query ADC distance table over the PQ codebook (q241's rule)
-    val qxsp = xsp.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("sub"), col("j"),
-        col("x").as("qx"))
-    val tab = qxsp.join(broadcast(pqCent), Seq("sub", "j"))
-      .groupBy(col("qid"), col("sub"), col("c"))
-      .agg(sum((col("qx") - col("v")) * (col("qx") - col("v"))).as("dd"))
+    val arrs = e6Arrays(x)
+    val route = routeLeaf(arrs, cent, k1, ServeOps.NProbe(nprobe))
     // candidates = members of the probed cells only; ADC = m lookups
-    val cands = route.join(cells, Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cid"))
-    val adc = cands
-      .join(pqCodes.withColumnRenamed("vec_id", "cid"), Seq("cid"))
-      .join(broadcast(tab), Seq("qid", "sub", "c"))
-      .groupBy(col("qid"), col("cid"))
-      .agg(sum(col("dd")).as("dist"))
+    // in the per-query table over the PQ codebook (q241's rule)
+    val adc = routedAdc(route, cells, pqCodes,
+      adcTable(querySubs(xsp), pqCent))
     // pinned: the report ranks it AND counts it (see [[release]])
-    ivfServingReport(CacheScope.pin(adc), e6Arrays(x))
+    ivfServingReport(CacheScope.pin(adc), ServeOps.groundTruthL2(arrs, 20))
   }
 
   /** The m=8 PQ Lloyd chain + per-query ADC tables, shared by the
@@ -3320,7 +3228,7 @@ object Similarity extends QueryPack {
     * measures what residual encoding buys). Residual safety: e6
     * unit-vector components and their cell means are each in
     * [−10⁶, 10⁶], so residuals are ≥ −2·10⁶ and the shift-floor mean
-    * update in [[VectorOps.pqCodebook]] keeps its
+    * update in [[VectorOps.pqQuantize]] keeps its
     * non-negative-numerator contract unchanged. Every table
     * (half-space codebook, composite cells, residual codebook,
     * residual codes) is a standing [[IndexStore]] artifact; the
@@ -3367,7 +3275,7 @@ object Similarity extends QueryPack {
   private[graft] def imiResidualReportAt(s: SparkSession, d: String,
       k1: Int, nprobe: Int): DataFrame = {
     val (adc, arrs) = imiResidualAdc(s, d, k1, nprobe)
-    ivfServingReport(adc, arrs)
+    ivfServingReport(adc, ServeOps.groundTruthL2(arrs, 20))
   }
 
   /** The residual-ADC candidate frame (qid, cid, ADC dist) plus the
@@ -3396,7 +3304,8 @@ object Similarity extends QueryPack {
     val rxs = imiResidualSubspaces(s, d, k1, rounds)
     val rCent = IndexStore.codebook(rxs, k = kq, rounds = 2)
     val rCodes = IndexStore.codes(rxs, k = kq, rounds = 2)
-    val route = routeLeaf(x, cent, k1, probeOf(cells))
+    val arrs = e6Arrays(x)
+    val route = routeLeaf(arrs, cent, k1, probeOf(cells))
     // per-(query, probed cell) residual → per-cell ADC table: the
     // probed composite cell decomposes into its two half codes
     // (cell div k1, cell mod k1), each resolving its own half-space
@@ -3413,20 +3322,10 @@ object Similarity extends QueryPack {
         Seq("hsub", "hc", "hj"))
       .select(col("qid"), col("cell"), expr("dim div 8").as("sub"),
         (col("dim") % 8).as("j"), (col("qx") - col("cv")).as("qx"))
-    val tab = qr.join(broadcast(rCent), Seq("sub", "j"))
-      .groupBy(col("qid"), col("cell"), col("sub"), col("c"))
-      .agg(sum((col("qx") - col("v")) * (col("qx") - col("v"))).as("dd"))
-    val cands = route.join(cells, Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("cell"), col("vec_id").as("cid"))
-    val adc = cands
-      .join(rCodes.withColumnRenamed("vec_id", "cid"), Seq("cid"))
-      .join(broadcast(tab), Seq("qid", "cell", "sub", "c"))
-      .groupBy(col("qid"), col("cid"))
-      .agg(sum(col("dd")).as("dist"))
+    val adc = routedAdc(route, cells, rCodes, adcTable(qr, rCent))
     // pinned: q255 ranks it AND counts it; q257/q260 shortlist it AND
     // count it (queries × scanned rows — bounded)
-    (CacheScope.pin(adc), e6Arrays(x))
+    (CacheScope.pin(adc), arrs)
   }
 
   /** Exact-refine shortlist size for q257: the top-R ADC candidates
@@ -3472,9 +3371,6 @@ object Similarity extends QueryPack {
     val shortlist = TopKOps.topKPerGroup(adc, Seq(col("qid")),
       Seq(col("dist").asc, col("cid").asc), REFINE_R)
       .select(col("qid"), col("cid"))
-    val qv = arrs.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("n2").as("qn2"))
     // BOUNDED-GATHER refine (round 14, closing the r12/r13 verdict
     // item): the shortlist is ≤ 20 queries × R rows BY CONSTRUCTION
     // (a per-query top-R over the pinned adc frame), so its candidate
@@ -3492,12 +3388,12 @@ object Similarity extends QueryPack {
       .join(arrs.filter(col("vec_id").isin(cids: _*))
         .select(col("vec_id").as("cid"), col("v").as("cv"),
           col("n2").as("cn2")), Seq("cid"))
-      .join(broadcast(qv), Seq("qid"))
+      .join(broadcast(ServeOps.queryRows(arrs, 20)), Seq("qid"))
       .select(col("qid"), col("cid"),
-        (col("qn2") + col("cn2") -
-          lit(2L) * VectorOps.dot(col("qv"), col("cv")).cast("long"))
+        VectorOps.l2E6(col("qv"), col("qn2"), col("cv"), col("cn2"))
           .as("dist"))
-    ivfServingReport(refined, arrs, cost = Some(adc))
+    ivfServingReport(refined, ServeOps.groundTruthL2(arrs, 20),
+      cost = Some(adc))
   }
 
   /** The residual-PQ CTE block shared by every residual/refine oracle

@@ -342,4 +342,28 @@ class PropertySpec extends AnyFunSuite {
       CacheScope.release()
     }
   }
+
+  test("ANN recall reports (q241, q251) are invariant under shuffle " +
+      "partitioning and AQE, quantizer build included") {
+    import graft.ops.ArtifactStore
+    val dir = "/root/testdata/sf0.001"
+    val parts = "spark.sql.shuffle.partitions"
+    val aqe = "spark.sql.adaptive.enabled"
+    val saved = Seq(parts, aqe).map(k => k -> spark.conf.getOption(k))
+    def reports(nParts: Int, adaptive: Boolean): Seq[Seq[String]] = {
+      spark.conf.set(parts, nParts.toLong)
+      spark.conf.set(aqe, adaptive)
+      // a fresh registry, so each config also trains the quantizers
+      ArtifactStore.clear()
+      Seq("q241_pq_adc_recall", "q251_trained_ivf").map(q =>
+        SparkEntry.run(spark, q, dir)(_.collect().map(_.toString).toSeq))
+    }
+    try {
+      val serial = reports(1, adaptive = false)
+      assert(serial.forall(_.size == 20))
+      assert(reports(7, adaptive = true) === serial)
+    } finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
 }
