@@ -54,15 +54,10 @@ object IndexStore {
     * `rn <= trainN` cut over the shared `seedrank` CTE
     * ([[trainNSql]]), and the seeds are BY CONSTRUCTION the sample's
     * own first k rows (same ordering), so sampled training re-uses
-    * the seeding machinery the oracles already replay. The env
-    * overrides exist so the twin can be FORCED to bite at small n
-    * and hash-gated (both engines read the same vals — they cannot
-    * desync); committed artifacts always use the defaults.
+    * the seeding machinery the oracles already replay.
     */
-  private[graft] val TRAIN_MULT: Int =
-    sys.env.getOrElse("SPARK_GRAFT_TRAIN_MULT", "256").toInt
-  private[graft] val TRAIN_FLOOR: Int =
-    sys.env.getOrElse("SPARK_GRAFT_TRAIN_FLOOR", "100000").toInt
+  private[graft] val TRAIN_MULT: Int = 256
+  private[graft] val TRAIN_FLOOR: Int = 100000
 
   /** Training-sample size for a k-centroid quantizer — pure integer
     * driver arithmetic (a trainer resolves its sample before
@@ -427,6 +422,13 @@ object IndexStore {
         array_sort(collect_list(struct(col("dim"), col("x")))),
         t => t.getField("x").cast("double")).as("v"))
       .withColumn("n2", VectorOps.dot(col("v"), col("v")).cast("long"))
+
+  /** DuckDB twin of [[vectorRows]]' (vec_id, v) over the lifted CTE
+    * `src`, reading its column `x`: the CTE `name`.
+    */
+  def vectorRowsSql(name: String, src: String, x: String = "x"): String =
+    s"""$name AS (SELECT vec_id, list(CAST($x AS DOUBLE) ORDER BY dim) AS v
+              FROM $src GROUP BY 1)"""
 
   /** Count-scaled cell resolution shared by the kNN-graph build and
     * its incremental maintenance (whose rebuild-equivalence proof

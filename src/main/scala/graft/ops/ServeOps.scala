@@ -45,6 +45,21 @@ object ServeOps {
   final case class ScanBudget(budget: Long, sizes: Map[Long, Long])
       extends Probe
 
+  /** DuckDB twin of [[ScanBudget]]: `cellsz` (cell, sz) over the CTE
+    * `cells` (vec_id, cell), and `route` (qid, cell) keeping each
+    * query's cells of `walk` (qid, cell, …) in `order` until the
+    * cumulative occupancy reaches the `bgt` CTE's budget.
+    */
+  def scanBudgetSql(walk: String, order: String): String =
+    s"""cellsz AS (SELECT cell, COUNT(*) AS sz FROM cells GROUP BY 1),
+       route AS (SELECT qid, cell FROM (
+           SELECT w.qid, w.cell, COALESCE(z.sz, 0) AS sz,
+             SUM(COALESCE(z.sz, 0)) OVER (PARTITION BY w.qid
+               ORDER BY $order
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+           FROM $walk w LEFT JOIN cellsz z ON z.cell = w.cell)
+         WHERE cum - sz < (SELECT budget FROM bgt))"""
+
   /** The header of an IMI coarse quantizer: k1 centroids per half. */
   final case class Imi(k1: Int, half: Book, probe: Probe) {
     private val cents = VectorOps.bySub(half)
@@ -177,6 +192,14 @@ object ServeOps {
     TopKOps.topKPerGroup(scored, Seq(col("qid")),
       Seq(order, col("cid").asc), 5)
 
+  /** DuckDB twin of [[top5]]: the CTE `name` (qid, cid) over the CTE
+    * `scored`, ranked by (`order`, cid).
+    */
+  def top5Sql(name: String, scored: String, order: String): String =
+    s"""$name AS (SELECT qid, cid FROM (
+           SELECT qid, cid, RANK() OVER (PARTITION BY qid
+             ORDER BY $order, cid) AS rn FROM $scored) WHERE rn <= 5)"""
+
   /** Exact integer-L2 top-5 (qid, cid) of each query id below `upTo`
     * against every other row of a (vec_id, v, n2) frame: the ground
     * truth of the L2 recall reports and of point serving.
@@ -189,6 +212,16 @@ object ServeOps {
         VectorOps.l2E6(col("qv"), col("qn2"), col("cv"), col("cn2"))
           .as("dist")), col("dist").asc)
       .select(col("qid"), col("cid"))
+
+  /** DuckDB twin of [[groundTruthL2]] over the lifted CTE `x`
+    * ([[VectorOps.liftE6Sql]]): the exact L2 top-5 `et` (qid, cid).
+    */
+  def groundTruthL2Sql(upTo: Long): String =
+    s"""exd AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
+               SUM((q.x - c.x)*(q.x - c.x)) AS dist
+             FROM x q JOIN x c ON c.dim = q.dim AND c.vec_id <> q.vec_id
+             WHERE q.vec_id < $upTo GROUP BY 1, 2),
+       ${top5Sql("et", "exd", "dist")}"""
 
   /** [[groundTruthL2]] collected per qid. */
   def exactTopL2(arrs: DataFrame, upTo: Long): Map[Long, Seq[Long]] =

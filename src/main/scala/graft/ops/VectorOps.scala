@@ -187,6 +187,17 @@ object VectorOps {
         round(col("col") * lit(1000000L)).cast("long").as("x"))
       .repartition(col(idCol))
 
+  /** DuckDB twin of [[liftE6]] over the `embeddings` table: the CTE
+    * `x` (vec_id, dim, x) every exact-integer vector oracle starts
+    * from.
+    */
+  val liftE6Sql: String =
+    """x AS (SELECT vec_id, CAST(i AS BIGINT) AS dim,
+           CAST(ROUND(CAST(e AS DOUBLE)*1000000) AS BIGINT) AS x
+         FROM (SELECT vec_id, unnest(embedding) AS e,
+                      unnest(range(0, len(embedding))) AS i
+               FROM embeddings))"""
+
   /** SQ8 scalar quantization over a lifted (id, dim, x) frame: joins
     * the per-dimension [min,max] (a |dims|-row broadcast), derives the
     * uint8 code `⌊(x−min)·256/(range+1)⌋` and its midpoint
@@ -207,6 +218,17 @@ object VectorOps {
         col("mn") + expr("((2*code + 1) * (rng + 1)) div 512"))
   }
 
+  /** DuckDB twin of [[sq8]] over the lifted CTE `x`: the per-dim
+    * `stats` (dim, mn, mx) and `sq8` (vec_id, dim, x, mn, mx, rng,
+    * code, recon).
+    */
+  val sq8Sql: String =
+    """stats AS (SELECT dim, MIN(x) AS mn, MAX(x) AS mx FROM x GROUP BY 1),
+       sq8 AS (SELECT *, mn + ((2*code + 1) * (rng + 1)) // 512 AS recon
+         FROM (SELECT x.vec_id, x.dim, x.x, mn, mx, mx - mn AS rng,
+                 ((x.x - mn) * 256) // (mx - mn + 1) AS code
+               FROM x JOIN stats USING (dim)))"""
+
   /** The lifted frame split into `m` PQ subspaces: (vec_id, sub, j, x)
     * with sub = dim div subDim, j = dim mod subDim. Pure projection.
     */
@@ -214,6 +236,13 @@ object VectorOps {
       : org.apache.spark.sql.DataFrame =
     x.select(col("vec_id"), expr(s"dim div $subDim").as("sub"),
       (col("dim") % subDim).as("j"), col("x"))
+
+  /** DuckDB twin of [[pqSubspaces]]: the CTE `name` over the lifted
+    * CTE `src`.
+    */
+  def pqSubspacesSql(name: String, subDim: Int, src: String = "x"): String =
+    s"""$name AS (SELECT vec_id, dim // $subDim AS sub, dim % $subDim AS j,
+           x FROM $src)"""
 
   /** Product-quantization codebook AND code table over the subspace
     * frame, from one build: k centroids per subspace trained with
@@ -295,6 +324,70 @@ object VectorOps {
       use(bookFrame(xs.sparkSession, book), encode(g, book))
     } finally g.unpersist()
   }
+
+  /** DuckDB twin of [[pqQuantize]]'s seed ordering over the lifted CTE
+    * `x`: `seedrank` (vec_id, rn), rn ranking the md5-prefix64 of
+    * "pqseed:"+vec_id with a vec_id tie-break. One per oracle: every
+    * [[pqQuantizeSql]] chain in it cuts its seeds and sample here.
+    */
+  val seedRankSql: String =
+    """seedrank AS (SELECT vec_id, ROW_NUMBER() OVER (ORDER BY
+           CAST(('0x' || substr(md5('pqseed:' || vec_id), 1, 15))
+             AS BIGINT), vec_id) AS rn
+         FROM (SELECT DISTINCT vec_id FROM x))"""
+
+  /** DuckDB twin of [[pqQuantize]] over the subspace CTE `xs`, every
+    * name prefixed `p`: the first `k` rows of `seedrank` seed `${p}c0`,
+    * the first `trainN` rows are the training sample `${p}xst`, the
+    * `rounds` Lloyd rounds unroll into `${p}c1` … `${p}c<rounds>` (the
+    * trained (sub, c, j, v) codebook), and `${p}codes` (vec_id, sub, c)
+    * encodes every row of `xs` under it.
+    */
+  def pqQuantizeSql(xs: String, k: String, trainN: String, rounds: Int,
+      p: String = ""): String = {
+    val xst = s"${p}xst"
+    // one round: assignment against `cp`, then the shift-floor mean
+    // update; a centroid whose cluster empties keeps its value
+    val chain = (1 to rounds).map { i =>
+      val (cp, a, u) = (s"${p}c${i - 1}", s"${p}a$i", s"${p}u$i")
+      s"""${argminSql(a, xst, cp)},
+       $u AS (SELECT a.sub, a.c, t.j,
+           (SUM(t.x) + COUNT(*) * $SHIFT) // COUNT(*) - $SHIFT AS nv
+         FROM $a a JOIN $xst t ON t.vec_id = a.vec_id AND t.sub = a.sub
+         GROUP BY 1, 2, 3),
+       ${p}c$i AS (SELECT b.sub, b.c, b.j, COALESCE(u.nv, b.v) AS v
+         FROM $cp b LEFT JOIN $u u
+           ON u.sub = b.sub AND u.c = b.c AND u.j = b.j)"""
+    }
+    (Seq(
+      s"""${p}seeds AS (SELECT vec_id, rn - 1 AS c FROM seedrank
+         WHERE rn <= ($k))""",
+      s"${p}tsam AS (SELECT vec_id FROM seedrank WHERE rn <= ($trainN))",
+      s"""$xst AS (SELECT t.vec_id, t.sub, t.j, t.x
+         FROM $xs t JOIN ${p}tsam s ON s.vec_id = t.vec_id)""",
+      s"""${p}c0 AS (SELECT t.sub, s.c, t.j, t.x AS v
+         FROM ${p}seeds s JOIN $xs t ON t.vec_id = s.vec_id)""") ++ chain :+
+      argminSql(s"${p}codes", xs, s"${p}c$rounds")).mkString(",\n       ")
+  }
+
+  /** The nearest centroid (vec_id, sub, c) of every row of subspace CTE
+    * `xs` under codebook `book`: [[nearest]]'s least Σ(x−v)², lowest c
+    * on a tie.
+    */
+  private def argminSql(name: String, xs: String, book: String): String =
+    s"""$name AS (SELECT vec_id, sub, c FROM (
+         SELECT vec_id, sub, c, ROW_NUMBER() OVER (PARTITION BY vec_id, sub
+           ORDER BY dd, c) AS rn
+         FROM (${subDistSql(xs, book)})) WHERE rn = 1)"""
+
+  /** Σ(x−v)² per (vec_id, sub, c) of the rows of subspace CTE `xs`
+    * (alias q, filtered by `where`) against every centroid of the
+    * (sub, c, j, v) codebook `book`.
+    */
+  def subDistSql(xs: String, book: String, where: String = ""): String =
+    s"""SELECT q.vec_id, q.sub, c.c, SUM((q.x - c.v)*(q.x - c.v)) AS dd
+           FROM $xs q JOIN $book c ON c.sub = q.sub AND c.j = q.j $where
+           GROUP BY 1, 2, 3"""
 
   /** The trained codebook alone ([[pqQuantize]]'s first output). */
   def pqCodebook(xs: DataFrame, k: Int, rounds: Int,

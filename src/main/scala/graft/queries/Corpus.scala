@@ -626,9 +626,14 @@ object Corpus extends QueryPack {
   private def q110Bm25Search(s: SparkSession, d: String): DataFrame =
     CorpusOps.bm25TopK(docs(s, d), q110Terms, topK = 15)
 
-  private val q110Sql = {
+  /** DuckDB twin of [[CorpusOps.bm25TopK]] over the q110 bag, every
+    * document scored and none cut: the tokens `t` (doc_id, toks), the
+    * BM25 chain dl → tf → dfq → tots → sc0–sc3, and `bm` (doc_id,
+    * n_terms_hit, score_e6).
+    */
+  private val bm25Ctes = {
     val terms = q110Terms.map(t => s"'$t'").mkString(", ")
-    s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+    s"""t AS (SELECT doc_id, $toksSql AS toks FROM documents),
        dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
        tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
               FROM (SELECT doc_id, unnest(toks) AS word FROM t)
@@ -648,12 +653,16 @@ object Corpus extends QueryPack {
                  (1000000 * n_total) // df AS idf_e6 FROM sc1),
        sc3 AS (SELECT doc_id,
                  (idf_e6 * tf * 22000) // (tf * 10000 + 12 * norm_e3)
-                   AS contrib_e6 FROM sc2)
-       SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms_hit,
-         CAST(sum(contrib_e6) AS BIGINT) AS score_e6
-       FROM sc3 GROUP BY doc_id
-       ORDER BY score_e6 DESC, doc_id ASC LIMIT 15"""
+                   AS contrib_e6 FROM sc2),
+       bm AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms_hit,
+           CAST(sum(contrib_e6) AS BIGINT) AS score_e6
+         FROM sc3 GROUP BY doc_id)"""
   }
+
+  private val q110Sql =
+    s"""WITH $bm25Ctes
+       SELECT doc_id, n_terms_hit, score_e6 FROM bm
+       ORDER BY score_e6 DESC, doc_id ASC LIMIT 15"""
 
   /** Dense 1-based rank over a top-k-bounded score list. The global
     * window is deliberate: inputs are top-k results (≤ depth rows), so
@@ -666,6 +675,16 @@ object Corpus extends QueryPack {
         .over(Window.orderBy(col("score_e6").desc, col("doc_id").asc))
         .cast("long"))
   }
+
+  /** SQL twin of [[rankedTop]] cut at `depth`: the CTE `name`
+    * (doc_id, rnk) over the CTE `scored` (doc_id, score_e6).
+    */
+  private def rankedTopSql(name: String, scored: String,
+      depth: Int): String =
+    s"""$name AS (SELECT doc_id, rnk FROM (
+         SELECT doc_id, CAST(row_number() OVER
+             (ORDER BY score_e6 DESC, doc_id ASC) AS BIGINT) AS rnk
+           FROM $scored) WHERE rnk <= $depth)"""
 
   /** q113: hybrid retrieval with Borda rank fusion
     * ([[CorpusOps.bordaFuse]]) — BM25 (q110's ranker) fused with plain
@@ -687,44 +706,15 @@ object Corpus extends QueryPack {
       .limit(10)
   }
 
-  private val q113Sql = {
-    val terms = q110Terms.map(t => s"'$t'").mkString(", ")
-    s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-       dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-       tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
-              FROM (SELECT doc_id, unnest(toks) AS word FROM t)
-              WHERE word IN ($terms) GROUP BY doc_id, word),
-       dfq AS (SELECT word, CAST(count(*) AS BIGINT) AS df
-               FROM tf GROUP BY word),
-       tots AS (SELECT CAST(count(*) AS BIGINT) AS n_total,
-                CAST(sum(dl) AS BIGINT) AS tok_total FROM dl),
-       sc0 AS (SELECT tf.doc_id, tf.tf, dl.dl, dfq.df, n_total, tok_total
-               FROM tf JOIN dl USING (doc_id) JOIN dfq USING (word)
-               CROSS JOIN tots),
-       sc1 AS (SELECT *, (1000 * tok_total) // n_total AS avgdl_e3
-               FROM sc0),
-       sc2 AS (SELECT *,
-                 250 + (750 * ((1000000 * dl) // avgdl_e3)) // 1000
-                   AS norm_e3,
-                 (1000000 * n_total) // df AS idf_e6 FROM sc1),
-       sc3 AS (SELECT doc_id,
-                 (idf_e6 * tf * 22000) // (tf * 10000 + 12 * norm_e3)
-                   AS contrib_e6 FROM sc2),
-       bm AS (SELECT doc_id, CAST(sum(contrib_e6) AS BIGINT) AS score_e6
-              FROM sc3 GROUP BY doc_id),
-       bmr AS (SELECT doc_id, rnk FROM (
-         SELECT doc_id, CAST(row_number() OVER
-             (ORDER BY score_e6 DESC, doc_id ASC) AS BIGINT) AS rnk
-           FROM bm) WHERE rnk <= 15),
+  private val q113Sql =
+    s"""WITH $bm25Ctes,
+       ${rankedTopSql("bmr", "bm", 15)},
        ti AS (SELECT tf.doc_id,
               CAST(sum(tf.tf * ((1000000 * n_total) // df)) AS BIGINT)
                 AS score_e6
               FROM tf JOIN dfq USING (word) CROSS JOIN tots
               GROUP BY tf.doc_id),
-       tir AS (SELECT doc_id, rnk FROM (
-         SELECT doc_id, CAST(row_number() OVER
-             (ORDER BY score_e6 DESC, doc_id ASC) AS BIGINT) AS rnk
-           FROM ti) WHERE rnk <= 15)
+       ${rankedTopSql("tir", "ti", 15)}
        SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
          CAST(COALESCE(a.rnk, 0) AS BIGINT) AS bm25_rank,
          CAST(COALESCE(b.rnk, 0) AS BIGINT) AS tfidf_rank,
@@ -732,7 +722,6 @@ object Corpus extends QueryPack {
            AS fused_pts
        FROM bmr a FULL JOIN tir b ON a.doc_id = b.doc_id
        ORDER BY fused_pts DESC, doc_id ASC LIMIT 10"""
-  }
 
   /** q114: concat-and-split sequence packing
     * ([[CorpusOps.packSequences]]) — every document's training-
@@ -801,37 +790,11 @@ object Corpus extends QueryPack {
           expr("1000000 div first_rel_rank")).as("mrr_e6"))
   }
 
-  private val q121Sql = {
-    val terms = q110Terms.map(t => s"'$t'").mkString(", ")
-    s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+  private val q121Sql =
+    s"""WITH $bm25Ctes,
        rel AS (SELECT doc_id, CAST(1 AS BIGINT) AS is_rel FROM t
                WHERE list_contains(toks, 'dup')),
-       dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-       tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
-              FROM (SELECT doc_id, unnest(toks) AS word FROM t)
-              WHERE word IN ($terms) GROUP BY doc_id, word),
-       dfq AS (SELECT word, CAST(count(*) AS BIGINT) AS df
-               FROM tf GROUP BY word),
-       tots AS (SELECT CAST(count(*) AS BIGINT) AS n_total,
-                CAST(sum(dl) AS BIGINT) AS tok_total FROM dl),
-       sc0 AS (SELECT tf.doc_id, tf.tf, dl.dl, dfq.df, n_total, tok_total
-               FROM tf JOIN dl USING (doc_id) JOIN dfq USING (word)
-               CROSS JOIN tots),
-       sc1 AS (SELECT *, (1000 * tok_total) // n_total AS avgdl_e3
-               FROM sc0),
-       sc2 AS (SELECT *,
-                 250 + (750 * ((1000000 * dl) // avgdl_e3)) // 1000
-                   AS norm_e3,
-                 (1000000 * n_total) // df AS idf_e6 FROM sc1),
-       sc3 AS (SELECT doc_id,
-                 (idf_e6 * tf * 22000) // (tf * 10000 + 12 * norm_e3)
-                   AS contrib_e6 FROM sc2),
-       bm AS (SELECT doc_id, CAST(sum(contrib_e6) AS BIGINT) AS score_e6
-              FROM sc3 GROUP BY doc_id),
-       bmr AS (SELECT doc_id, rnk FROM (
-         SELECT doc_id, CAST(row_number() OVER
-             (ORDER BY score_e6 DESC, doc_id ASC) AS BIGINT) AS rnk
-           FROM bm) WHERE rnk <= 15),
+       ${rankedTopSql("bmr", "bm", 15)},
        jr AS (SELECT b.rnk, COALESCE(r.is_rel, 0) AS is_rel
               FROM bmr b LEFT JOIN rel r ON r.doc_id = b.doc_id),
        m AS (SELECT
@@ -847,7 +810,6 @@ object Corpus extends QueryPack {
          CASE WHEN first_rel_rank IS NOT NULL
               THEN 1000000 // first_rel_rank END AS mrr_e6
        FROM m"""
-  }
 
   /** nDCG@10 discount table: round(1e6 / log2(rank+1)) for ranks
     * 1..10, and its prefix sums for the ideal DCG. CONSTANTS, not
@@ -889,38 +851,12 @@ object Corpus extends QueryPack {
   }
 
   private val q197Sql = {
-    val terms = q110Terms.map(t => s"'$t'").mkString(", ")
     val discL = ndcgDisc.mkString("[", ", ", "]")
     val cumL = ndcgCum.mkString("[", ", ", "]")
-    s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+    s"""WITH $bm25Ctes,
        rel AS (SELECT doc_id, CAST(1 AS BIGINT) AS is_rel FROM t
                WHERE list_contains(toks, 'dup')),
-       dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-       tf AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS tf
-              FROM (SELECT doc_id, unnest(toks) AS word FROM t)
-              WHERE word IN ($terms) GROUP BY doc_id, word),
-       dfq AS (SELECT word, CAST(count(*) AS BIGINT) AS df
-               FROM tf GROUP BY word),
-       tots AS (SELECT CAST(count(*) AS BIGINT) AS n_total,
-                CAST(sum(dl) AS BIGINT) AS tok_total FROM dl),
-       sc0 AS (SELECT tf.doc_id, tf.tf, dl.dl, dfq.df, n_total, tok_total
-               FROM tf JOIN dl USING (doc_id) JOIN dfq USING (word)
-               CROSS JOIN tots),
-       sc1 AS (SELECT *, (1000 * tok_total) // n_total AS avgdl_e3
-               FROM sc0),
-       sc2 AS (SELECT *,
-                 250 + (750 * ((1000000 * dl) // avgdl_e3)) // 1000
-                   AS norm_e3,
-                 (1000000 * n_total) // df AS idf_e6 FROM sc1),
-       sc3 AS (SELECT doc_id,
-                 (idf_e6 * tf * 22000) // (tf * 10000 + 12 * norm_e3)
-                   AS contrib_e6 FROM sc2),
-       bm AS (SELECT doc_id, CAST(sum(contrib_e6) AS BIGINT) AS score_e6
-              FROM sc3 GROUP BY doc_id),
-       bmr AS (SELECT doc_id, rnk FROM (
-         SELECT doc_id, CAST(row_number() OVER
-             (ORDER BY score_e6 DESC, doc_id ASC) AS BIGINT) AS rnk
-           FROM bm) WHERE rnk <= 10),
+       ${rankedTopSql("bmr", "bm", 10)},
        dcg AS (SELECT CAST(SUM(COALESCE(r.is_rel, 0) *
                  ($discL)[CAST(b.rnk AS INT)]) AS BIGINT) AS dcg_e6
                FROM bmr b LEFT JOIN rel r ON r.doc_id = b.doc_id),

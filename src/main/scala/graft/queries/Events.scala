@@ -1126,44 +1126,34 @@ object Events extends QueryPack {
     (tree, parts(fs, tree), fs)
   }
 
+  /** Shuffle partitions of a parity gate's replay. */
+  private val STREAM_REPLAY_PARTS = 4
+
   private def streamReplayParity(s: SparkSession, d: String, tag: String,
       mode: String = "complete", stateStoreProvider: Option[String] = None)(
       agg: DataFrame => DataFrame): DataFrame = {
     import graft.streaming.StreamingOps
-    // env-gated floor profile (SPARK_GRAFT_STREAM_PROFILE=1): stderr
-    // breakdown of staging / query-start / replay, the three fixed
-    // costs a 3-micro-batch gate pays regardless of data volume —
-    // the numbers behind the documented harness floor
-    val prof = sys.env.get("SPARK_GRAFT_STREAM_PROFILE").contains("1")
-    def timed[A](label: String)(body: => A): A = {
-      val t = System.nanoTime()
-      val r = body
-      if (prof) System.err.println(
-        f"[stream-prof] $tag $label ${(System.nanoTime() - t) / 1e9}%.3fs")
-      r
-    }
     val run = s"$tag-${java.util.UUID.randomUUID().toString.take(8)}"
     // the staged tree is the shared write-once artifact — the gate
     // only READS it, so there is nothing to build or clean up here
-    val (staging, _, _) = timed("staging")(stagedReplayTree(s, d))
+    val (staging, _, _) = stagedReplayTree(s, d)
     val sink = s"${tag}_sink_$run".replace('-', '_')
     // replay at ≤4 shuffle partitions: a 3-micro-batch gate pays
     // per-partition state commits per store per batch with no
     // parallelism win on gate-sized state; result is
     // partition-count-invariant, only the harness floor changes.
-    // Profiled r10 (SPARK_GRAFT_STREAM_PROFILE breakdown): the
-    // stream-stream interval-join replay reads 4.6-4.9 s at 8
-    // partitions, 3.7 s at 4, 3.6 s at 2 — 4 keeps a 2-store × 3-batch
-    // gate at 24 state commits without going degenerate-serial
-    def replay(): Unit = StreamingOps.withShufflePartitions(s,
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4").toInt) {
-      val query = timed("start")(agg(
-        StreamingOps.readEventsStream(s, staging, maxFilesPerTrigger = 1))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(mode).start())
-      try timed("replay")(query.processAllAvailable())
-      finally query.stop()
-    }
+    // Profiled r10: the stream-stream interval-join replay reads
+    // 4.6-4.9 s at 8 partitions, 3.7 s at 4, 3.6 s at 2 — 4 keeps a
+    // 2-store × 3-batch gate at 24 state commits without going
+    // degenerate-serial
+    def replay(): Unit =
+      StreamingOps.withShufflePartitions(s, STREAM_REPLAY_PARTS) {
+        val query = agg(
+          StreamingOps.readEventsStream(s, staging, maxFilesPerTrigger = 1))
+          .writeStream.format("memory").queryName(sink)
+          .outputMode(mode).start()
+        try query.processAllAvailable() finally query.stop()
+      }
     stateStoreProvider match {
       case Some(p) => StreamingOps.withStateStoreProvider(s, p)(replay())
       case None => replay()
@@ -1173,17 +1163,21 @@ object Events extends QueryPack {
 
   private def q204StreamWindowParity(
       s: SparkSession, d: String): DataFrame =
-    streamReplayParity(s, d, "q204") { stream =>
-      stream
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(Exact.fixed(col("value"), 6)).as("sum_value_e6"))
-        .select(
-          (unix_micros(col("window.start")) / lit(1000000L))
-            .cast("long").as("hour_epoch"),
-          col("event_type"), col("n_events"), col("sum_value_e6"))
-    }.orderBy(col("hour_epoch"), col("event_type"))
+    streamReplayParity(s, d, "q204")(hourlyCounts)
+      .orderBy(col("hour_epoch"), col("event_type"))
+
+  /** q204's streaming aggregation, also run by the q239/q254 restarts:
+    * per (1-hour window, event_type) event count and exact value sum.
+    */
+  private def hourlyCounts(stream: DataFrame): DataFrame = stream
+    .withWatermark("ts", "10 minutes")
+    .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+    .agg(count(lit(1)).as("n_events"),
+      sum(Exact.fixed(col("value"), 6)).as("sum_value_e6"))
+    .select(
+      (unix_micros(col("window.start")) / lit(1000000L))
+        .cast("long").as("hour_epoch"),
+      col("event_type"), col("n_events"), col("sum_value_e6"))
 
   private val q204Sql =
     s"""SELECT (epoch_ns(ts) // $HOUR_NS) * 3600 AS hour_epoch,
@@ -1629,67 +1623,66 @@ object Events extends QueryPack {
     * double-apply hash-fails.
     */
   private def q239StreamCheckpointRestart(
-      s: SparkSession, d: String): DataFrame = {
+      s: SparkSession, d: String): DataFrame =
+    checkpointRestart(s, d, "q239") { (phase1, phase2) =>
+      graft.streaming.StreamingOps.withShufflePartitions(s, 8) {
+        phase1()
+        phase2()
+      }
+    }
+
+  /** The q239/q254 restart scaffold. COPIES the shared stamped replay
+    * tree into a run-private prep dir (the phases consume their
+    * staging by rename, so the artifact cannot be replayed in place)
+    * and re-stamps the copies — copy does not carry mtimes, and the
+    * order must survive the moves (rename preserves them), so phase-2
+    * files always replay after file 0. Phase 1 makes only the first
+    * ts-range file visible and runs [[hourlyCounts]] through
+    * [[graft.streaming.StreamingOps.exactlyOnceParquetSink]] with a
+    * real checkpoint until batch 0 commits, then STOPS it (the
+    * simulated crash); phase 2 places the remaining files and starts a
+    * NEW query from the SAME checkpoint. `runPhases` runs the two
+    * phases under the gate's confs. Returns the final committed batch
+    * (complete mode ⇒ the full result), pinned so the run dir can be
+    * deleted.
+    */
+  private def checkpointRestart(s: SparkSession, d: String, tag: String)(
+      runPhases: (() => Unit, () => Unit) => Unit): DataFrame = {
     import graft.streaming.StreamingOps
+    import org.apache.hadoop.fs.Path
     val run = java.util.UUID.randomUUID().toString.take(8)
-    val base = sys.props("java.io.tmpdir") + s"/graft-ckpt-gate-$run"
-    val basePath = new org.apache.hadoop.fs.Path(base)
+    val basePath =
+      new Path(sys.props("java.io.tmpdir") + s"/graft-ckpt-$tag-$run")
     val fs = basePath.getFileSystem(s.sessionState.newHadoopConf())
     try {
-      val prep = s"$base/prep"
-      val staging = s"$base/in"
-      val outDir = s"$base/out"
-      val ckpt = s"$base/ckpt"
-      // COPY the shared stamped replay tree into the run-private prep
-      // dir (this gate consumes its staging by rename, so it cannot
-      // replay the artifact in place); re-stamp the copies — copy
-      // does not carry mtimes, and the order must survive the moves
-      // (rename preserves them), so phase-2 files always replay after
-      // file 0
+      val (staging, outDir, ckpt) = (s"$basePath/in", s"$basePath/out",
+        s"$basePath/ckpt")
       val (_, srcParts, srcFs) = stagedReplayTree(s, d)
-      val prepPath = new org.apache.hadoop.fs.Path(prep)
+      val prepPath = new Path(basePath, "prep")
       fs.mkdirs(prepPath)
       srcParts.foreach(p => org.apache.hadoop.fs.FileUtil.copy(srcFs, p,
-        fs, new org.apache.hadoop.fs.Path(prepPath, p.getName), false,
+        fs, new Path(prepPath, p.getName), false,
         s.sessionState.newHadoopConf()))
       val parts = fs.listStatus(prepPath)
         .filter(_.getPath.getName.startsWith("part-"))
         .sortBy(_.getPath.getName).map(_.getPath).toSeq
       StreamingOps.stampReplayOrder(fs, parts)
-      val stagingPath = new org.apache.hadoop.fs.Path(staging)
+      val stagingPath = new Path(staging)
       fs.mkdirs(stagingPath)
-      def place(p: org.apache.hadoop.fs.Path): Unit =
-        fs.rename(p, new org.apache.hadoop.fs.Path(stagingPath, p.getName))
-      def agg(stream: DataFrame) = stream
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(Exact.fixed(col("value"), 6)).as("sum_value_e6"))
-        .select(
-          (unix_micros(col("window.start")) / lit(1000000L))
-            .cast("long").as("hour_epoch"),
-          col("event_type"), col("n_events"), col("sum_value_e6"))
-      StreamingOps.withShufflePartitions(s, 8) {
-        // PHASE 1: only the first ts-range file is visible; the query
-        // commits batch 0 (window state checkpointed) and is STOPPED —
-        // the simulated crash
-        place(parts(0))
-        val q1 = StreamingOps.exactlyOnceParquetSink(
-          agg(StreamingOps.readEventsStream(s, staging,
+      def place(p: Path): Unit =
+        fs.rename(p, new Path(stagingPath, p.getName))
+      def replay(): Unit = {
+        val q = StreamingOps.exactlyOnceParquetSink(
+          hourlyCounts(StreamingOps.readEventsStream(s, staging,
             maxFilesPerTrigger = 1)),
           outDir, ckpt, outputMode = "complete")
-        try q1.processAllAvailable() finally q1.stop()
-        // PHASE 2: the remaining files arrive; a NEW query resumes
-        // from the SAME checkpoint
-        parts.drop(1).foreach(place)
-        val q2 = StreamingOps.exactlyOnceParquetSink(
-          agg(StreamingOps.readEventsStream(s, staging,
-            maxFilesPerTrigger = 1)),
-          outDir, ckpt, outputMode = "complete")
-        try q2.processAllAvailable() finally q2.stop()
+        try q.processAllAvailable() finally q.stop()
       }
+      runPhases(
+        () => { place(parts(0)); replay() },
+        () => { parts.drop(1).foreach(place); replay() })
       StreamingOps.readLatestBatch(s, outDir)
-        .getOrElse(sys.error("q239: no committed batch"))
+        .getOrElse(sys.error(s"$tag: no committed batch"))
         // pin the (windows-sized) rows so the whole staging tree —
         // in/, ckpt/, out/ — can be deleted before returning
         .localCheckpoint(true)
@@ -1717,41 +1710,8 @@ object Events extends QueryPack {
     * silent state-corruption risk at 100 TB.
     */
   private def q254StreamRestartReconfig(
-      s: SparkSession, d: String): DataFrame = {
-    import graft.streaming.StreamingOps
-    val run = java.util.UUID.randomUUID().toString.take(8)
-    val base = sys.props("java.io.tmpdir") + s"/graft-ckpt-reconf-$run"
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    val fs = basePath.getFileSystem(s.sessionState.newHadoopConf())
-    try {
-      val prep = s"$base/prep"
-      val staging = s"$base/in"
-      val outDir = s"$base/out"
-      val ckpt = s"$base/ckpt"
-      // run-private COPY of the shared stamped replay tree (see q239)
-      val (_, srcParts, srcFs) = stagedReplayTree(s, d)
-      val prepPath = new org.apache.hadoop.fs.Path(prep)
-      fs.mkdirs(prepPath)
-      srcParts.foreach(p => org.apache.hadoop.fs.FileUtil.copy(srcFs, p,
-        fs, new org.apache.hadoop.fs.Path(prepPath, p.getName), false,
-        s.sessionState.newHadoopConf()))
-      val parts = fs.listStatus(prepPath)
-        .filter(_.getPath.getName.startsWith("part-"))
-        .sortBy(_.getPath.getName).map(_.getPath).toSeq
-      StreamingOps.stampReplayOrder(fs, parts)
-      val stagingPath = new org.apache.hadoop.fs.Path(staging)
-      fs.mkdirs(stagingPath)
-      def place(p: org.apache.hadoop.fs.Path): Unit =
-        fs.rename(p, new org.apache.hadoop.fs.Path(stagingPath, p.getName))
-      def agg(stream: DataFrame) = stream
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(Exact.fixed(col("value"), 6)).as("sum_value_e6"))
-        .select(
-          (unix_micros(col("window.start")) / lit(1000000L))
-            .cast("long").as("hour_epoch"),
-          col("event_type"), col("n_events"), col("sum_value_e6"))
+      s: SparkSession, d: String): DataFrame =
+    checkpointRestart(s, d, "q254") { (phase1, phase2) =>
       // deliberately NOT StreamingOps.withShufflePartitions: that
       // helper only scopes the conf DOWN (min with the session value),
       // while this gate needs two phases with a guaranteed-DIFFERENT
@@ -1761,34 +1721,17 @@ object Events extends QueryPack {
       val prevParts = s.conf.get(partsKey)
       try {
         // PHASE 1: 8 shuffle partitions, default (HDFS-backed) state
-        // provider; batch 0 commits and the query is STOPPED
+        // provider
         s.conf.set(partsKey, "8")
-        place(parts(0))
-        val q1 = StreamingOps.exactlyOnceParquetSink(
-          agg(StreamingOps.readEventsStream(s, staging,
-            maxFilesPerTrigger = 1)),
-          outDir, ckpt, outputMode = "complete")
-        try q1.processAllAvailable() finally q1.stop()
+        phase1()
         // PHASE 2: the "reconfigured deploy" — different partition
         // count AND a different provider conf; the checkpoint's offset
         // metadata must win both
         s.conf.set(partsKey, "3")
-        StreamingOps.withStateStoreProvider(s,
-          StreamingOps.RocksDbProvider) {
-          parts.drop(1).foreach(place)
-          val q2 = StreamingOps.exactlyOnceParquetSink(
-            agg(StreamingOps.readEventsStream(s, staging,
-              maxFilesPerTrigger = 1)),
-            outDir, ckpt, outputMode = "complete")
-          try q2.processAllAvailable() finally q2.stop()
-        }
+        graft.streaming.StreamingOps.withStateStoreProvider(s,
+          graft.streaming.StreamingOps.RocksDbProvider)(phase2())
       } finally s.conf.set(partsKey, prevParts)
-      StreamingOps.readLatestBatch(s, outDir)
-        .getOrElse(sys.error("q254: no committed batch"))
-        .localCheckpoint(true)
-        .orderBy(col("hour_epoch"), col("event_type"))
-    } finally fs.delete(basePath, true)
-  }
+    }
 
   /** Reconfigured restart must still land on exactly the batch answer. */
   private val q254Sql = q204Sql

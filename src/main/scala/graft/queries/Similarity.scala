@@ -519,22 +519,25 @@ object Similarity extends QueryPack {
       .orderBy(col("qid"))
   }
 
-  private val q38Sql =
-    s"""WITH $vecsCte, $scoredCte,
-       exact5 AS (SELECT qid, cid FROM (
-         SELECT qid, cid,
-           RANK() OVER (PARTITION BY qid ORDER BY cos DESC, cid ASC) AS rnk
-         FROM scored) WHERE rnk <= 5),
+  /** The q38/q78 CTEs: per query, does the q34 LSH best neighbour
+    * land in the exact cosine top-5 — `hits` (qid, hit).
+    */
+  private val annHitsCtes =
+    s"""$vecsCte, $scoredCte,
+       ${ServeOps.top5Sql("exact5", "scored", "cos DESC")},
        $annCtes,
        ann AS (SELECT qid, cid AS ann_cid FROM (
          SELECT qid, cid,
            RANK() OVER (PARTITION BY qid ORDER BY cos DESC, cid ASC) AS rnk
-         FROM bscored) WHERE rnk = 1 AND qid < 20)
-       SELECT e.qid,
-         CAST(MAX(CASE WHEN e.cid = a.ann_cid THEN 1 ELSE 0 END) AS BIGINT)
-           AS hit
-       FROM exact5 e LEFT JOIN ann a ON a.qid = e.qid
-       GROUP BY e.qid ORDER BY e.qid"""
+         FROM bscored) WHERE rnk = 1 AND qid < 20),
+       hits AS (SELECT e.qid,
+           CAST(MAX(CASE WHEN e.cid = a.ann_cid THEN 1 ELSE 0 END) AS BIGINT)
+             AS hit
+         FROM exact5 e LEFT JOIN ann a ON a.qid = e.qid
+         GROUP BY e.qid)"""
+
+  private val q38Sql =
+    s"WITH $annHitsCtes SELECT qid, hit FROM hits ORDER BY qid"
 
   /** q78: the one-row deployment metric beside q38's per-query bits —
     * recall@5 of the LSH index over the audited query set. Pure
@@ -546,21 +549,7 @@ object Similarity extends QueryPack {
       .agg(count(lit(1)).as("n_queries"), avg(col("hit")).as("recall_at_5"))
 
   private val q78Sql =
-    s"""WITH $vecsCte, $scoredCte,
-       exact5 AS (SELECT qid, cid FROM (
-         SELECT qid, cid,
-           RANK() OVER (PARTITION BY qid ORDER BY cos DESC, cid ASC) AS rnk
-         FROM scored) WHERE rnk <= 5),
-       $annCtes,
-       ann AS (SELECT qid, cid AS ann_cid FROM (
-         SELECT qid, cid,
-           RANK() OVER (PARTITION BY qid ORDER BY cos DESC, cid ASC) AS rnk
-         FROM bscored) WHERE rnk = 1 AND qid < 20),
-       hits AS (SELECT e.qid,
-           CAST(MAX(CASE WHEN e.cid = a.ann_cid THEN 1 ELSE 0 END) AS BIGINT)
-             AS hit
-         FROM exact5 e LEFT JOIN ann a ON a.qid = e.qid
-         GROUP BY e.qid)
+    s"""WITH $annHitsCtes
        SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
          AVG(hit) AS recall_at_5 FROM hits"""
 
@@ -669,6 +658,29 @@ object Similarity extends QueryPack {
       .select(col("qid"), col("qv"), col("qn"), col("clabel"))
   }
 
+  /** SQL twin of [[IndexStore.labelCentroids]] over a relation `src`
+    * exposing (label, v): `cents2` (clabel, cv, cn).
+    */
+  private def labelCentsSql(src: String): String =
+    s"""cents AS (SELECT label AS clabel, [$centroidColsSql] AS cv
+                 FROM $src GROUP BY label),
+       cents2 AS (SELECT clabel, cv, ${VectorOps.normSql("cv")} AS cn
+                  FROM cents)"""
+
+  /** SQL twin of [[ivfAssigned]] over `cents2`: the query rows `rq`
+    * (vec_id < 20 of `qsrc`) and `assigned` (qid, qv, qn, clabel), each
+    * query's `nprobe` nearest cells by round-6dp cosine.
+    */
+  private def ivfAssignedSql(nprobe: Int, qsrc: String = "n"): String =
+    s"""rq AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM $qsrc
+              WHERE vec_id < 20),
+       assigned AS (SELECT qid, qv, qn, clabel FROM (
+         SELECT rq.qid, rq.qv, rq.qn, c.clabel,
+           RANK() OVER (PARTITION BY rq.qid ORDER BY
+             round(${VectorOps.dotSql("rq.qv", "c.cv")} / (rq.qn * c.cn), 6)
+               DESC, c.clabel ASC) AS crnk
+         FROM rq CROSS JOIN cents2 c) WHERE crnk <= $nprobe)"""
+
   private def ivfCells(s: SparkSession, d: String): DataFrame =
     vecs(s, d).select(col("vec_id").as("cid"), col("label").as("clabel"),
       col("v").as("cv2"), col("nrm").as("cn2"))
@@ -711,60 +723,27 @@ object Similarity extends QueryPack {
       .orderBy(col("qid"), col("rnk"), col("cid"))
   }
 
-  private val q37Sql = {
+  /** The q37/q85 oracle: cosine top-3 over each query's `nprobe`
+    * assigned label cells, projected to `cols`.
+    */
+  private def ivfTop3Sql(nprobe: Int, cols: String): String =
     s"""WITH $vecsCte,
-       cents AS (SELECT label AS clabel, [$centroidColsSql] AS cv
-                 FROM vecs GROUP BY label),
-       cents2 AS (SELECT clabel, cv, ${VectorOps.normSql("cv")} AS cn
-                  FROM cents),
-       q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n
-             WHERE vec_id < 20),
-       assigned AS (SELECT qid, qv, qn, clabel FROM (
-         SELECT q.qid, q.qv, q.qn, c.clabel,
-           RANK() OVER (PARTITION BY q.qid ORDER BY
-             round(${VectorOps.dotSql("qv", "cv")} / (qn * cn), 6) DESC,
-             c.clabel ASC) AS crnk
-         FROM q CROSS JOIN cents2 c) WHERE crnk = 1),
+       ${labelCentsSql("vecs")},
+       ${ivfAssignedSql(nprobe)},
        cscored AS (SELECT a.qid, CAST(a.clabel AS BIGINT) AS cell,
            m.vec_id AS cid,
-           round(${VectorOps.dotSql("qv", "mv")} / (a.qn * m.nrm), 6) AS cos
-         FROM assigned a
-         JOIN (SELECT vec_id, label, v AS mv, nrm FROM n) m
-           ON m.label = a.clabel AND m.vec_id <> a.qid)
-       SELECT qid, cell, cid, cos, rnk FROM (
+           round(${VectorOps.dotSql("a.qv", "m.v")} / (a.qn * m.nrm), 6) AS cos
+         FROM assigned a JOIN n m ON m.label = a.clabel AND m.vec_id <> a.qid)
+       SELECT $cols FROM (
          SELECT qid, cell, cid, cos,
            RANK() OVER (PARTITION BY qid
                         ORDER BY cos DESC, cid ASC) AS rnk
          FROM cscored)
        WHERE rnk <= 3 ORDER BY qid, rnk, cid"""
-  }
 
-  private val q85Sql = {
-    s"""WITH $vecsCte,
-       cents AS (SELECT label AS clabel, [$centroidColsSql] AS cv
-                 FROM vecs GROUP BY label),
-       cents2 AS (SELECT clabel, cv, ${VectorOps.normSql("cv")} AS cn
-                  FROM cents),
-       q AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n
-             WHERE vec_id < 20),
-       assigned AS (SELECT qid, qv, qn, clabel FROM (
-         SELECT q.qid, q.qv, q.qn, c.clabel,
-           RANK() OVER (PARTITION BY q.qid ORDER BY
-             round(${VectorOps.dotSql("qv", "cv")} / (qn * cn), 6) DESC,
-             c.clabel ASC) AS crnk
-         FROM q CROSS JOIN cents2 c) WHERE crnk <= 2),
-       cscored AS (SELECT a.qid, m.vec_id AS cid,
-           round(${VectorOps.dotSql("qv", "mv")} / (a.qn * m.nrm), 6) AS cos
-         FROM assigned a
-         JOIN (SELECT vec_id, label, v AS mv, nrm FROM n) m
-           ON m.label = a.clabel AND m.vec_id <> a.qid)
-       SELECT qid, cid, cos, rnk FROM (
-         SELECT qid, cid, cos,
-           RANK() OVER (PARTITION BY qid
-                        ORDER BY cos DESC, cid ASC) AS rnk
-         FROM cscored)
-       WHERE rnk <= 3 ORDER BY qid, rnk, cid"""
-  }
+  private val q37Sql = ivfTop3Sql(1, "qid, cell, cid, cos, rnk")
+
+  private val q85Sql = ivfTop3Sql(2, "qid, cid, cos, rnk")
 
   /** q129: MMR-diversified top-5 ([[graft.ops.RerankOps.mmrExact]],
     * λ=1/2) over the q32 retriever's top-20 candidate pool — retrieval
@@ -1038,24 +1017,13 @@ object Similarity extends QueryPack {
       .orderBy(col("dim"))
 
   private val q226Sql =
-    """WITH x AS (SELECT CAST(i AS BIGINT) AS dim,
-           CAST(ROUND(CAST(e AS DOUBLE)*1000000) AS BIGINT) AS x
-         FROM (SELECT unnest(embedding) AS e,
-                      unnest(range(0, len(embedding))) AS i
-               FROM embeddings)),
-       stats AS (SELECT dim, MIN(x) AS mn, MAX(x) AS mx
-                 FROM x GROUP BY 1),
-       q AS (SELECT x.dim, mn, mx, (mx - mn) AS rng, x.x,
-               ((x.x - mn) * 256) // (mx - mn + 1) AS code
-             FROM x JOIN stats USING (dim)),
-       r AS (SELECT dim, mn, mx, x, code,
-               mn + ((2*code + 1) * (rng + 1)) // 512 AS recon
-             FROM q)
+    s"""WITH ${VectorOps.liftE6Sql},
+       ${VectorOps.sq8Sql}
        SELECT dim, mn AS min_e6, mx AS max_e6,
          CAST(COUNT(DISTINCT code) AS BIGINT) AS n_codes,
          CAST(SUM(ABS(x - recon)) // COUNT(*) AS BIGINT) AS mae_e6,
          CAST(MAX(ABS(x - recon)) AS BIGINT) AS max_err_e6
-       FROM r GROUP BY 1, 2, 3 ORDER BY dim"""
+       FROM sq8 GROUP BY 1, 2, 3 ORDER BY dim"""
 
   /** q227: ADC recall over the SQ8 codes — the CONSUMPTION side of
     * q226's compression: queries stay full-precision, the database
@@ -1083,42 +1051,24 @@ object Similarity extends QueryPack {
       .orderBy(col("qid"))
   }
 
-  private val q227Sql = {
-    val dot = VectorOps.dotSql("q.qv", "c.cv")
-    s"""WITH x AS (SELECT vec_id, CAST(i AS BIGINT) AS dim,
-           CAST(ROUND(CAST(e AS DOUBLE)*1000000) AS BIGINT) AS x
-         FROM (SELECT vec_id, unnest(embedding) AS e,
-                      unnest(range(0, len(embedding))) AS i
-               FROM embeddings)),
-       stats AS (SELECT dim, MIN(x) AS mn, MAX(x) AS mx
-                 FROM x GROUP BY 1),
-       rec AS (SELECT vec_id, x.dim,
-                 mn + ((2*(((x.x - mn) * 256) // (mx - mn + 1)) + 1)
-                   * ((mx - mn) + 1)) // 512 AS r
-               FROM x JOIN stats USING (dim)),
-       ex AS (SELECT vec_id, list(CAST(x AS DOUBLE) ORDER BY dim) AS cv
-              FROM x GROUP BY 1),
-       ad AS (SELECT vec_id, list(CAST(r AS DOUBLE) ORDER BY dim) AS cv
-              FROM rec GROUP BY 1),
-       qs AS (SELECT vec_id AS qid, cv AS qv FROM ex WHERE vec_id < 20),
-       et AS (SELECT qid, cid FROM (
-           SELECT q.qid, c.vec_id AS cid,
-             RANK() OVER (PARTITION BY q.qid
-               ORDER BY CAST($dot AS BIGINT) DESC, c.vec_id ASC) AS rnk
-           FROM qs q JOIN ex c ON c.vec_id <> q.qid)
-         WHERE rnk <= 5),
-       at AS (SELECT qid, cid AS adc_cid FROM (
-           SELECT q.qid, c.vec_id AS cid,
-             RANK() OVER (PARTITION BY q.qid
-               ORDER BY CAST($dot AS BIGINT) DESC, c.vec_id ASC) AS rnk
-           FROM qs q JOIN ad c ON c.vec_id <> q.qid)
-         WHERE rnk <= 5)
-       SELECT et.qid,
-         CAST(SUM(CASE WHEN et.cid = at.adc_cid THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_hits
-       FROM et JOIN at ON et.qid = at.qid
-       GROUP BY et.qid ORDER BY et.qid"""
-  }
+  /** The exact vectors `ex` and the SQ8 reconstructions `ad` of the
+    * q227/q238 oracles, both (vec_id, v), and the query rows `qs`.
+    */
+  private val sq8RowsCtes =
+    s"""${VectorOps.liftE6Sql},
+       ${VectorOps.sq8Sql},
+       ${IndexStore.vectorRowsSql("ex", "x")},
+       ${IndexStore.vectorRowsSql("ad", "sq8", x = "recon")},
+       qs AS (SELECT vec_id AS qid, v AS qv FROM ex WHERE vec_id < 20)"""
+
+  private val q227Sql =
+    s"""WITH $sq8RowsCtes,
+       ${ipScoredSql("exs", "ex")},
+       ${ipScoredSql("ads", "ad")},
+       ${ServeOps.top5Sql("et", "exs", "score DESC")},
+       ${ServeOps.top5Sql("it", "ads", "score DESC")},
+       ${hitsSql("et", "it")}
+       SELECT qid, n_hits FROM hits ORDER BY qid"""
 
   /** q238: IVF×SQ8 composed serving — the query path a deployed
     * vector store (faiss IndexIVF+SQ8) actually runs, assembled from
@@ -1164,62 +1114,19 @@ object Similarity extends QueryPack {
       col("score").desc)
   }
 
-  private val q238Sql = {
+  private val q238Sql =
     s"""WITH $vecsCte,
-       cents AS (SELECT label AS clabel, [$centroidColsSql] AS cv
-                 FROM vecs GROUP BY label),
-       cents2 AS (SELECT clabel, cv, ${VectorOps.normSql("cv")} AS cn
-                  FROM cents),
-       rq AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM n
-              WHERE vec_id < 20),
-       assigned AS (SELECT qid, clabel FROM (
-         SELECT rq.qid, c.clabel,
-           RANK() OVER (PARTITION BY rq.qid ORDER BY
-             round(${VectorOps.dotSql("qv", "cv")} / (qn * cn), 6) DESC,
-             c.clabel ASC) AS crnk
-         FROM rq CROSS JOIN cents2 c) WHERE crnk <= 2),
-       x AS (SELECT vec_id, CAST(i AS BIGINT) AS dim,
-           CAST(ROUND(CAST(e AS DOUBLE)*1000000) AS BIGINT) AS x
-         FROM (SELECT vec_id, unnest(embedding) AS e,
-                      unnest(range(0, len(embedding))) AS i
-               FROM embeddings)),
-       stats AS (SELECT dim, MIN(x) AS mn, MAX(x) AS mx
-                 FROM x GROUP BY 1),
-       rec AS (SELECT vec_id, x.dim,
-                 mn + ((2*(((x.x - mn) * 256) // (mx - mn + 1)) + 1)
-                   * ((mx - mn) + 1)) // 512 AS r
-               FROM x JOIN stats USING (dim)),
-       ex AS (SELECT vec_id, list(CAST(x AS DOUBLE) ORDER BY dim) AS cv
-              FROM x GROUP BY 1),
-       adl AS (SELECT a.vec_id AS cid, e.label AS clabel, a.cv
-               FROM (SELECT vec_id,
-                       list(CAST(r AS DOUBLE) ORDER BY dim) AS cv
-                     FROM rec GROUP BY 1) a
-               JOIN embeddings e ON e.vec_id = a.vec_id),
-       qs AS (SELECT vec_id AS qid, cv AS qv FROM ex WHERE vec_id < 20),
-       scored AS (SELECT q.qid, m.cid,
-           CAST(${VectorOps.dotSql("q.qv", "m.cv")} AS BIGINT) AS score
+       ${labelCentsSql("vecs")},
+       ${ivfAssignedSql(2)},
+       $sq8RowsCtes,
+       scored AS (SELECT q.qid, m.vec_id AS cid,
+           CAST(${VectorOps.dotSql("q.qv", "m.v")} AS BIGINT) AS score
          FROM qs q JOIN assigned a ON a.qid = q.qid
-         JOIN adl m ON m.clabel = a.clabel AND m.cid <> q.qid),
-       nsc AS (SELECT qid, COUNT(*) AS n_scanned FROM scored GROUP BY 1),
-       it AS (SELECT qid, cid AS ivf_cid FROM (
-           SELECT qid, cid, RANK() OVER (PARTITION BY qid
-             ORDER BY score DESC, cid ASC) AS rnk FROM scored)
-         WHERE rnk <= 5),
-       et AS (SELECT qid, cid FROM (
-           SELECT q.qid, c.vec_id AS cid,
-             RANK() OVER (PARTITION BY q.qid
-               ORDER BY CAST(${VectorOps.dotSql("q.qv", "c.cv")} AS BIGINT)
-                 DESC, c.vec_id ASC) AS rnk
-           FROM qs q JOIN ex c ON c.vec_id <> q.qid)
-         WHERE rnk <= 5),
-       hits AS (SELECT et.qid,
-           CAST(SUM(CASE WHEN et.cid = it.ivf_cid THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_hits
-         FROM et JOIN it ON it.qid = et.qid GROUP BY 1)
-       SELECT h.qid, n.n_scanned, h.n_hits
-       FROM hits h JOIN nsc n ON n.qid = h.qid ORDER BY h.qid"""
-  }
+         JOIN embeddings e ON e.label = a.clabel AND e.vec_id <> q.qid
+         JOIN ad m ON m.vec_id = e.vec_id),
+       ${ipScoredSql("exs", "ex")},
+       ${ServeOps.top5Sql("et", "exs", "score DESC")},
+       ${servingReportSql("scored", "score DESC")}"""
 
   /** q241: PRODUCT quantization — the compression layer past q226's
     * SQ8: m=8 subspaces × k=16 centroids trained with 2 integer-exact
@@ -1265,78 +1172,20 @@ object Similarity extends QueryPack {
       .orderBy(col("qid"))
   }
 
-  private val q241Sql = {
-    // one Lloyd round as a CTE pair: assignment against codebook `cp`,
-    // then the shift-floor mean update with empty-cluster carry-over —
-    // trained over xst, the hash-rank training sample
-    // ([[IndexStore.trainN]]'s twin; full-corpus at every committed
-    // SF under the 100k floor)
-    def round(cp: String, a: String, u: String, cn: String) =
-      s"""$a AS (SELECT vec_id, sub, c FROM (
-           SELECT d.vec_id, d.sub, d.c,
-             ROW_NUMBER() OVER (PARTITION BY d.vec_id, d.sub
-               ORDER BY d.dd, d.c) AS rn
-           FROM (SELECT xst.vec_id, xst.sub, c.c,
-                   SUM((xst.x - c.v)*(xst.x - c.v)) AS dd
-                 FROM xst JOIN $cp c ON c.sub = xst.sub AND c.j = xst.j
-                 GROUP BY 1, 2, 3) d) WHERE rn = 1),
-         $u AS (SELECT a.sub, a.c, xst.j,
-             (SUM(xst.x) + COUNT(*) * 2000000) // COUNT(*) - 2000000 AS nv
-           FROM $a a JOIN xst ON xst.vec_id = a.vec_id AND xst.sub = a.sub
-           GROUP BY 1, 2, 3),
-         $cn AS (SELECT p.sub, p.c, p.j, COALESCE(u.nv, p.v) AS v
-           FROM $cp p LEFT JOIN $u u
-             ON u.sub = p.sub AND u.c = p.c AND u.j = p.j)"""
-    s"""WITH x AS (SELECT vec_id, CAST(i AS BIGINT) AS dim,
-           CAST(ROUND(CAST(e AS DOUBLE)*1000000) AS BIGINT) AS x
-         FROM (SELECT vec_id, unnest(embedding) AS e,
-                      unnest(range(0, len(embedding))) AS i
-               FROM embeddings)),
-       xs AS (SELECT vec_id, dim // 8 AS sub, dim % 8 AS j, x FROM x),
-       srank AS (SELECT vec_id, ROW_NUMBER() OVER (ORDER BY
-               CAST(('0x' || substr(md5('pqseed:' || vec_id), 1, 15))
-                 AS BIGINT), vec_id) AS rn
-           FROM (SELECT DISTINCT vec_id FROM x)),
-       seeds AS (SELECT vec_id, rn - 1 AS c FROM srank WHERE rn <= 16),
-       tsam AS (SELECT vec_id FROM srank
-         WHERE rn <= (${IndexStore.trainNSql("16")})),
-       xst AS (SELECT xs.vec_id, xs.sub, xs.j, xs.x
-              FROM xs JOIN tsam ON tsam.vec_id = xs.vec_id),
-       c0 AS (SELECT xs.sub, s.c, xs.j, xs.x AS v
-              FROM seeds s JOIN xs ON xs.vec_id = s.vec_id),
-       ${round("c0", "a1", "u1", "c1")},
-       ${round("c1", "a2", "u2", "c2")},
-       codes AS (SELECT vec_id, sub, c FROM (
-           SELECT d.vec_id, d.sub, d.c,
-             ROW_NUMBER() OVER (PARTITION BY d.vec_id, d.sub
-               ORDER BY d.dd, d.c) AS rn
-           FROM (SELECT xs.vec_id, xs.sub, c.c,
-                   SUM((xs.x - c.v)*(xs.x - c.v)) AS dd
-                 FROM xs JOIN c2 c ON c.sub = xs.sub AND c.j = xs.j
-                 GROUP BY 1, 2, 3) d) WHERE rn = 1),
-       tab AS (SELECT q.vec_id AS qid, c.sub, c.c,
-               SUM((q.x - c.v)*(q.x - c.v)) AS dd
-             FROM xs q JOIN c2 c ON c.sub = q.sub AND c.j = q.j
-             WHERE q.vec_id < 20 GROUP BY 1, 2, 3),
+  private val q241Sql =
+    s"""WITH ${VectorOps.liftE6Sql},
+       ${VectorOps.pqSubspacesSql("xs", 8)},
+       ${VectorOps.seedRankSql},
+       ${VectorOps.pqQuantizeSql("xs", "16", IndexStore.trainNSql("16"),
+         rounds = 2)},
+       ${adcTableSql("tab", "xs", "c2")},
        adc AS (SELECT t.qid, k.vec_id AS cid, SUM(t.dd) AS dist
              FROM codes k JOIN tab t ON t.sub = k.sub AND t.c = k.c
              WHERE k.vec_id <> t.qid GROUP BY 1, 2),
-       pt AS (SELECT qid, cid AS pq_cid FROM (
-           SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid
-             ORDER BY dist, cid) AS rn FROM adc) WHERE rn <= 5),
-       exd AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
-               SUM((q.x - c.x)*(q.x - c.x)) AS dist
-             FROM x q JOIN x c ON c.dim = q.dim AND c.vec_id <> q.vec_id
-             WHERE q.vec_id < 20 GROUP BY 1, 2),
-       et AS (SELECT qid, cid FROM (
-           SELECT qid, cid, ROW_NUMBER() OVER (PARTITION BY qid
-             ORDER BY dist, cid) AS rn FROM exd) WHERE rn <= 5)
-       SELECT et.qid,
-         CAST(SUM(CASE WHEN et.cid = pt.pq_cid THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_hits
-       FROM et JOIN pt ON pt.qid = et.qid
-       GROUP BY et.qid ORDER BY et.qid"""
-  }
+       ${ServeOps.groundTruthL2Sql(20)},
+       ${ServeOps.top5Sql("it", "adc", "dist")},
+       ${hitsSql("et", "it")}
+       SELECT qid, n_hits FROM hits ORDER BY qid"""
 
   /** q243: streaming ANN delta-index ingestion + merged serving — the
     * lifecycle a deployed vector store actually runs: an immutable BASE
@@ -1463,24 +1312,14 @@ object Similarity extends QueryPack {
     s"""WITH $vecsCte,
        base AS (SELECT * FROM n WHERE vec_id % 5 <> 4),
        delta AS (SELECT * FROM n WHERE vec_id % 5 = 4),
-       cents AS (SELECT label AS clabel, [$centroidColsSql] AS cv
-                 FROM base GROUP BY label),
-       cents2 AS (SELECT clabel, cv, ${VectorOps.normSql("cv")} AS cn
-                  FROM cents),
+       ${labelCentsSql("base")},
        dassign AS (SELECT vec_id, clabel FROM (
          SELECT d.vec_id, c.clabel,
            RANK() OVER (PARTITION BY d.vec_id ORDER BY
              round(${VectorOps.dotSql("d.v", "c.cv")} / (d.nrm * c.cn), 6)
                DESC, c.clabel ASC) AS rnk
          FROM delta d CROSS JOIN cents2 c) WHERE rnk = 1),
-       rq AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM base
-              WHERE vec_id < 20),
-       probe AS (SELECT qid, clabel FROM (
-         SELECT rq.qid, c.clabel,
-           RANK() OVER (PARTITION BY rq.qid ORDER BY
-             round(${VectorOps.dotSql("rq.qv", "c.cv")} / (rq.qn * c.cn), 6)
-               DESC, c.clabel ASC) AS crnk
-         FROM rq CROSS JOIN cents2 c) WHERE crnk <= 2),
+       ${ivfAssignedSql(2, qsrc = "base")},
        members AS (
          SELECT vec_id AS cid, label AS clabel, v AS cv, nrm AS cn,
                 'base' AS src
@@ -1492,30 +1331,22 @@ object Similarity extends QueryPack {
        scored AS (SELECT q.qid, m.cid, m.src,
            round(${VectorOps.dotSql("q.qv", "m.cv")} / (q.qn * m.cn), 6)
              AS cos
-         FROM rq q JOIN probe p ON p.qid = q.qid
-         JOIN members m ON m.clabel = p.clabel AND m.cid <> q.qid),
+         FROM assigned q
+         JOIN members m ON m.clabel = q.clabel AND m.cid <> q.qid),
        nsc AS (SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_scanned,
            CAST(SUM(CASE WHEN src = 'delta' THEN 1 ELSE 0 END) AS BIGINT)
              AS n_delta_scanned
          FROM scored GROUP BY 1),
-       at AS (SELECT qid, cid AS ann_cid FROM (
-           SELECT qid, cid, RANK() OVER (PARTITION BY qid
-             ORDER BY cos DESC, cid ASC) AS rnk FROM scored)
-         WHERE rnk <= 5),
-       et AS (SELECT qid, cid FROM (
-           SELECT q.qid, c.vec_id AS cid,
-             RANK() OVER (PARTITION BY q.qid ORDER BY
-               round(${VectorOps.dotSql("q.qv", "c.v")} / (q.qn * c.nrm), 6)
-                 DESC, c.vec_id ASC) AS rnk
-           FROM rq q JOIN n c ON c.vec_id <> q.qid) WHERE rnk <= 5),
+       ${ServeOps.top5Sql("it", "scored", "cos DESC")},
+       exs AS (SELECT q.qid, c.vec_id AS cid,
+           round(${VectorOps.dotSql("q.qv", "c.v")} / (q.qn * c.nrm), 6) AS cos
+         FROM rq q JOIN n c ON c.vec_id <> q.qid),
+       ${ServeOps.top5Sql("et", "exs", "cos DESC")},
        ds AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_delta_total,
            CAST(COALESCE(SUM(vec_id * clabel), 0) AS BIGINT)
              AS delta_checksum
          FROM dassign),
-       hits AS (SELECT et.qid,
-           CAST(SUM(CASE WHEN et.cid = at.ann_cid THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_hits
-         FROM et JOIN at ON at.qid = et.qid GROUP BY 1)
+       ${hitsSql("et", "it")}
        SELECT h.qid, s.n_scanned, s.n_delta_scanned, h.n_hits,
          ds.n_delta_total, ds.delta_checksum
        FROM hits h JOIN nsc s ON s.qid = h.qid CROSS JOIN ds
@@ -1764,21 +1595,12 @@ object Similarity extends QueryPack {
            WHERE q.strategy = 'post'),
        scored AS (SELECT * FROM pre UNION ALL SELECT * FROM post),
        nsc AS (SELECT qid, COUNT(*) AS n_scanned FROM scored GROUP BY 1),
-       ann AS (SELECT qid, cid AS acid FROM (
-           SELECT qid, cid, RANK() OVER (PARTITION BY qid
-             ORDER BY cos DESC, cid ASC) AS rnk FROM scored)
-         WHERE rnk <= 5),
-       et AS (SELECT qid, cid FROM (
-           SELECT q.qid, c.vec_id AS cid,
-             RANK() OVER (PARTITION BY q.qid ORDER BY
-               round(${VectorOps.dotSql("q.qv", "c.v")} / (q.qn * c.nrm), 6)
-                 DESC, c.vec_id ASC) AS rnk
-           FROM qs q JOIN m c
-             ON c.lang = q.qlang AND c.vec_id <> q.qid) WHERE rnk <= 5),
-       hits AS (SELECT et.qid,
-           CAST(SUM(CASE WHEN et.cid = ann.acid THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_hits
-         FROM et JOIN ann ON ann.qid = et.qid GROUP BY 1)
+       ${ServeOps.top5Sql("it", "scored", "cos DESC")},
+       exs AS (SELECT q.qid, c.vec_id AS cid,
+           round(${VectorOps.dotSql("q.qv", "c.v")} / (q.qn * c.nrm), 6) AS cos
+         FROM qs q JOIN m c ON c.lang = q.qlang AND c.vec_id <> q.qid),
+       ${ServeOps.top5Sql("et", "exs", "cos DESC")},
+       ${hitsSql("et", "it")}
        SELECT q.qid, q.qlang, q.strategy,
          COALESCE(n.n_scanned, 0) AS n_scanned,
          COALESCE(h.n_hits, 0) AS n_hits
@@ -2044,10 +1866,7 @@ object Similarity extends QueryPack {
 
   private val q249Sql = {
     s"""WITH $vecsCte,
-       cents AS (SELECT label AS clabel, [$centroidColsSql] AS cv
-                 FROM vecs GROUP BY label),
-       cents2 AS (SELECT clabel, cv, ${VectorOps.normSql("cv")} AS cn
-                  FROM cents),
+       ${labelCentsSql("vecs")},
        scored AS (SELECT n.label AS clabel,
            round(${VectorOps.dotSql("n.v", "c.cv")} / (n.nrm * c.cn), 6)
              AS ccos
@@ -2409,6 +2228,15 @@ object Similarity extends QueryPack {
       .agg(sum(when(col("cid") === col("served_cid"), lit(1L))
         .otherwise(lit(0L))).as("n_hits"))
 
+  /** SQL twin of [[hits]]: `hits` (qid, n_hits) over the top-5 CTEs
+    * `exactTop` and `servedTop` (qid, cid).
+    */
+  private def hitsSql(exactTop: String, servedTop: String): String =
+    s"""hits AS (SELECT e.qid,
+           CAST(SUM(CASE WHEN e.cid = s.cid THEN 1 ELSE 0 END)
+             AS BIGINT) AS n_hits
+         FROM $exactTop e JOIN $servedTop s ON s.qid = e.qid GROUP BY 1)"""
+
   /** The (qid, n_scanned, n_hits) serving report: the served candidates
     * (`scored`: qid, cid, score) ranked by (`order`, cid asc) and graded
     * against `exactTop`; n_scanned counts the rows of `cost` (the
@@ -2425,6 +2253,20 @@ object Similarity extends QueryPack {
       .orderBy(col("qid"))
   }
 
+  /** SQL twin of [[ivfServingReport]], graded against the caller's
+    * exact top-5 CTE `et` (for L2, [[ServeOps.groundTruthL2Sql]]): the
+    * CTE `served` ranked by (`order`, cid), n_scanned counted over
+    * `cost` (default `served`), then the report's SELECT.
+    */
+  private def servingReportSql(served: String, order: String = "dist",
+      cost: String = ""): String =
+    s"""nsc AS (SELECT qid, COUNT(*) AS n_scanned
+               FROM ${if (cost.isEmpty) served else cost} GROUP BY 1),
+       ${ServeOps.top5Sql("it", served, order)},
+       ${hitsSql("et", "it")}
+       SELECT h.qid, n.n_scanned, h.n_hits
+       FROM hits h JOIN nsc n ON n.qid = h.qid ORDER BY h.qid"""
+
   /** e6 inner-product scores (qid, cid, score) of the query rows `qs`
     * against every other (vec_id, v) row of `cands`.
     */
@@ -2433,6 +2275,15 @@ object Similarity extends QueryPack {
         col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         VectorOps.dot(col("qv"), col("cv")).cast("long").as("score"))
+
+  /** SQL twin of [[ipScored]]: the CTE `name` (qid, cid, score) of the
+    * query rows `qs` (qid, qv) against every other row of `cands`
+    * (vec_id, v).
+    */
+  private def ipScoredSql(name: String, cands: String): String =
+    s"""$name AS (SELECT q.qid, c.vec_id AS cid,
+           CAST(${VectorOps.dotSql("q.qv", "c.v")} AS BIGINT) AS score
+         FROM qs q JOIN $cands c ON c.vec_id <> q.qid)"""
 
   /** The routed-cell scan: route (qid, cell) ⋈ the query rows of `arrs`
     * ⋈ `members` (cid, cell, cv, cn2) on the cell key, each query's own
@@ -2467,6 +2318,14 @@ object Similarity extends QueryPack {
       .groupBy(keys.map(col).toIndexedSeq: _*)
       .agg(sum((col("qx") - col("v")) * (col("qx") - col("v"))).as("dd"))
   }
+
+  /** SQL twin of [[adcTable]] without a cell key: the CTE `name`
+    * (qid, sub, c, dd) of the bounded queries' rows of subspace CTE
+    * `xs` against codebook CTE `book`.
+    */
+  private def adcTableSql(name: String, xs: String, book: String): String =
+    s"""$name AS (SELECT vec_id AS qid, sub, c, dd FROM (
+         ${VectorOps.subDistSql(xs, book, "WHERE q.vec_id < 20")}))"""
 
   /** ADC scores (qid, cid, dist) of the routed cells' members: each
     * member's codes (vec_id, sub, c) looked up in `tab` ([[adcTable]])
@@ -2537,7 +2396,17 @@ object Similarity extends QueryPack {
     flatReport(route, cells, e6Arrays(x))
   }
 
-  private val q251Sql = trainedIvfSql(kkCte = "", seedLimit = "16")
+  private val q251Sql = flatReportSql(
+    s"""${VectorOps.liftE6Sql},
+       ${VectorOps.pqSubspacesSql("xs", DIM)},
+       ${VectorOps.seedRankSql},
+       ${VectorOps.pqQuantizeSql("xs", "16", IndexStore.trainNSql("16"),
+         rounds = 2)},
+       cells AS (SELECT vec_id, c AS cell FROM codes),
+       ${adcTableSql("qtab", "xs", "c2")},
+       route AS (SELECT qid, c AS cell FROM (
+           SELECT qid, c, RANK() OVER (PARTITION BY qid ORDER BY dd, c) AS rn
+           FROM qtab) WHERE rn <= 2)""")
 
   /** q256: COUNT-SCALED coarse quantizer as an INVERTED MULTI-INDEX
     * (product cell space; Babenko & Lempitsky, CVPR'12) — closing the
@@ -2634,97 +2503,56 @@ object Similarity extends QueryPack {
       ServeOps.groundTruthL2(arrs, 20))
   }
 
-  /** One DuckDB Lloyd round (assignment + shift-floor mean update)
-    * over subspace frame `$xs` — q241's text with the frame name
-    * parameterized; every trained-quantizer oracle (IMI halves, PQ
-    * subspaces, residual subspaces) unrolls this same block.
+  /** SQL twin of [[flatReport]] over `ctes`, which must define the
+    * lifted `x`, `cells` (vec_id, cell) and `route` (qid, cell): exact
+    * L2 over the routed cells' members, graded against the exact L2
+    * top-5.
     */
-  private def lloydRoundSql(xs: String, cp: String, a: String,
-      u: String, cn: String): String =
-    s"""$a AS (SELECT vec_id, sub, c FROM (
-         SELECT d.vec_id, d.sub, d.c,
-           ROW_NUMBER() OVER (PARTITION BY d.vec_id, d.sub
-             ORDER BY d.dd, d.c) AS rn
-         FROM (SELECT $xs.vec_id, $xs.sub, c.c,
-                 SUM(($xs.x - c.v)*($xs.x - c.v)) AS dd
-               FROM $xs JOIN $cp c ON c.sub = $xs.sub AND c.j = $xs.j
-               GROUP BY 1, 2, 3) d) WHERE rn = 1),
-       $u AS (SELECT a.sub, a.c, $xs.j,
-           (SUM($xs.x) + COUNT(*) * 2000000) // COUNT(*) - 2000000 AS nv
-         FROM $a a JOIN $xs ON $xs.vec_id = a.vec_id AND $xs.sub = a.sub
-         GROUP BY 1, 2, 3),
-       $cn AS (SELECT p.sub, p.c, p.j, COALESCE(u.nv, p.v) AS v
-         FROM $cp p LEFT JOIN $u u
-           ON u.sub = p.sub AND u.c = p.c AND u.j = p.j)"""
+  private def flatReportSql(ctes: String): String =
+    s"""WITH $ctes,
+       scanned AS (SELECT r.qid, m.vec_id AS cid,
+             SUM((q.x - m2.x)*(q.x - m2.x)) AS dist
+           FROM route r JOIN cells m ON m.cell = r.cell
+           JOIN x q ON q.vec_id = r.qid
+           JOIN x m2 ON m2.vec_id = m.vec_id AND m2.dim = q.dim
+           WHERE m.vec_id <> r.qid
+           GROUP BY 1, 2),
+       ${ServeOps.groundTruthL2Sql(20)},
+       ${servingReportSql("scanned")}"""
 
   /** Shared DuckDB CTE chain builder for the IMI family: the
     * geometry CTEs (`kkCtes` must define kk(k1); `geomCte` defines
     * the probe-side budget — np(nprobe) for the share-pinned family,
     * bgt(budget) for the √n family — both mirrored from COUNT(*)),
-    * the lifted e6 frame, the two-half subspace frame, the k1-seed
-    * Lloyd chain over `rounds` unrolled rounds (ic$rounds = trained
-    * half codebook), the composite-cell membership, the per-query
-    * half-distance frame `hdd`, and the caller-supplied `routeCte`
-    * (must emit route(qid, cell)). `seedrank` is shared with the PQ
-    * chains, which cut their own count-scaled seeds from the same
-    * ordering. Two instances: [[imiCtes]] (share-pinned geometry,
-    * rank route, 2 rounds — q256/q253/q255/q257) and [[imiSqrtCtes]]
-    * (√n geometry, scan-budget route, [[SQRT_ROUNDS]] rounds —
-    * q258/q260).
+    * the lifted e6 frame, the two-half subspace frame, the k1-centroid
+    * quantizer chain over `rounds` unrolled rounds (ic$rounds = trained
+    * half codebook, icodes = every vector's half codes), trained on
+    * `trainCut` rows of the shared `seedrank` ordering, the
+    * composite-cell membership, the per-query half-distance table
+    * `hdd`, and the caller-supplied `routeCte` (must emit route(qid,
+    * cell)). The PQ chains cut their own count-scaled seeds from the
+    * same `seedrank`. Two instances: [[imiCtes]] (share-pinned
+    * geometry, rank route, 2 rounds — q256/q253/q255/q257) and
+    * [[imiSqrtCtes]] (√n geometry, scan-budget route, [[SQRT_ROUNDS]]
+    * rounds — q258/q260).
     */
   private def imiCtesWith(kkCtes: String, geomCte: String,
       routeCte: String, rounds: Int,
       trainCut: String = IndexStore.trainNSql("SELECT k1 FROM kk"))
-      : String = {
-    // the Lloyd rounds train over xst — the hash-rank TRAINING SAMPLE
-    // (round 13, [[IndexStore.trainN]]'s twin: `trainCut` rows of the
-    // shared seedrank ordering, so iseeds ⊂ sample by construction) —
-    // while the full-corpus membership (halfc) and the query frame
-    // (hdd) stay over xs2: train on the sample, assign everything
-    val chain = (1 to rounds).map(i =>
-      lloydRoundSql("xst", s"ic${i - 1}", s"ia$i", s"iu$i", s"ic$i"))
-      .mkString(",\n       ")
-    val icN = s"ic$rounds"
+      : String =
     s"""$kkCtes,
        $geomCte,
-       x AS (SELECT vec_id, CAST(i AS BIGINT) AS dim,
-           CAST(ROUND(CAST(e AS DOUBLE)*1000000) AS BIGINT) AS x
-         FROM (SELECT vec_id, unnest(embedding) AS e,
-                      unnest(range(0, len(embedding))) AS i
-               FROM embeddings)),
-       xs2 AS (SELECT vec_id, dim // 32 AS sub, dim % 32 AS j, x
-              FROM x),
-       seedrank AS (SELECT vec_id, ROW_NUMBER() OVER (ORDER BY
-             CAST(('0x' || substr(md5('pqseed:' || vec_id), 1, 15))
-               AS BIGINT), vec_id) AS rn
-           FROM (SELECT DISTINCT vec_id FROM x)),
-       tsam AS (SELECT vec_id FROM seedrank WHERE rn <= ($trainCut)),
-       xst AS (SELECT xs2.vec_id, xs2.sub, xs2.j, xs2.x
-              FROM xs2 JOIN tsam ON tsam.vec_id = xs2.vec_id),
-       iseeds AS (SELECT vec_id, rn - 1 AS c FROM seedrank
-         WHERE rn <= (SELECT k1 FROM kk)),
-       ic0 AS (SELECT xs2.sub, s.c, xs2.j, xs2.x AS v
-              FROM iseeds s JOIN xs2 ON xs2.vec_id = s.vec_id),
-       $chain,
-       halfc AS (SELECT vec_id, sub, c FROM (
-           SELECT d.vec_id, d.sub, d.c,
-             ROW_NUMBER() OVER (PARTITION BY d.vec_id, d.sub
-               ORDER BY d.dd, d.c) AS rn
-           FROM (SELECT xs2.vec_id, xs2.sub, c.c,
-                   SUM((xs2.x - c.v)*(xs2.x - c.v)) AS dd
-                 FROM xs2 JOIN $icN c ON c.sub = xs2.sub
-                   AND c.j = xs2.j
-                 GROUP BY 1, 2, 3) d) WHERE rn = 1),
+       ${VectorOps.liftE6Sql},
+       ${VectorOps.pqSubspacesSql("xs2", 32)},
+       ${VectorOps.seedRankSql},
+       ${VectorOps.pqQuantizeSql("xs2", "SELECT k1 FROM kk", trainCut,
+         rounds, p = "i")},
        cells AS (SELECT vec_id,
            MAX(CASE WHEN sub = 0 THEN c END) * (SELECT k1 FROM kk) +
            MAX(CASE WHEN sub = 1 THEN c END) AS cell
-         FROM halfc GROUP BY 1),
-       hdd AS (SELECT q.vec_id AS qid, c.sub, c.c,
-               SUM((q.x - c.v)*(q.x - c.v)) AS dd
-             FROM xs2 q JOIN $icN c ON c.sub = q.sub AND c.j = q.j
-             WHERE q.vec_id < 20 GROUP BY 1, 2, 3),
+         FROM icodes GROUP BY 1),
+       ${adcTableSql("hdd", "xs2", s"ic$rounds")},
        $routeCte"""
-  }
 
   /** The share-pinned instance: k1 from the ÷128 key rule, nprobe
     * from the shared probe rule at [[IMI_PROBE_DIVISOR]] (the
@@ -2768,65 +2596,17 @@ object Similarity extends QueryPack {
            SQRT_SCAN_MULT, SQRT_SCAN_FLOOR)} AS budget)"""
 
   private val sqrtRouteCte =
-    """cellsz AS (SELECT cell, COUNT(*) AS sz FROM cells GROUP BY 1),
-       comp AS (SELECT a.qid,
+    s"""comp AS (SELECT a.qid,
              a.c * (SELECT k1 FROM kk) + b.c AS cell,
              a.dd + b.dd AS dd
            FROM hdd a JOIN hdd b ON b.qid = a.qid
            WHERE a.sub = 0 AND b.sub = 1),
-       route AS (SELECT qid, cell FROM (
-           SELECT c.qid, c.cell, COALESCE(z.sz, 0) AS sz,
-             SUM(COALESCE(z.sz, 0)) OVER (PARTITION BY c.qid
-               ORDER BY c.dd, c.cell
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM comp c LEFT JOIN cellsz z ON z.cell = c.cell)
-         WHERE cum - sz < (SELECT budget FROM bgt))"""
+       ${ServeOps.scanBudgetSql("comp", "w.dd, w.cell")}"""
 
   private val imiSqrtCtes = imiCtesWith(sqrtKkCtes, sqrtGeomCte,
     sqrtRouteCte, rounds = SQRT_ROUNDS)
 
-  /** The exact-ground-truth + report tail shared by the IMI oracles:
-    * rank `$served` (qid, cid, dist) to top-5, full-scan exact top-5,
-    * hits + n_scanned.
-    */
-  private def imiReportTailSql(served: String,
-      cost: String = ""): String =
-    s"""nsc AS (SELECT qid, COUNT(*) AS n_scanned
-               FROM ${if (cost.isEmpty) served else cost}
-               GROUP BY 1),
-       it AS (SELECT qid, cid AS served_cid FROM (
-           SELECT qid, cid, RANK() OVER (PARTITION BY qid
-             ORDER BY dist, cid) AS rn FROM $served) WHERE rn <= 5),
-       exd AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
-               SUM((q.x - c.x)*(q.x - c.x)) AS dist
-             FROM x q JOIN x c ON c.dim = q.dim AND c.vec_id <> q.vec_id
-             WHERE q.vec_id < 20 GROUP BY 1, 2),
-       et AS (SELECT qid, cid FROM (
-           SELECT qid, cid, RANK() OVER (PARTITION BY qid
-             ORDER BY dist, cid) AS rn FROM exd) WHERE rn <= 5),
-       hits AS (SELECT et.qid,
-           CAST(SUM(CASE WHEN et.cid = it.served_cid THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_hits
-         FROM et JOIN it ON it.qid = et.qid GROUP BY 1)
-       SELECT h.qid, n.n_scanned, h.n_hits
-       FROM hits h JOIN nsc n ON n.qid = h.qid ORDER BY h.qid"""
-
-  /** The flat-IMI oracle (exact L2 over the probed cells' members) at
-    * a given geometry-CTE chain — q256 (share-pinned) and q258 (√n)
-    * differ ONLY in how kk/np are derived.
-    */
-  private def imiFlatSql(ctes: String): String =
-    s"""WITH $ctes,
-       scanned AS (SELECT r.qid, m.vec_id AS cid,
-             SUM((q.x - m2.x)*(q.x - m2.x)) AS dist
-           FROM route r JOIN cells m ON m.cell = r.cell
-           JOIN x q ON q.vec_id = r.qid
-           JOIN x m2 ON m2.vec_id = m.vec_id AND m2.dim = q.dim
-           WHERE m.vec_id <> r.qid
-           GROUP BY 1, 2),
-       ${imiReportTailSql("scanned")}"""
-
-  private val q256Sql = imiFlatSql(imiCtes)
+  private val q256Sql = flatReportSql(imiCtes)
 
   /** q258: √n-CELL IMI serving — the SUBLINEAR-scan operating point
     * (round 11). q256 pins the probed SHARE of the key space at
@@ -2865,7 +2645,7 @@ object Similarity extends QueryPack {
     imiIvfReportBudget(s, d, k1, budget, SQRT_ROUNDS)
   }
 
-  private val q258Sql = imiFlatSql(imiSqrtCtes)
+  private val q258Sql = flatReportSql(imiSqrtCtes)
 
   /** q261: SAMPLED-training √n IMI serving (round 13) — q258's exact
     * machinery (√n composite cells, scan-budget route, SQRT_ROUNDS
@@ -2898,7 +2678,7 @@ object Similarity extends QueryPack {
       trainNOverride = tN)
   }
 
-  private val q261Sql = imiFlatSql(imiCtesWith(sqrtKkCtes, sqrtGeomCte,
+  private val q261Sql = flatReportSql(imiCtesWith(sqrtKkCtes, sqrtGeomCte,
     sqrtRouteCte, rounds = SQRT_ROUNDS,
     trainCut = "GREATEST(64, (SELECT COUNT(*) FROM embeddings) // 4)"))
 
@@ -2970,23 +2750,11 @@ object Similarity extends QueryPack {
     def cellOf(tag: String, id: String) =
       s"""(${graft.ops.TextOps.tokenHashSql(s"'$tag:' || $id")} %
          (SELECT k1 * k1 FROM kk))"""
-    s"""WITH bb AS (SELECT ${IndexStore.bitLenSql} AS bits
-           FROM embeddings),
-       kk AS (SELECT CAST(${IndexStore
-           .sqrtCellK1Sql("bits", SQRT_K1_FLOOR)} AS BIGINT)
-           AS k1 FROM bb),
-       bgt AS (SELECT ${IndexStore.scanBudgetSql(
-           "SELECT COUNT(*) FROM embeddings",
-           SQRT_SCAN_MULT, SQRT_SCAN_FLOOR)} AS budget),
-       x AS (SELECT vec_id, CAST(i AS BIGINT) AS dim,
-           CAST(ROUND(CAST(e AS DOUBLE)*1000000) AS BIGINT) AS x
-         FROM (SELECT vec_id, unnest(embedding) AS e,
-                      unnest(range(0, len(embedding))) AS i
-               FROM embeddings)),
-       members AS (SELECT vec_id AS cid,
-           ${cellOf("ctrlcell", "vec_id")} AS cell
+    flatReportSql(s"""$sqrtKkCtes,
+       $sqrtGeomCte,
+       ${VectorOps.liftE6Sql},
+       cells AS (SELECT vec_id, ${cellOf("ctrlcell", "vec_id")} AS cell
          FROM (SELECT DISTINCT vec_id FROM x)),
-       cellsz AS (SELECT cell, COUNT(*) AS sz FROM members GROUP BY 1),
        walk AS (SELECT q.vec_id AS qid, i.i,
            (${cellOf("ctrlprobe", "q.vec_id")} + i.i)
              % (SELECT k1 * k1 FROM kk) AS cell
@@ -2997,111 +2765,7 @@ object Similarity extends QueryPack {
                (SELECT k1 * k1 FROM kk))
                // (SELECT COUNT(*) FROM embeddings))))) AS i) i
          WHERE q.vec_id < 20),
-       route AS (SELECT qid, cell FROM (
-           SELECT w.qid, w.cell, COALESCE(z.sz, 0) AS sz,
-             SUM(COALESCE(z.sz, 0)) OVER (PARTITION BY w.qid
-               ORDER BY w.i
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM walk w LEFT JOIN cellsz z ON z.cell = w.cell)
-         WHERE cum - sz < (SELECT budget FROM bgt)),
-       scanned AS (SELECT r.qid, m.cid,
-             SUM((q.x - m2.x)*(q.x - m2.x)) AS dist
-           FROM route r JOIN members m ON m.cell = r.cell
-           JOIN x q ON q.vec_id = r.qid
-           JOIN x m2 ON m2.vec_id = m.cid AND m2.dim = q.dim
-           WHERE m.cid <> r.qid
-           GROUP BY 1, 2),
-       ${imiReportTailSql("scanned")}"""
-  }
-
-  /** The q251/q256 oracle, parameterized by the seed-count source:
-    * the Lloyd chain is k-agnostic everywhere except how many
-    * hash-rank seeds initialize it.
-    */
-  private def trainedIvfSql(kkCte: String, seedLimit: String): String = {
-    // one Lloyd round (assignment + shift-floor mean update), same
-    // text as q241's but over the single full-space subspace; the
-    // rounds train over xst — the hash-rank training sample
-    // ([[IndexStore.trainN]]'s twin) — while membership/route/ground
-    // truth stay full-corpus
-    def round(cp: String, a: String, u: String, cn: String) =
-      s"""$a AS (SELECT vec_id, sub, c FROM (
-           SELECT d.vec_id, d.sub, d.c,
-             ROW_NUMBER() OVER (PARTITION BY d.vec_id, d.sub
-               ORDER BY d.dd, d.c) AS rn
-           FROM (SELECT xst.vec_id, xst.sub, c.c,
-                   SUM((xst.x - c.v)*(xst.x - c.v)) AS dd
-                 FROM xst JOIN $cp c ON c.sub = xst.sub AND c.j = xst.j
-                 GROUP BY 1, 2, 3) d) WHERE rn = 1),
-         $u AS (SELECT a.sub, a.c, xst.j,
-             (SUM(xst.x) + COUNT(*) * 2000000) // COUNT(*) - 2000000 AS nv
-           FROM $a a JOIN xst ON xst.vec_id = a.vec_id AND xst.sub = a.sub
-           GROUP BY 1, 2, 3),
-         $cn AS (SELECT p.sub, p.c, p.j, COALESCE(u.nv, p.v) AS v
-           FROM $cp p LEFT JOIN $u u
-             ON u.sub = p.sub AND u.c = p.c AND u.j = p.j)"""
-    s"""WITH $kkCte
-       x AS (SELECT vec_id, CAST(i AS BIGINT) AS dim,
-           CAST(ROUND(CAST(e AS DOUBLE)*1000000) AS BIGINT) AS x
-         FROM (SELECT vec_id, unnest(embedding) AS e,
-                      unnest(range(0, len(embedding))) AS i
-               FROM embeddings)),
-       xs AS (SELECT vec_id, dim // $DIM AS sub, dim % $DIM AS j, x
-              FROM x),
-       srank AS (SELECT vec_id, ROW_NUMBER() OVER (ORDER BY
-               CAST(('0x' || substr(md5('pqseed:' || vec_id), 1, 15))
-                 AS BIGINT), vec_id) AS rn
-           FROM (SELECT DISTINCT vec_id FROM x)),
-       seeds AS (SELECT vec_id, rn - 1 AS c FROM srank
-         WHERE rn <= $seedLimit),
-       tsam AS (SELECT vec_id FROM srank
-         WHERE rn <= (${IndexStore.trainNSql(seedLimit)})),
-       xst AS (SELECT xs.vec_id, xs.sub, xs.j, xs.x
-              FROM xs JOIN tsam ON tsam.vec_id = xs.vec_id),
-       c0 AS (SELECT xs.sub, s.c, xs.j, xs.x AS v
-              FROM seeds s JOIN xs ON xs.vec_id = s.vec_id),
-       ${round("c0", "a1", "u1", "c1")},
-       ${round("c1", "a2", "u2", "c2")},
-       cells AS (SELECT vec_id, c FROM (
-           SELECT d.vec_id, d.c,
-             ROW_NUMBER() OVER (PARTITION BY d.vec_id
-               ORDER BY d.dd, d.c) AS rn
-           FROM (SELECT xs.vec_id, c.c,
-                   SUM((xs.x - c.v)*(xs.x - c.v)) AS dd
-                 FROM xs JOIN c2 c ON c.sub = xs.sub AND c.j = xs.j
-                 GROUP BY 1, 2) d) WHERE rn = 1),
-       route AS (SELECT qid, c FROM (
-           SELECT d.qid, d.c,
-             RANK() OVER (PARTITION BY d.qid ORDER BY d.dd, d.c) AS rn
-           FROM (SELECT q.vec_id AS qid, c.c,
-                   SUM((q.x - c.v)*(q.x - c.v)) AS dd
-                 FROM xs q JOIN c2 c ON c.sub = q.sub AND c.j = q.j
-                 WHERE q.vec_id < 20 GROUP BY 1, 2) d) WHERE rn <= 2),
-       scanned AS (SELECT r.qid, m.vec_id AS cid,
-             SUM((q.x - m2.x)*(q.x - m2.x)) AS dist
-           FROM route r JOIN cells m ON m.c = r.c
-           JOIN x q ON q.vec_id = r.qid
-           JOIN x m2 ON m2.vec_id = m.vec_id AND m2.dim = q.dim
-           WHERE m.vec_id <> r.qid
-           GROUP BY 1, 2),
-       nsc AS (SELECT qid, COUNT(*) AS n_scanned FROM scanned
-               GROUP BY 1),
-       it AS (SELECT qid, cid AS ivf_cid FROM (
-           SELECT qid, cid, RANK() OVER (PARTITION BY qid
-             ORDER BY dist, cid) AS rn FROM scanned) WHERE rn <= 5),
-       exd AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
-               SUM((q.x - c.x)*(q.x - c.x)) AS dist
-             FROM x q JOIN x c ON c.dim = q.dim AND c.vec_id <> q.vec_id
-             WHERE q.vec_id < 20 GROUP BY 1, 2),
-       et AS (SELECT qid, cid FROM (
-           SELECT qid, cid, RANK() OVER (PARTITION BY qid
-             ORDER BY dist, cid) AS rn FROM exd) WHERE rn <= 5),
-       hits AS (SELECT et.qid,
-           CAST(SUM(CASE WHEN et.cid = it.ivf_cid THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_hits
-         FROM et JOIN it ON it.qid = et.qid GROUP BY 1)
-       SELECT h.qid, n.n_scanned, h.n_hits
-       FROM hits h JOIN nsc n ON n.qid = h.qid ORDER BY h.qid"""
+       ${ServeOps.scanBudgetSql("walk", "w.i")}""")
   }
 
   /** q253: composed IndexIVFPQ serving — the production shape faiss
@@ -3164,45 +2828,22 @@ object Similarity extends QueryPack {
     ivfServingReport(CacheScope.pin(adc), ServeOps.groundTruthL2(arrs, 20))
   }
 
-  /** The m=8 PQ Lloyd chain + per-query ADC tables, shared by the
-    * q253/q255/q257 oracles: trains over subspace frame `$xp` (raw
-    * subspaces for q253, residual subspaces for q255/q257), emitting
-    * `${p}c2` (trained codebook) and `${p}codes` (assignments). The
-    * COUNT-SCALED k_pq seeds (the `kpq` CTE, [[pqKSqlCte]] — the
-    * twin of [[pqK]]) are cut from the shared `seedrank` ordering.
+  /** The count-scaled m=8 PQ quantizer chain of the q253/q255/q257
+    * oracles over subspace CTE `$xp` (raw subspaces for q253, residual
+    * subspaces for q255/q257), emitting `${p}c2` (trained codebook) and
+    * `${p}codes`; its k_pq is the `kpq` CTE ([[pqKSqlCte]], the twin of
+    * [[pqK]]).
     */
   private def pqChainSql(xp: String, p: String): String =
-    s"""${p}seeds AS (SELECT vec_id, rn - 1 AS c FROM seedrank
-         WHERE rn <= (SELECT kpq FROM kpq)),
-       ${p}tsam AS (SELECT vec_id FROM seedrank
-         WHERE rn <= (${IndexStore.trainNSql("SELECT kpq FROM kpq")})),
-       ${p}xpt AS (SELECT $xp.vec_id, $xp.sub, $xp.j, $xp.x
-               FROM $xp JOIN ${p}tsam t ON t.vec_id = $xp.vec_id),
-       ${p}c0 AS (SELECT $xp.sub, s.c, $xp.j, $xp.x AS v
-               FROM ${p}seeds s JOIN $xp ON $xp.vec_id = s.vec_id),
-       ${lloydRoundSql(s"${p}xpt",
-         s"${p}c0", s"${p}a1", s"${p}u1", s"${p}c1")},
-       ${lloydRoundSql(s"${p}xpt",
-         s"${p}c1", s"${p}a2", s"${p}u2", s"${p}c2")},
-       ${p}codes AS (SELECT vec_id, sub, c FROM (
-           SELECT d.vec_id, d.sub, d.c,
-             ROW_NUMBER() OVER (PARTITION BY d.vec_id, d.sub
-               ORDER BY d.dd, d.c) AS rn
-           FROM (SELECT $xp.vec_id, $xp.sub, c.c,
-                   SUM(($xp.x - c.v)*($xp.x - c.v)) AS dd
-                 FROM $xp JOIN ${p}c2 c ON c.sub = $xp.sub
-                   AND c.j = $xp.j
-                 GROUP BY 1, 2, 3) d) WHERE rn = 1)"""
+    VectorOps.pqQuantizeSql(xp, "SELECT kpq FROM kpq",
+      IndexStore.trainNSql("SELECT kpq FROM kpq"), rounds = 2, p = p)
 
   private val q253Sql =
     s"""WITH $imiCtes,
        $pqKSqlCte,
-       xp AS (SELECT vec_id, dim // 8 AS sub, dim % 8 AS j, x FROM x),
+       ${VectorOps.pqSubspacesSql("xp", 8)},
        ${pqChainSql("xp", "p")},
-       tab AS (SELECT q.vec_id AS qid, c.sub, c.c,
-               SUM((q.x - c.v)*(q.x - c.v)) AS dd
-             FROM xp q JOIN pc2 c ON c.sub = q.sub AND c.j = q.j
-             WHERE q.vec_id < 20 GROUP BY 1, 2, 3),
+       ${adcTableSql("tab", "xp", "pc2")},
        cand AS (SELECT r.qid, m.vec_id AS cid
              FROM route r JOIN cells m ON m.cell = r.cell
              WHERE m.vec_id <> r.qid),
@@ -3211,7 +2852,8 @@ object Similarity extends QueryPack {
              JOIN tab t ON t.qid = cd.qid AND t.sub = k.sub
                AND t.c = k.c
              GROUP BY 1, 2),
-       ${imiReportTailSql("adc")}"""
+       ${ServeOps.groundTruthL2Sql(20)},
+       ${servingReportSql("adc")}"""
 
   /** q255: RESIDUAL-encoded IndexIVFPQ — the refinement that makes
     * q253 faiss's actual default (`by_residual=true`): PQ is trained
@@ -3398,18 +3040,18 @@ object Similarity extends QueryPack {
 
   /** The residual-PQ CTE block shared by every residual/refine oracle
     * at ANY coarse geometry: residualize against the chain's trained
-    * half-space centroids (`ic2`/`halfc` from [[imiCtesWith]]), train
+    * half-space centroids (`ic2`/`icodes` from [[imiCtesWith]]), train
     * the count-scaled residual PQ chain, build the per-(query, probed
     * cell) ADC tables and score the probed cells' members — emits
     * `radc` (qid, cid, ADC dist).
     */
   private def residualAdcCtes(icN: String) =
     s"""rx AS (SELECT x.vec_id, x.dim, x.x - cv.v AS x
-              FROM x JOIN halfc hc ON hc.vec_id = x.vec_id
+              FROM x JOIN icodes hc ON hc.vec_id = x.vec_id
                 AND hc.sub = x.dim // 32
               JOIN $icN cv ON cv.sub = hc.sub AND cv.c = hc.c
                 AND cv.j = x.dim % 32),
-       rxs AS (SELECT vec_id, dim // 8 AS sub, dim % 8 AS j, x FROM rx),
+       ${VectorOps.pqSubspacesSql("rxs", 8, src = "rx")},
        ${pqChainSql("rxs", "r")},
        qr AS (SELECT q.vec_id AS qid, r.cell,
                 q.dim // 8 AS sub, q.dim % 8 AS j, q.x - cv.v AS qx
@@ -3450,7 +3092,8 @@ object Similarity extends QueryPack {
              FROM short s JOIN x q ON q.vec_id = s.qid
              JOIN x c ON c.vec_id = s.cid AND c.dim = q.dim
              GROUP BY 1, 2),
-       ${imiReportTailSql("refined", cost = "radc")}"""
+       ${ServeOps.groundTruthL2Sql(20)},
+       ${servingReportSql("refined", cost = "radc")}"""
 
   private val q257Sql = imiRefineSql(imiCtes, "ic2")
 
@@ -3487,7 +3130,8 @@ object Similarity extends QueryPack {
     s"""WITH $imiCtes,
        $pqKSqlCte,
        ${residualAdcCtes("ic2")},
-       ${imiReportTailSql("radc")}"""
+       ${ServeOps.groundTruthL2Sql(20)},
+       ${servingReportSql("radc")}"""
 
   override val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q261_imi_sqrt_sampled" -> q261ImiSqrtSampled,

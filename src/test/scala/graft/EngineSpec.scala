@@ -77,8 +77,12 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("oracle keys all map to queries") {
-    SparkEntry.oracleSql.keys.foreach { k =>
+    SparkEntry.oracleSql.foreach { case (k, sql) =>
       assert(SparkEntry.queries.contains(k), s"oracle $k has no query")
+      // a val interpolating a block declared later in its object reads
+      // it as null: the oracle text then carries a bare `null`
+      assert("""\bnull\b""".r.findFirstIn(sql).isEmpty,
+        s"oracle $k interpolates an uninitialized block (bare null)")
     }
   }
 
