@@ -1,8 +1,9 @@
 #!/bin/bash
 # Full artifact refresh: suite, tri-SF oracle gate, targeted synthetic-sf1
-# gate, then BENCH / SERVE / RECALL / PERF / SCALING / STREAMBENCH /
-# ITERSCALE / PLANS / RECALL_CURVE, each written as <NAME>_<tag>.json
-# in the repo root (PLANS.md is regenerated in place).
+# gate, then BENCH / SERVE / RECALL / SCALING / STREAMBENCH / ITERSCALE /
+# PLANS / RECALL_CURVE, each written as <NAME>_<tag>.json in the repo
+# root (PLANS.md is regenerated in place). BENCH's sf0.1 record carries
+# each query's job, stage, task, byte and idle-time costs.
 #
 # Usage: scripts/refresh.sh <tag> [testdata-dir]
 #   testdata-dir holds sf0.001/sf0.01/sf0.1 (default: $HOME/testdata).
@@ -32,13 +33,6 @@ promote () { # name, tmp file, artifact, rc
   else
     note "$1_EXIT=$4 ARTIFACT_KEPT"; return 1
   fi
-}
-
-promote_line () { # name, log, JSON line pattern, artifact, rc
-  local tmp=$WORK/$1.json
-  rm -f "$tmp"
-  [ "$5" -eq 0 ] && grep -o "$3" "$2" | tail -1 > "$tmp"
-  promote "$1" "$tmp" "$4" "$5"
 }
 
 # synthetic corpora (deterministic; generated when absent)
@@ -104,14 +98,15 @@ RECALL_EXIT=$?
 promote RECALL "$WORK/RECALL.json" "RECALL_$TAG.json" 0 || true
 note "RECALL_GATE_EXIT=$RECALL_EXIT"
 
-SPARK_GRAFT_SF_DIR=$DATA/sf0.1 main PerfProfile > "$WORK/perf.log" 2>&1
-promote_line PERF "$WORK/perf.log" '{"sf".*}' "PERF_$TAG.json" $?
+rm -f "$WORK/SF1FULL.json"
+SPARK_GRAFT_BENCH_REPEATS=1 SPARK_GRAFT_BENCH_OUT=$WORK/SF1FULL.json \
+  main Bench "$REPO/testdata-sf0.1-synth" "$REPO/testdata-sf1" > "$WORK/sf1full.log" 2>&1
+promote SF1FULL "$WORK/SF1FULL.json" "SCALING_SF1_FULL_$TAG.json" $?
 
-SPARK_GRAFT_BENCH_REPEATS=1 main ScaleBench "$REPO/testdata-sf0.1-synth" "$REPO/testdata-sf1" > "$WORK/sf1full.log" 2>&1
-promote_line SF1FULL "$WORK/sf1full.log" '{"sfs".*}' "SCALING_SF1_FULL_$TAG.json" $?
-
-main ScaleBench "$DATA/sf0.001" "$DATA/sf0.01" "$DATA/sf0.1" > "$WORK/scale.log" 2>&1
-promote_line SCALE "$WORK/scale.log" '{"sfs".*}' "SCALING_$TAG.json" $?
+rm -f "$WORK/SCALING.json"
+SPARK_GRAFT_BENCH_OUT=$WORK/SCALING.json \
+  main Bench "$DATA/sf0.001" "$DATA/sf0.01" "$DATA/sf0.1" > "$WORK/scale.log" 2>&1
+promote SCALE "$WORK/SCALING.json" "SCALING_$TAG.json" $?
 
 rm -f "$WORK/STREAMBENCH.json"
 SPARK_GRAFT_SF_DIR=$DATA/sf0.1 main StreamBench "$WORK/STREAMBENCH.json" > "$WORK/stream.log" 2>&1

@@ -196,7 +196,7 @@ object MlPacks extends QueryPack {
     // Spread the TRANSFORM input, not the fit input (round 13, guide
     // §2): the documents scan is one task (single-row-group parquet),
     // so tokenize→shingle→vectorize→minhash and the LSH self-join all
-    // ran on one core (StageProfile: every q54 stage was 1 task; the
+    // ran on one core (stage profile: every q54 stage was 1 task; the
     // transform+count and join stages alone were ~2.7 s single-task).
     // The fit keeps the ORIGINAL partitioning because
     // CountVectorizer's vocabulary is ordered by count with ties

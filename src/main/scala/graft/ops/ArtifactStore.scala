@@ -22,8 +22,9 @@ import org.apache.spark.sql.types.StructType
   * `_SUCCESS`-marked output already exists under the pinned dir (same
   * plan, same file snapshot, same params) is read back with ZERO
   * derivation work even in a fresh session. Unset, artifacts land in
-  * a session-UUID'd tmpdir and every new session re-derives (the
-  * in-memory registry alone gates rebuilds within a session).
+  * a UUID'd tmpdir root that is deleted when the JVM exits, and every
+  * new JVM re-derives (the in-memory registry alone gates rebuilds
+  * within one).
   */
 private[graft] object ArtifactStore {
 
@@ -34,9 +35,26 @@ private[graft] object ArtifactStore {
   private val artifacts =
     scala.collection.mutable.Map.empty[String, (String, Option[StructType])]
 
-  /** Session-unique base dir (override: spark.graft.artifactDir). */
-  private lazy val artifactRunId =
-    java.util.UUID.randomUUID().toString.take(8)
+  /** This JVM's tmpdir root, made on first use and deleted at exit. */
+  private lazy val tmpBase: String = {
+    val dir = sys.props("java.io.tmpdir") +
+      s"/graft-artifacts-${java.util.UUID.randomUUID().toString.take(8)}"
+    // a lower priority than Spark's hooks: deleted after they stop
+    // the context
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => { org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(dir)); () },
+      org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 1)
+    dir
+  }
+
+  /** (artifact root, durable?): `spark.graft.artifactDir` when set,
+    * else this JVM's [[tmpBase]].
+    */
+  private def base(spark: org.apache.spark.sql.SparkSession)
+      : (String, Boolean) =
+    spark.conf.getOption("spark.graft.artifactDir")
+      .fold((tmpBase, false))((_, true))
 
   /** Fold (path, size, mtime) of every file the plan's scans will read
     * into `md` — pulled from the FileIndex the relation already holds
@@ -141,26 +159,24 @@ private[graft] object ArtifactStore {
       partitionBy: Seq[String] = Nil)
       (build: (Seq[DataFrame] => Unit) => Unit): Seq[DataFrame] = {
     val spark = df.sparkSession
-    val durableBase = spark.conf.getOption("spark.graft.artifactDir")
-    val base = durableBase.getOrElse(sys.props("java.io.tmpdir") +
-      s"/graft-artifacts-$artifactRunId")
+    val (root, durable) = base(spark)
     val stored = synchronized {
       // a pinned artifactDir is a durable cross-session cache: a
       // committed (_SUCCESS) artifact under the same content-
       // addressed key is the same derivation — read it back, skip
       // the build entirely
-      for (k <- keys if !artifacts.contains(k) && durableBase.isDefined) {
-        val marker = new org.apache.hadoop.fs.Path(s"$base/$k", "_SUCCESS")
+      for (k <- keys if !artifacts.contains(k) && durable) {
+        val marker = new org.apache.hadoop.fs.Path(s"$root/$k", "_SUCCESS")
         if (marker.getFileSystem(spark.sessionState.newHadoopConf())
             .exists(marker))
-          artifacts(k) = (s"$base/$k", None)
+          artifacts(k) = (s"$root/$k", None)
       }
       if (!keys.forall(artifacts.contains))
         build { frames =>
           for ((k, f) <- keys.zip(frames) if !artifacts.contains(k)) {
             f.write.mode("overwrite").partitionBy(partitionBy: _*)
-              .parquet(s"$base/$k")
-            artifacts(k) = (s"$base/$k", Some(StructType(
+              .parquet(s"$root/$k")
+            artifacts(k) = (s"$root/$k", Some(StructType(
               f.schema.filterNot(c => partitionBy.contains(c.name)))))
           }
         }
@@ -185,15 +201,13 @@ private[graft] object ArtifactStore {
   def pathOnce(df: DataFrame, key: String)
       (build: String => Unit): String = {
     val spark = df.sparkSession
-    val durableBase = spark.conf.getOption("spark.graft.artifactDir")
+    val (root, durable) = base(spark)
     synchronized {
       artifacts.getOrElseUpdate(key, {
-        val base = durableBase.getOrElse(sys.props("java.io.tmpdir") +
-          s"/graft-artifacts-$artifactRunId")
-        val p = s"$base/$key"
+        val p = s"$root/$key"
         val marker = new org.apache.hadoop.fs.Path(p, "_GRAFT_COMMITTED")
         val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-        val committed = durableBase.isDefined && fs.exists(marker)
+        val committed = durable && fs.exists(marker)
         if (!committed) {
           build(p)
           fs.create(marker, true).close()
@@ -222,8 +236,7 @@ private[graft] object ArtifactStore {
     * the entry's `_SUCCESS` commit marker — uncommitted/partial trees
     * from a crashed build are reclaimed on age too). Returns the
     * deleted entry names. A no-op (Nil) when no durable dir is
-    * configured: session-UUID'd tmpdir caches die with the JVM's
-    * tmpdir and never accumulate across runs.
+    * configured: the JVM's tmpdir root is deleted when the JVM exits.
     */
   def vacuum(spark: org.apache.spark.sql.SparkSession,
       retainMs: Long = 7L * 24 * 3600 * 1000): Seq[String] =

@@ -108,7 +108,7 @@ object CurationOps {
     * tokenize→shingle→hash chains inherit the scan's partitioning,
     * and a small corpus (single-row-group parquet) scans as ONE task,
     * so the pack's heaviest per-row arithmetic ran single-core
-    * (StageProfile: the [[CacheScope.pin]] counts were 1-2-task stages
+    * (stage profile: the [[CacheScope.pin]] counts were 1-2-task stages
     * of 2-4.5 s pure CPU at sf0.1). When — and only when — the input
     * carries fewer partitions than the session's parallelism,
     * hash-repartition by doc id before the per-row work; at scale the
@@ -500,7 +500,7 @@ object CurationOps {
     *
     * Round 14 (guide §1.2 — don't compute what you throw away): the
     * exact `array_intersect` was the single largest CPU block of the
-    * q153/q242 profiles (StageProfile: 28.7 s summed task CPU at
+    * q153/q242 profiles (stage profile: 28.7 s summed task CPU at
     * sf0.1), and most of it was spent on candidates a SIZE test
     * already rejects: J = i/(n1+n2−i) ≥ num/den with i ≤ min(n1,n2)
     * forces num·(n1+n2) ≤ (num+den)·min(n1,n2) — integer-exact, no
@@ -821,7 +821,7 @@ object CurationOps {
       textCol: String = "text"): DataFrame = {
     // spread like kgramHits' root (round 14, guide §2): this second
     // tokenize lineage fed the per-token posexplode as ONE task over
-    // the single-row-group scan (StageProfile: 797 ms single-task
+    // the single-row-group scan (stage profile: 797 ms single-task
     // CPU); the identical spread exchange below is reused by both
     val toks = spread(docs)
       .select(col("doc_id"), TextOps.tokens(col(textCol)).as("toks"))

@@ -194,7 +194,7 @@ object RerankOps {
         col("s.rel").as("rel"), col("s.mmr").as("mmr"))
       // pinned: the final range sort SAMPLES its child to pick partition
       // bounds before the shuffle map runs — uncached, the whole
-      // interpreted HOF chain evaluates TWICE (StageProfile: two
+      // interpreted HOF chain evaluates TWICE (stage profile: two
       // back-to-back stages reading the same grouped-collect shuffle,
       // 805 + 704 ms). The pin is |queries|·k rows. The sample job
       // fully materializes the cache; the sort's map pass then reads it.

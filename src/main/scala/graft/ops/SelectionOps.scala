@@ -161,7 +161,7 @@ object SelectionOps {
     // Scale-adaptive compute spread (round 13, guide §2 — the same
     // rule as CurationOps): a single-row-group corpus scans as one
     // task, so every greedy round's groupBy scanned the cached
-    // (doc, shingle) relation single-core (StageProfile: 1-task
+    // (doc, shingle) relation single-core (stage profile: 1-task
     // 0.7 s stages per round). Spread by doc id only when the input
     // has fewer partitions than the session parallelism — identity at
     // scale, and groupBy(id) consumers reuse the keyed partitioning.

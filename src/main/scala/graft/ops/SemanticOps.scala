@@ -37,7 +37,7 @@ object SemanticOps {
   /** Scale-adaptive compute spread (round 13, guide §2 — the same
     * rule as CurationOps): a small embeddings table scans as ONE task
     * (single-row-group parquet), so the per-row norm and the 4×16
-    * hyperplane-sign band keys all ran single-core (StageProfile:
+    * hyperplane-sign band keys all ran single-core (stage profile:
     * q208's banding stage was 1 task / 1.35 s CPU). Repartition by the
     * row id only when the input carries fewer partitions than the
     * session parallelism — at scale this is the identity, and the

@@ -389,18 +389,6 @@ object VectorOps {
            FROM $xs q JOIN $book c ON c.sub = q.sub AND c.j = q.j $where
            GROUP BY 1, 2, 3"""
 
-  /** The trained codebook alone ([[pqQuantize]]'s first output). */
-  def pqCodebook(xs: DataFrame, k: Int, rounds: Int,
-      trainN: Long = Long.MaxValue): DataFrame =
-    pqQuantize(xs, k, rounds, trainN)((book, _) => book)
-
-  /** Nearest-centroid assignment (vec_id, sub, c) under a given
-    * (sub, c, j, v) codebook: [[pqQuantize]]'s encoder, one pass over
-    * freshly gathered rows with the collected codebook in its closure.
-    */
-  def pqAssign(xs: DataFrame, cent: DataFrame): DataFrame =
-    encode(gather(xs), collectBook(cent))
-
   /** A (sub, c, j, v) codebook frame collected to the driver as
     * (sub, c) → j-ordered centroid.
     */

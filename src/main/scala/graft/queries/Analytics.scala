@@ -576,7 +576,7 @@ object Analytics extends QueryPack {
       .agg(countDistinct(col("l_orderkey")).as("n_baskets"))
     // pinned: itemSup feeds the prune join AND both rule-direction
     // broadcasts (supA/supB) — unpinned, the groupBy over baskets
-    // re-ran once per reference (StageProfile: 4 identical stages)
+    // re-ran once per reference (stage profile: 4 identical stages)
     val itemSup = baskets.groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("sup"))
       .filter(col("sup") >= minsup) // Apriori prune

@@ -466,7 +466,7 @@ object Corpus extends QueryPack {
     // Spread the docs before tokenize+explode (round 14, guide §2 —
     // the CurationOps rule): a single-row-group corpus scans as ONE
     // task, so the per-row tokenize and the tf partial aggregation ran
-    // single-core (StageProfile: the tf map side was a 1-task stage);
+    // single-core (stage profile: the tf map side was a 1-task stage);
     // identity at scale ([[graft.ops.SpreadOps]]).
     val tf = graft.ops.SpreadOps.spread(docs(s, d), col("doc_id"))
       .select(col("doc_id"), explode(toks).as("word"))

@@ -77,8 +77,8 @@ object Similarity extends QueryPack {
     * centroids, PQ/SQ8 codes, label-cell quantizer, LSH buckets, kNN
     * graph) exactly as a production pipeline schedules them — batch
     * index builds consumed by the whole serving family, not per-query
-    * work. PerfProfile and ScaleBench call this so serving queries
-    * profile as probe-only cost.
+    * work. [[graft.Bench.prebuild]] calls this once per SF dir before
+    * its sweeps, so serving queries time as probe-only cost.
     */
   private[graft] def prebuildIndexArtifacts(
       s: SparkSession, d: String): Unit = {
@@ -2182,7 +2182,7 @@ object Similarity extends QueryPack {
     * (`perfbench/`), whose between-pass reset calls it.
     *
     * The report chains pin ([[CacheScope.pin]]) every relation they
-    * reference more than once. Round-13 measurement (StageProfile,
+    * reference more than once. Round-13 measurement (stage profile,
     * warm q260): every multiply-referenced frame in the serving tail —
     * the route, the ADC candidates, the ground-truth arrays — was
     * re-derived per AQE stage reference (the same 1.18 MB lifted-frame

@@ -128,9 +128,16 @@ class IndexStoreSpec extends AnyFunSuite {
     cent
   }
 
+  /** The trained codebook alone ([[VectorOps.pqQuantize]]'s first
+    * output: a driver-side local frame, valid after the call).
+    */
+  private def codebook(xs: DataFrame, k: Int, rounds: Int,
+      trainN: Long = Long.MaxValue): DataFrame =
+    VectorOps.pqQuantize(xs, k, rounds, trainN)((book, _) => book)
+
   test("trained codebook artifact equals the direct Lloyd derivation") {
     val xs = VectorOps.pqSubspaces(lifted, subDim = 8)
-    val direct = sortedRows(VectorOps.pqCodebook(xs, k = 16, rounds = 2))
+    val direct = sortedRows(codebook(xs, k = 16, rounds = 2))
     val stored = sortedRows(IndexStore.codebook(xs, k = 16, rounds = 2))
     assert(stored === direct)
     assert(stored.nonEmpty)
@@ -147,8 +154,8 @@ class IndexStoreSpec extends AnyFunSuite {
 
   test("codes artifact equals direct assignment and reads back as a scan") {
     val xs = VectorOps.pqSubspaces(lifted, subDim = 8)
-    val direct = sortedRows(
-      VectorOps.pqAssign(xs, VectorOps.pqCodebook(xs, k = 16, rounds = 2)))
+    val direct = VectorOps.pqQuantize(xs, k = 16, rounds = 2)(
+      (_, codes) => sortedRows(codes))
     assert(sortedRows(IndexStore.codes(xs, k = 16, rounds = 2)) === direct)
     assert(isBareScan(IndexStore.codes(xs, k = 16, rounds = 2)))
   }
@@ -159,10 +166,9 @@ class IndexStoreSpec extends AnyFunSuite {
     // subspace geometries every trained quantizer in the engine uses
     for (subDim <- Seq(8, 32)) {
       val xs = VectorOps.pqSubspaces(lifted, subDim = subDim)
-      val cent = VectorOps.pqCodebook(xs, k = 16, rounds = 2)
-      assert(sortedRows(VectorOps.pqAssign(xs, cent)) ===
-        sortedRows(legacyAssign(xs, cent)),
-        s"assignment drift at subDim=$subDim")
+      VectorOps.pqQuantize(xs, k = 16, rounds = 2)((cent, codes) =>
+        assert(sortedRows(codes) === sortedRows(legacyAssign(xs, cent)),
+          s"assignment drift at subDim=$subDim"))
     }
   }
 
@@ -247,7 +253,7 @@ class IndexStoreSpec extends AnyFunSuite {
   test("a trained codebook is one local leaf whatever the round count") {
     val xs = VectorOps.pqSubspaces(lifted, subDim = 8)
     for (rounds <- Seq(1, 4)) {
-      val plan = VectorOps.pqCodebook(xs, 16, rounds).queryExecution.analyzed
+      val plan = codebook(xs, 16, rounds).queryExecution.analyzed
       assert(plan.isInstanceOf[LocalRelation],
         s"rounds=$rounds planned:\n$plan")
       assert(plan.output.map(a => a.name -> a.dataType) ===
@@ -255,17 +261,17 @@ class IndexStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("pqCodebook releases its gathered frame on return and on failure") {
+  test("pqQuantize releases its gathered frame on return and on failure") {
     val cacheManager = spark.sharedState.cacheManager
     spark.catalog.clearCache()
     val xs = VectorOps.pqSubspaces(lifted, subDim = 8)
-    VectorOps.pqCodebook(xs, 16, 2)
+    codebook(xs, 16, 2)
     assert(cacheManager.isEmpty, "a returning call left its frame cached")
     // e12-scale components overflow Σ(x−v)² in the round's long
     // arithmetic, which ANSI mode turns into an error mid-round
     assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
     val huge = xs.withColumn("x", col("x") * 1000000L)
-    val err = intercept[Exception](VectorOps.pqCodebook(huge, 16, 2))
+    val err = intercept[Exception](codebook(huge, 16, 2))
     assert(String.valueOf(err.getMessage).toLowerCase.contains("overflow"),
       err.toString)
     assert(cacheManager.isEmpty, "a failing call left its frame cached")
@@ -274,12 +280,11 @@ class IndexStoreSpec extends AnyFunSuite {
   test("sampled training: covering sample is bit-identical to full " +
       "training; biting sample trains exactly on the hash-rank prefix") {
     val xs = VectorOps.pqSubspaces(lifted, subDim = 8)
-    val full = sortedRows(VectorOps.pqCodebook(xs, k = 16, rounds = 2))
+    val full = sortedRows(codebook(xs, k = 16, rounds = 2))
     // a sample that covers the whole corpus (n=500 < 600) must change
     // NOTHING — the no-op guarantee the 100k production floor relies
     // on at every committed SF
-    assert(sortedRows(
-      VectorOps.pqCodebook(xs, k = 16, rounds = 2, trainN = 600L))
+    assert(sortedRows(codebook(xs, k = 16, rounds = 2, trainN = 600L))
       === full)
     // a biting sample must equal FULL training run over the sample
     // frame alone: the sample is a prefix of the "pqseed:" hash-rank
@@ -292,16 +297,14 @@ class IndexStoreSpec extends AnyFunSuite {
       .select(col("vec_id"))
     val xsSample = xs.join(sampleIds, Seq("vec_id"))
     val sampled = sortedRows(
-      VectorOps.pqCodebook(xs, k = 16, rounds = 2, trainN = 125L))
-    assert(sampled ===
-      sortedRows(VectorOps.pqCodebook(xsSample, k = 16, rounds = 2)))
+      codebook(xs, k = 16, rounds = 2, trainN = 125L))
+    assert(sampled === sortedRows(codebook(xsSample, k = 16, rounds = 2)))
     assert(sampled !== full) // 125 of 500: the cut genuinely bites
     // assignment stays FULL-corpus under a sampled codebook: every
     // (vector, subspace) of the corpus gets a code
     val n = lifted.select(col("vec_id")).distinct().count()
-    assert(VectorOps.pqAssign(xs,
-      VectorOps.pqCodebook(xs, k = 16, rounds = 2, trainN = 125L))
-      .count() === n * 8)
+    assert(VectorOps.pqQuantize(xs, k = 16, rounds = 2, trainN = 125L)(
+      (_, codes) => codes.count()) === n * 8)
   }
 
   test("sq8 artifact equals the direct quantization") {
