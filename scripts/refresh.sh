@@ -1,8 +1,8 @@
 #!/bin/bash
 # Full artifact refresh: suite, tri-SF oracle gate, targeted synthetic-sf1
-# gate, then BENCH / SERVE / RECALL / SCALING / STREAMBENCH / ITERSCALE /
-# PLANS / RECALL_CURVE, each written as <NAME>_<tag>.json in the repo
-# root (PLANS.md is regenerated in place). BENCH's sf0.1 record carries
+# gate, then BENCH / ANN / SCALING / STREAMBENCH / ITERSCALE / PLANS, each
+# written as <NAME>_<tag>.json in the repo root (PLANS.md is regenerated
+# in place). BENCH's sf0.1 record carries
 # each query's job, stage, task, byte and idle-time costs.
 #
 # Usage: scripts/refresh.sh <tag> [testdata-dir]
@@ -13,7 +13,7 @@
 # on exit 0 plus a JSON parse; its tmp artifact is removed before the run,
 # so a crash never promotes a stale file. Stage results are appended to
 # <work>/status.log (work dir: ${TMPDIR:-/tmp}/refresh_<tag>). Exit 1 if
-# a gate failed (suite, oracle, sf1 gate, or RecallBench floors).
+# a gate failed (suite, oracle, sf1 gate, or the AnnBench recall gate).
 set -u
 TAG=${1:?usage: scripts/refresh.sh <tag> [testdata-dir]}
 DATA=${2:-$HOME/testdata}
@@ -83,20 +83,15 @@ promote BENCH "$WORK/BENCH.json" "BENCH_$TAG.json" $?
 UNIFORM="$DATA/sf0.001,$DATA/sf0.01,$DATA/sf0.1,$REPO/testdata-sf1"
 CLUSTERED="$REPO/testdata-sf0.01-clustered,$REPO/testdata-sf0.1-clustered,$REPO/testdata-sf1-clustered"
 
-rm -f "$WORK/SERVE.json"
-SPARK_GRAFT_SERVE_SFS=$UNIFORM SPARK_GRAFT_SERVE_CLUSTERED_SFS=$CLUSTERED \
-  main ServeBench "$WORK/SERVE.json" > "$WORK/serve.log" 2>&1
-promote SERVE "$WORK/SERVE.json" "SERVE_$TAG.json" $?
-
-# recall GATE: exit 2 = a floor violation or the clustered-arm structure
-# ratio failed; the artifact (with its violations) is the record either way
-rm -f "$WORK/RECALL.json"
-SPARK_GRAFT_RECALL_SFS=$UNIFORM SPARK_GRAFT_RECALL_CLUSTERED_SFS=$CLUSTERED \
-  main RecallBench "$WORK/RECALL.json" > "$WORK/recall.log" 2>&1
-RECALL_EXIT=$?
-[ $RECALL_EXIT -ne 0 ] && GATE_FAIL=1
-promote RECALL "$WORK/RECALL.json" "RECALL_$TAG.json" 0 || true
-note "RECALL_GATE_EXIT=$RECALL_EXIT"
+# serve latency, recall GATE and recall curve per dir: exit 2 = a floor
+# violation or the clustered-arm structure ratio failed; the artifact
+# (with its violations) is the record either way
+rm -f "$WORK/ANN.json"
+main AnnBench "$WORK/ANN.json" "$UNIFORM" "$CLUSTERED" > "$WORK/ann.log" 2>&1
+ANN_EXIT=$?
+[ $ANN_EXIT -ne 0 ] && GATE_FAIL=1
+promote ANN "$WORK/ANN.json" "ANN_$TAG.json" 0 || true
+note "ANN_GATE_EXIT=$ANN_EXIT"
 
 rm -f "$WORK/SF1FULL.json"
 SPARK_GRAFT_BENCH_REPEATS=1 SPARK_GRAFT_BENCH_OUT=$WORK/SF1FULL.json \
@@ -118,12 +113,6 @@ promote ITER "$WORK/ITERSCALE.json" "ITERSCALE_$TAG.json" $?
 
 main PlanDump "$DATA/sf0.01" > "$WORK/plans.log" 2>&1
 note "PLANS_EXIT=$?"
-
-rm -f "$WORK/RECALL_CURVE.json"
-SPARK_GRAFT_CURVE_SFS="$DATA/sf0.1,$REPO/testdata-sf1" \
-SPARK_GRAFT_CURVE_CLUSTERED_SFS="$REPO/testdata-sf0.1-clustered,$REPO/testdata-sf1-clustered" \
-  main RecallCurve "$WORK/RECALL_CURVE.json" > "$WORK/curve.log" 2>&1
-promote CURVE "$WORK/RECALL_CURVE.json" "RECALL_CURVE_$TAG.json" $?
 
 note "ALL_DONE test=$TEST_EXIT gate_fail=$GATE_FAIL"
 [ $GATE_FAIL -eq 0 ]

@@ -32,10 +32,12 @@ import graft.ops.{CurationOps, GraphOps, SubwordOps}
   *
   * Emits one JSON document (stdout + file): per scale, the doc/pair
   * counts, per-op wall seconds, and the CC / k-core round counts.
-  * Run: `sbt "runMain graft.IterScale [outFile]"`; scales override via
-  * SPARK_GRAFT_ITERSCALE_DOCS="5000,50000".
+  * Run: `sbt "runMain graft.IterScale [outFile]"` (default
+  * ITERSCALE_LOCAL.json) over the doc counts in [[SCALES]].
   */
 object IterScale {
+  /** Corpus sizes (docs) swept, one decade apart. */
+  private val SCALES = Seq(5000L, 50000L)
 
   /** Same 31-word vocab register as the testdata documents table. */
   private val vocab = Seq(
@@ -110,16 +112,14 @@ object IterScale {
   }
 
   def main(args: Array[String]): Unit = {
-    val outFile = args.headOption.getOrElse("ITERSCALE_r06.json")
-    val scales = sys.env.getOrElse("SPARK_GRAFT_ITERSCALE_DOCS",
-      "5000,50000").split(",").map(_.trim.toLong).toSeq
+    val outFile = args.headOption.getOrElse("ITERSCALE_LOCAL.json")
     val spark = GraftSession.local("graft-iterscale")
     // JIT/codegen warmup so the smallest scale isn't billed for it
     spark.range(1000000L).selectExpr("sum(id)").write
       .format("noop").mode("overwrite").save()
 
     def f(d: Double) = f"$d%.3f"
-    val rows = scales.map { n =>
+    val rows = SCALES.map { n =>
       CacheScope.release()
       graft.ops.ArtifactStore.clear()
       spark.catalog.clearCache()

@@ -17,7 +17,7 @@ import graft.streaming.{StreamEvent, StreamingOps}
   * StreamingSpec's semantic gates (late data, replay, parity with the
   * batch twins) and the q204 driver gate.
   *
-  * Feed: the sf events table replicated `copies`× into separate
+  * Feed: the sf events table replicated [[COPIES]]× into separate
   * parquet files (event ids disambiguated per copy), streamed with
   * `maxFilesPerTrigger=1` so each copy is its own micro-batch — the
   * steady-state shape of a directory-feed ingest, state carried across
@@ -27,17 +27,18 @@ import graft.streaming.{StreamEvent, StreamingOps}
   * One JSON document (stdout + file):
   *   {"rows":N,"batches":K,"ops":{"windowed_counts":{"sec":…,
   *    "rows_per_sec":…},…}}
-  * Run: `sbt "runMain graft.StreamBench [outFile]"`; source dir via
-  * SPARK_GRAFT_SF_DIR (default sf0.1), copies via
-  * SPARK_GRAFT_STREAM_COPIES (default 8).
+  * Run: `sbt "runMain graft.StreamBench [outFile]"` (default
+  * STREAMBENCH_LOCAL.json); source dir via SPARK_GRAFT_SF_DIR (default
+  * sf0.1).
   */
 object StreamBench {
+  /** Copies of the events table in the feed, one micro-batch each. */
+  private val COPIES = 8
 
   def main(args: Array[String]): Unit = {
-    val outFile = args.headOption.getOrElse("STREAMBENCH_r06.json")
+    val outFile = args.headOption.getOrElse("STREAMBENCH_LOCAL.json")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_STREAM_COPIES", "8").toInt
     val spark = GraftSession.local("graft-streambench")
     import spark.implicits._
 
@@ -55,7 +56,7 @@ object StreamBench {
       .agg(min(col("ts")), max(col("ts"))).head()
       .toSeq.map(_.asInstanceOf[Long]).toArray
     val spanNs = tsMax - tsMin + 2L * 3600L * 1000000000L
-    (0 until copies).foreach { i =>
+    (0 until COPIES).foreach { i =>
       events
         .withColumn("event_id",
           col("event_id") + lit(i.toLong * 1000000000L))
@@ -63,7 +64,7 @@ object StreamBench {
         .coalesce(1)
         .write.mode("append").parquet(feed)
     }
-    val total = nBase * copies
+    val total = nBase * COPIES
 
     def toStreamEvents(df: DataFrame) =
       df.select(col("event_id"), col("ts"), col("user_id"),
@@ -102,7 +103,7 @@ object StreamBench {
       s""""$n":{"sec":${f(sec)},"rows_per_sec":${(total / sec).toLong}}"""
     }.mkString("{", ",", "}")
     val json =
-      s"""{"rows":$total,"batches":$copies,"sf":"$sfDir","ops":$ops}"""
+      s"""{"rows":$total,"batches":$COPIES,"sf":"$sfDir","ops":$ops}"""
     println(json)
     Files.write(Paths.get(outFile), json.getBytes(StandardCharsets.UTF_8))
     spark.stop()

@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   *     share-pinned probe rule.
   *   - `clustered` — a planted mixture of m = ⌈√n⌉ Gaussian centers:
   *     center = xxhash64-pick per vector, v = unit(center_dir +
-  *     σ·noise) with σ from SPARK_GRAFT_CLUSTER_SIGMA (default 0.1 ⇒
+  *     σ·noise) with σ = [[CLUSTER_SIGMA]] = 0.1 (⇒
   *     within-cluster cosine ≈ 1/(1+64σ²) ≈ 0.61 vs ≈0 across
   *     clusters). This is what real embedding corpora look like (IVF
   *     exists BECAUSE embeddings cluster), and it is the corpus on
@@ -53,6 +53,9 @@ import org.apache.spark.sql.functions._
 object SynthData {
 
   private val SEED = 42L
+
+  /** Within-cluster noise scale of the `clustered` embedding arm. */
+  private val CLUSTER_SIGMA = 0.1
 
   /** Deterministic uniform [0,1) from (tag, id). */
   private def u(tag: String, id: Column): Column =
@@ -238,14 +241,12 @@ object SynthData {
     val gauss =
       if (arm == "uniform") gaussArr("eg", col("id"))
       else {
-        val sigma = sys.env
-          .getOrElse("SPARK_GRAFT_CLUSTER_SIGMA", "0.1").toDouble
         val mCenters =
           math.max(4L, math.ceil(math.sqrt(nVecs.toDouble)).toLong)
         val cg = gaussArr("ecg", h("eclu", col("id"), mCenters))
         val cn = sqrt(aggregate(cg, lit(0.0d), (a, x) => a + x * x))
         zip_with(cg, gaussArr("eg", col("id")),
-          (c, x) => c / cn + lit(sigma) * x)
+          (c, x) => c / cn + lit(CLUSTER_SIGMA) * x)
       }
     write(spark.range(nVecs).select(col("id").as("vec_id"),
       gauss.as("g"),

@@ -26,7 +26,7 @@ object Similarity extends QueryPack {
     * from (16 bits; the shared rule clamps resolution to [lo, 16] —
     * [[graft.ops.IndexStore.scaledBitsRow]]). Since round 10 the
     * standing [[graft.ops.IndexStore.lshBuckets]] table stores this
-    * ceiling key too; q248/ServeBench mask it to the count-scaled r
+    * ceiling key too; q248 and ServeOps mask it to the count-scaled r
     * at read (bit j from plane j, so the r=8 floor reproduces the
     * historical 8-plane buckets bit-for-bit).
     */
@@ -426,6 +426,27 @@ object Similarity extends QueryPack {
     * set.
     */
   private def q34LshAnn(s: SparkSession, d: String): DataFrame = {
+    val (bucketed, probes) = q34ProbeSet(s, d)
+    val b = bucketed.select(col("vec_id").as("cid"), col("v").as("cv"),
+      col("nrm").as("cn"), col("bkt").as("bkt2"))
+    val scored = probes
+      .join(b, col("probe") === col("bkt2") && col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), cosCol.as("cos"))
+    TopKOps
+      .topKPerGroup(scored, Seq(col("qid")),
+        Seq(col("cos").desc, col("cid").asc), 1)
+      .select(col("qid"), col("cid"), col("cos"))
+      .orderBy(col("qid"))
+  }
+
+  /** q34's key space and probe set: `bucketed` (vec_id, v, nrm, bkt,
+    * r) keys every vector by the low r of its 16 sign bits, and
+    * `probes` (qid, qv, qn, probe) lists per vector its own bucket plus
+    * the r Hamming-1 flips. The ANN sweep counts q34's candidates from
+    * the same two frames.
+    */
+  private[graft] def q34ProbeSet(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
     val v = vecs(s, d)
     val bucketed = v.select(col("vec_id"), col("v"), col("nrm"),
         VectorOps.lshBucket(col("v"), DIM, 16).as("b16"))
@@ -444,16 +465,7 @@ object Similarity extends QueryPack {
         expr("""CASE WHEN fj = -1 THEN bkt
                 ELSE bkt ^ shiftleft(CAST(1 AS BIGINT), fj) END""")
           .as("probe"))
-    val b = bucketed.select(col("vec_id").as("cid"), col("v").as("cv"),
-      col("nrm").as("cn"), col("bkt").as("bkt2"))
-    val scored = probes
-      .join(b, col("probe") === col("bkt2") && col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), cosCol.as("cos"))
-    TopKOps
-      .topKPerGroup(scored, Seq(col("qid")),
-        Seq(col("cos").desc, col("cid").asc), 1)
-      .select(col("qid"), col("cid"), col("cos"))
-      .orderBy(col("qid"))
+    (bucketed, probes)
   }
 
   /** Shared CTE chain for the bucketed-LSH scored pairs (q34, q38):
@@ -2021,7 +2033,7 @@ object Similarity extends QueryPack {
   // ---- IMI (inverted multi-index) shared machinery ---------------
   // The count-scaled coarse quantizer (q256) and everything composed
   // on top of it (q253 IVFPQ, q255 residual IVFPQ, ServeOps' point
-  // serving, the RecallCurve sweep) share ONE quantizer
+  // serving, the AnnBench curve) share ONE quantizer
   // derivation so the trained artifacts are addressed by a single
   // canonical plan and the DuckDB mirrors replay a single CTE chain.
 
@@ -2451,7 +2463,7 @@ object Similarity extends QueryPack {
   }
 
   /** The q256 serving report at an explicit (k1, nprobe) — the
-    * RecallCurve sweep calls this directly to measure the
+    * AnnBench curve calls this directly to measure the
     * recall-vs-nprobe operating curve the shipped rule is picked
     * from.
     */
@@ -2635,10 +2647,10 @@ object Similarity extends QueryPack {
     * probed cells); only the geometry derivation differs. The recall
     * claim is made PER CORPUS ARM: on the planted-cluster arm the
     * trained router must beat the q259 random-partition control at
-    * equal n_scanned (RecallBench gates it); on the isotropic arm
-    * this sizing honestly reports recall ≈ scanned share — the
-    * documented floor no quantizer can beat there — and q256 remains
-    * the shipped fallback for structureless corpora.
+    * equal n_scanned (the AnnBench recall gate checks it); on the
+    * isotropic arm this sizing honestly reports recall ≈ scanned
+    * share — the documented floor no quantizer can beat there — and
+    * q256 remains the shipped fallback for structureless corpora.
     */
   private def q258ImiSqrt(s: SparkSession, d: String): DataFrame = {
     val (k1, budget) = imiSqrtGeom(s, d)
@@ -2805,7 +2817,7 @@ object Similarity extends QueryPack {
   }
 
   /** The q253 serving report at an explicit (k1, nprobe) — also the
-    * RecallCurve sweep's IVFPQ family.
+    * AnnBench curve's IVFPQ family.
     */
   private[graft] def imiPqReportAt(s: SparkSession, d: String,
       k1: Int, nprobe: Int): DataFrame = {
@@ -2886,7 +2898,7 @@ object Similarity extends QueryPack {
     * makes the residual a per-HALF subtraction, no k1²-row centroid
     * table ever materializes), split into m=8 subspaces. ONE
     * construction path (also used by [[prebuildIndexArtifacts]] and
-    * ServeBench's timed builds) so the residual codebook/code
+    * AnnBench's timed serve builds) so the residual codebook/code
     * artifacts are addressed by a single canonical plan.
     */
   private[graft] def imiResidualSubspaces(s: SparkSession, d: String,
@@ -2912,7 +2924,7 @@ object Similarity extends QueryPack {
   }
 
   /** The q255 serving report at an explicit (k1, nprobe) — also the
-    * RecallCurve sweep's residual-IVFPQ family.
+    * AnnBench curve's residual-IVFPQ family.
     */
   private[graft] def imiResidualReportAt(s: SparkSession, d: String,
       k1: Int, nprobe: Int): DataFrame = {
@@ -2998,7 +3010,7 @@ object Similarity extends QueryPack {
   }
 
   /** The q257 serving report at an explicit (k1, nprobe) — also the
-    * RecallCurve sweep's refined-IVFPQ family.
+    * AnnBench curve's refined-IVFPQ family.
     */
   private[graft] def imiRefineReportAt(s: SparkSession, d: String,
       k1: Int, nprobe: Int): DataFrame =
